@@ -51,6 +51,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -642,22 +643,23 @@ def _write_data_files(df: DataFrame, table: str) -> list[str]:
     """Materialize ``df`` as parquet files under ``data/`` and return
     their TABLE-RELATIVE paths.  Files are written to a staging dir then
     moved (same filesystem, metadata-only) so a failed job never leaves
-    half a commit's files where a snapshot could name them."""
+    half a commit's files where a snapshot could name them.  The staging
+    dir is removed whether the write and the moves succeed or fail."""
     staging = os.path.join(table, f".staging-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
-    data_dir = os.path.join(table, _DATA_DIR)
-    os.makedirs(data_dir, exist_ok=True)
-    rel_paths = []
-    for name in sorted(os.listdir(staging)):
-        if not name.endswith(".parquet"):
-            continue
-        final = f"part-{uuid.uuid4().hex}.parquet"
-        os.rename(os.path.join(staging, name), os.path.join(data_dir, final))
-        rel_paths.append(os.path.join(_DATA_DIR, final))
-    for leftover in os.listdir(staging):
-        os.unlink(os.path.join(staging, leftover))
-    os.rmdir(staging)
-    return rel_paths
+    try:
+        df.write.mode("overwrite").parquet(staging)
+        data_dir = os.path.join(table, _DATA_DIR)
+        os.makedirs(data_dir, exist_ok=True)
+        rel_paths = []
+        for name in sorted(os.listdir(staging)):
+            if not name.endswith(".parquet"):
+                continue
+            final = f"part-{uuid.uuid4().hex}.parquet"
+            os.rename(os.path.join(staging, name), os.path.join(data_dir, final))
+            rel_paths.append(os.path.join(_DATA_DIR, final))
+        return rel_paths
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def append(

@@ -11,7 +11,9 @@ One run = plan → transform → write → record:
    against the target listing (``operators/incremental.py``) — the whole
    date range in ONE join, not a per-item driver loop;
 3. transform = the registered pure DataFrame function for the stage;
-4. write = partitioned layer write + catalog upsert + perfmet job row;
+4. write = partitioned layer write, then the catalog upsert is returned
+   as the post-run catalog state; storing it (``catalog.upsert_table``)
+   and the perfmet job row are the caller's;
    ``simulate`` runs 1–3 and skips every write (storage.py:132-148's
    semantics), ``debug`` targets ``<layer>-test`` paths
    (config_app.py:21-28).
@@ -116,6 +118,13 @@ def run_stage(
     Catalog rows for the target repo are upserted per processed slice
     (S11); ``simulate`` runs planning + transform + count but writes
     nothing; ``debug`` redirects the layer path to ``<layer>-test``.
+
+    The returned ``catalog`` and the plan that it and ``output`` read are
+    checkpoint-backed (``localCheckpoint``): each is computed once and
+    carries no lineage, so a chain of stages plans over a flat catalog
+    instead of re-deriving every earlier stage's upsert.  Their blocks
+    are released when the caller drops the frames (ContextCleaner) and
+    cannot be recomputed after that.
     """
     t0 = time.perf_counter()
     src = cat.query(
@@ -130,36 +139,26 @@ def run_stage(
     )
     plan = incremental_plan(
         src, tgt, force=force, last_run_date=last_run_date
-    )
-    # empty-plan gate: scans until the first row, not the whole plan
-    if plan.isEmpty():
+    ).localCheckpoint()
+    planned = plan.count()
+    if not planned:
         return StageRun(0, 0, time.perf_counter() - t0, simulate, catalog_df)
 
-    # metrics ride the ONE real action as observations (accumulator-backed
-    # CollectMetrics) instead of extra count() jobs — the old written =
-    # out.count() ran the whole transform a second time before the write
-    obs_planned = Observation()
-    obs_written = Observation()
-    out = stage.transform(
-        spark, plan.observe(obs_planned, F.count(F.lit(1)).alias("n"))
-    )
-
+    out = stage.transform(spark, plan)
     if simulate:
-        out.count()  # the only action in simulate mode
+        out.count()
         return StageRun(
-            int(obs_planned.get["n"]),
-            0,
-            time.perf_counter() - t0,
-            simulate,
-            catalog_df,
-            out,
+            planned, 0, time.perf_counter() - t0, simulate, catalog_df, out
         )
 
+    # the written count rides the write as an observation (accumulator-
+    # backed CollectMetrics) — a separate out.count() would run the whole
+    # transform a second time
+    obs_written = Observation()
     out = out.observe(obs_written, F.count(F.lit(1)).alias("n"))
     layer = stage.tgt_repo + ("-test" if debug else "")
     write_layer(out, lake_root, layer, mode="overwrite",
                 partition_cols=stage.partition_cols)
-    planned = int(obs_planned.get["n"])
     written = int(obs_written.get["n"])
 
     new_rows = plan.select(
@@ -170,10 +169,12 @@ def run_stage(
         F.concat(F.lit(f"{lake_root}/{layer}")).alias("pointer"),
         F.col("collection_date"),
         F.col("collection_end"),
-        F.current_timestamp().alias("processing_date"),
+        # a literal, not current_timestamp(): fixed when the stage runs,
+        # not re-stamped by every action on the returned catalog
+        F.lit(datetime.now()).alias("processing_date"),
         F.lit("{}").alias("metadata"),
     )
-    updated_catalog = cat.upsert(catalog_df, new_rows)
+    updated_catalog = cat.upsert(catalog_df, new_rows).localCheckpoint()
     return StageRun(
         planned,
         written,

@@ -48,7 +48,7 @@ def catalog_df(spark):
     return spark.createDataFrame(rows, cat.CATALOG_SCHEMA)
 
 
-def _stage():
+def _stage(src_repo="raw", tgt_repo="standardized"):
     def transform(spark, plan):
         # toy transform: one output row per planned item
         return plan.select(
@@ -58,10 +58,10 @@ def _stage():
         )
 
     return Stage(
-        name="wt_standardize",
+        name=f"wt_{tgt_repo}",
         data_source="wt",
-        src_repo="raw",
-        tgt_repo="standardized",
+        src_repo=src_repo,
+        tgt_repo=tgt_repo,
         transform=transform,
     )
 
@@ -139,3 +139,48 @@ def test_debug_targets_test_layer(spark, catalog_df, tmp_path):
     assert run.written == 3
     assert (tmp_path / "lake" / "standardized-test").exists()
     assert not (tmp_path / "lake" / "standardized").exists()
+
+
+def test_processing_date_fixed_across_actions(spark, catalog_df, tmp_path):
+    """Every action on the returned catalog sees the same stamp — the
+    lazy current_timestamp() re-stamped the rows on each collect."""
+    run = run_stage(spark, _stage(), catalog_df, str(tmp_path / "lake"))
+
+    def stamps():
+        return sorted(
+            (r.collection_date, r.processing_date)
+            for r in run.catalog.filter(F.col("repository") == "standardized")
+            .collect()
+        )
+
+    first = stamps()
+    assert len(first) == 3
+    assert stamps() == first
+
+
+def test_chained_stages_plan_over_a_flat_catalog(spark, catalog_df, tmp_path):
+    """raw -> standardized -> ready -> public: each stage plans the three
+    slices once, a re-run plans nothing, and the catalog handed to the
+    next stage is one checkpointed scan — not the upsert chain of every
+    earlier stage."""
+    lake = str(tmp_path / "lake")
+    catalog = catalog_df
+    plan_lines = []
+    for src, tgt in [("raw", "standardized"), ("standardized", "ready"),
+                     ("ready", "public")]:
+        run = run_stage(spark, _stage(src, tgt), catalog, lake)
+        assert run.planned == 3 and run.written == 3
+        catalog = run.catalog
+        assert run_stage(spark, _stage(src, tgt), catalog, lake).planned == 0
+        plan = catalog._jdf.queryExecution().optimizedPlan().toString()
+        assert "Window" not in plan and "Union" not in plan, plan
+        assert "LogicalRDD" in plan, plan
+        plan_lines.append(len(plan.splitlines()))
+    assert plan_lines == [1, 1, 1], plan_lines
+    assert sorted(
+        (r.repository, r.collection_date.day)
+        for r in catalog.filter(F.col("repository") != "raw").collect()
+    ) == sorted(
+        (repo, d) for repo in ("standardized", "ready", "public")
+        for d in range(1, 4)
+    )

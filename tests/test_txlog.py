@@ -315,6 +315,31 @@ def test_concurrent_bootstrap_conflicts_instead_of_doubling(
     assert len(txlog.read_table(spark, table).collect()) == 1
 
 
+def test_failed_write_leaves_no_staging_dir(spark, table, monkeypatch):
+    """A write that raises mid-job, or a move that fails after it, must
+    not orphan its ``.staging-<uuid>`` dir next to the table."""
+    from pyspark.sql import functions as F
+
+    txlog.append(spark.createDataFrame([(1,)], "k long"), table)
+    boom = spark.range(0, 4, 1, 1).select(
+        F.when(F.col("id") >= 0, F.raise_error(F.lit("injected crash")))
+        .otherwise(F.col("id")).alias("k")
+    )
+    with pytest.raises(Exception, match="injected crash"):
+        txlog.append(boom, table)
+    assert not [n for n in os.listdir(table) if n.startswith(".staging-")]
+
+    def failing_rename(src, dst):
+        raise OSError("injected rename failure")
+
+    monkeypatch.setattr(txlog.os, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected rename failure"):
+        txlog.append(spark.createDataFrame([(2,)], "k long"), table)
+    monkeypatch.undo()
+    assert not [n for n in os.listdir(table) if n.startswith(".staging-")]
+    assert _rows(txlog.read_table(spark, table)) == [(1,)]
+
+
 def test_tracked_caches_scopes_are_thread_local(spark):
     """A persist registered on thread B must not land in thread A's
     scope (r6 advice: process-global _CACHE_SCOPES cross-registered)."""
