@@ -39,3 +39,10 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # integer div truncates toward zero == DuckDB's ns→us truncation
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def read_table_utc(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``read_table`` with the session time zone pinned to UTC: how every
+    registry query reads its input tables (modules import it as ``_t``)."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return read_table(spark, sf_dir, name)

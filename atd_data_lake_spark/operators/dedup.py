@@ -32,6 +32,7 @@ queries (what ``bench.py``, the sweep scripts, and ``plan_report`` do).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterator
 
 import numpy as np
@@ -219,8 +220,11 @@ def shingle_string_rows(
 # (session id, analyzed-plan semanticHash, id_col, text_col, n, with_size)
 # → the persisted shingle frame.  Bounded in practice by the handful of
 # distinct corpus frames a session dedups; entries are cheap (a lazy
-# DataFrame handle), so no eviction.
+# DataFrame handle), so no eviction.  Sessions build frames from
+# several threads at once, so the lookup-and-insert holds
+# _SHINGLE_LOCK: two callers of one frame get one persisted handle.
 _SHINGLE_FRAMES: dict[tuple, DataFrame] = {}
+_SHINGLE_LOCK = threading.Lock()
 
 
 def shingle_hashes(
@@ -266,16 +270,17 @@ def shingle_hashes(
             shingle_hash_rows(df, id_col, text_col, n, with_size=with_size)
         )
     key = (id(spark), plan_key, id_col, text_col, n, with_size)
-    got = _SHINGLE_FRAMES.get(key)
-    if got is not None:
-        if got.storageLevel.useMemory or got.storageLevel.useDisk:
-            return got
-        return _persist(got)  # re-persist after a clearCache
-    out = _persist(
-        shingle_hash_rows(df, id_col, text_col, n, with_size=with_size)
-    )
-    _SHINGLE_FRAMES[key] = out
-    return out
+    with _SHINGLE_LOCK:
+        got = _SHINGLE_FRAMES.get(key)
+        if got is not None:
+            if got.storageLevel.useMemory or got.storageLevel.useDisk:
+                return got
+            return _persist(got)  # re-persist after a clearCache
+        out = _persist(
+            shingle_hash_rows(df, id_col, text_col, n, with_size=with_size)
+        )
+        _SHINGLE_FRAMES[key] = out
+        return out
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Integer-exact PageRank message passing over a node-sized adjacency.
 
-Extracted from the ``graph_pagerank`` registry query (round7_queries)
+Extracted from the ``graph_pagerank`` registry query (graph_queries)
 so the hub-salting variant is a first-class, tested code path rather
 than a docstring recipe.
 
@@ -48,19 +48,21 @@ from pyspark.sql import functions as F
 
 from atd_data_lake_spark.operators.scale import scoped_persist
 
-# Node-row ceiling for the per-round broadcast hints.  An explicit
-# ``F.broadcast`` BYPASSES Spark's size check, so an ungated hint on a
-# node-sized frame is a hard OOM at 10⁸⁺ nodes (realistic for a 100 TB
-# edge set) instead of a graceful shuffle join.  8M rows × ~40 B/row ≈
-# 320 MB broadcast build — near the practical executor/driver ceiling;
-# above it the joins run un-hinted and AQE picks the strategy from
-# runtime stats.  The adjacency row count gating this is already needed
-# to materialize the iteration cache, so the gate costs no extra scan.
+# Row ceiling for every size-gated broadcast hint of the graph family:
+# the per-round node frames here and the node- and edge-sized frames of
+# graph_queries.  An explicit ``F.broadcast`` BYPASSES Spark's size
+# check, so an ungated hint is a hard OOM at 10⁸⁺ rows (realistic for a
+# 100 TB edge set) instead of a graceful shuffle join.  8M rows ×
+# ~40 B/row ≈ 320 MB broadcast build — near the practical
+# executor/driver ceiling; above it the joins run un-hinted and AQE
+# picks the strategy from runtime stats.  The row counts gating this are
+# already needed to materialize the caches, so the gate costs no extra
+# scan.
 BROADCAST_NODE_ROW_LIMIT = 8_000_000
 
 
 def _hinted(df: DataFrame, node_rows: int, limit: int) -> DataFrame:
-    """``F.broadcast(df)`` only while the node frame provably fits."""
+    """``F.broadcast(df)`` only while the frame provably fits."""
     return F.broadcast(df) if node_rows <= limit else df
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from atd_data_lake_spark.functions.datetime_fns import floor_15min_epoch, timebin_15min
+from atd_data_lake_spark.io.reader import read_table_utc as _t
 from atd_data_lake_spark.operators.asof import asof_join
 from atd_data_lake_spark.operators.dedup import (
     exact_dedup,
@@ -47,13 +48,6 @@ from atd_data_lake_spark.operators.windows import (
     latest_per_group,
     trailing_avg,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
 
 
 # All source numerics are 2-decimal doubles.  For hash-exact oracle parity,
@@ -2211,6 +2205,14 @@ from atd_data_lake_spark.round7_queries import (  # noqa: E402
 QUERIES.update(ROUND7_QUERIES)
 ORACLES.update(ROUND7_ORACLES)
 
+from atd_data_lake_spark.graph_queries import (  # noqa: E402
+    GRAPH_ORACLES,
+    GRAPH_QUERIES,
+)
+
+QUERIES.update(GRAPH_QUERIES)
+ORACLES.update(GRAPH_ORACLES)
+
 from atd_data_lake_spark.round8_queries import (  # noqa: E402
     ROUND8_ORACLES,
     ROUND8_QUERIES,
@@ -2330,14 +2332,6 @@ from atd_data_lake_spark.round21_queries import (  # noqa: E402
 
 QUERIES.update(ROUND21_QUERIES)
 ORACLES.update(ROUND21_ORACLES)
-
-from atd_data_lake_spark.round22_queries import (  # noqa: E402
-    ROUND22_ORACLES,
-    ROUND22_QUERIES,
-)
-
-QUERIES.update(ROUND22_QUERIES)
-ORACLES.update(ROUND22_ORACLES)
 
 from atd_data_lake_spark.round23_queries import (  # noqa: E402
     ROUND23_QUERIES,

@@ -1,23 +1,10 @@
-"""Round-13 query additions: graph topology analytics, time-series
-diagnostics, column-profiling, feature hashing, exact higher moments,
-and two rows-only scale ops (perceptual-hash media dedup, product
-quantization).
+"""Round-13 query additions: time-series diagnostics, column-profiling,
+feature hashing, exact higher moments, and two rows-only scale ops
+(perceptual-hash media dedup, product quantization).  The round's graph
+topology queries live in ``graph_queries``.
 
 Oracle-backed (DuckDB value-hash):
 
-- ``graph_triangle_count`` — global triangle census + clustering
-  coefficient of the co-purchase graph via DEGREE-ORIENTED wedge
-  enumeration: every edge is directed from its lower-(degree, id)
-  endpoint to the higher, so per-node out-degree is O(sqrt(m)) on any
-  graph and the wedge self-join is near-linear instead of sum(deg^2) —
-  the classic distributed triangle-count plan, and the difference
-  between ~75M and ~300M intermediate rows on this graph at sf0.1.
-- ``graph_degree_stats`` — degree histogram (degree -> node count) of
-  the same graph: one agg over the edge list, one over nodes.
-- ``graph_common_neighbors`` — common-neighbor / Jaccard link
-  prediction over a deterministic subgraph (parts ≡ 0 mod 4): top-20
-  NON-adjacent pairs by shared-neighbor count.  Wedge enumeration plus
-  an anti-join against the edge set.
 - ``ts_autocorr`` — lag-1 / lag-7 autocorrelation of the daily event
   count per event type, as the Pearson correlation of (c_t, c_{t-k})
   pairs over integer sums: exact until the final divide (the
@@ -66,351 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
-
-
-# Edge-row ceiling for broadcasting an EDGE-sized frame (two longs per
-# row).  8M rows ≈ 320 MB as a built hash relation — the same practical
-# executor/driver ceiling as operators/graph.BROADCAST_NODE_ROW_LIMIT;
-# above it the joins run un-hinted and AQE picks the strategy.
-_BROADCAST_EDGE_ROW_LIMIT = 8_000_000
-
-
-def _copurchase_pairs(
-    spark: SparkSession, sf_dir: str, part_mod: int | None = None
-) -> DataFrame:
-    """Distinct undirected co-purchase edges (a < b) via the basket
-    posexplode x slice pair generator (the graph_pagerank path — one
-    collect_set shuffle, no lineitem self-join).
-
-    ``part_mod=k`` pushes the subgraph gate ``a % k == 0 AND b % k == 0``
-    INTO the lineitem scan (r9): a pair survives the gate iff BOTH
-    endpoints do, and endpoints are lineitem partkeys, so filtering
-    ``l_partkey % k == 0`` before the basket aggregate is exactly
-    equivalent to filtering the generated pairs — but the basket
-    shuffle shrinks k× and the generated pair volume k²× (guide §2.3:
-    shuffle fewer bytes; Catalyst cannot push a filter on exploded
-    array elements through the collect_set itself)."""
-    li = _t(spark, sf_dir, "lineitem")
-    if part_mod is not None:
-        li = li.filter(F.col("l_partkey") % part_mod == 0)
-    baskets = (
-        li
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    return (
-        baskets.select("parts", F.posexplode("parts").alias("_i", "a"))
-        .select(
-            "a",
-            F.explode(F.expr("slice(parts, _i + 2, size(parts))")).alias("b"),
-        )
-        .distinct()
-    )
-
-
-_PAIR_CTE = """
-b AS (
-    SELECT l_orderkey,
-           list_sort(list_distinct(list(l_partkey))) AS parts
-    FROM lineitem GROUP BY l_orderkey
-),
-pairs AS (
-    SELECT DISTINCT t1.a, t2.b
-    FROM b, UNNEST(b.parts) t1(a), UNNEST(b.parts) t2(b)
-    WHERE t1.a < t2.b
-)
-"""
-
-
-# ---------------------------------------------------------------------------
-# graph_triangle_count — degree-oriented global triangle census
-# ---------------------------------------------------------------------------
-
-
-def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row graph census: nodes, edges, wedges, triangles, global
-    clustering coefficient (3*triangles / wedges, round 9).
-
-    Plan shape (the part that must survive 100x): orient every edge
-    from its lower-(deg, id) endpoint, then count per ORIENTED EDGE
-    ``|N+(src) ∩ N+(dst)|`` with the oriented out-adjacency broadcast
-    onto the edge list (r9 rewrite) — the edge-iterator form of the
-    standard degree-oriented triangle plan.  Work is still
-    sum(outdeg·(outdeg + indeg-side probes)) ≈ sum(outdeg²) ≤ O(m^1.5)
-    (arboricity-bounded, identical count: a triangle with (deg, id)
-    order x→y→z is counted exactly once, at edge (x, y), as z ∈
-    N+(x) ∩ N+(y)) — but the Σ outdeg² wedge stream is never
-    MATERIALIZED or joined: the r9 noop decomposition measured the old
-    41M-row wedge generate + closing hash probe at ~2/3 of the query
-    wall; the intersection runs inside whole-stage codegen over
-    edge-sized rows (guide §1.2: fix the distributed algorithm first).
-    The out-adjacency rows are bounded by max OUT-degree, which the
-    (deg, id) orientation caps near sqrt(2m) on skewed graphs — a hub's
-    undirected degree lands on its many low-degree neighbors' lists,
-    not its own row.  Above the broadcast gate the two adjacency joins
-    run un-hinted and AQE picks SMJ — the honest fallback, still
-    edge-sized inputs.
-    """
-    pairs = _copurchase_pairs(spark, sf_dir).persist()
-    # one explicit materialization wave; the count also gates the
-    # closing-side broadcast below (edge-sized frame, OOM-gated like
-    # operators/graph.BROADCAST_NODE_ROW_LIMIT)
-    n_pairs = pairs.count()
-    und = pairs.select(F.col("a").alias("s"), F.col("b").alias("d")).unionAll(
-        pairs.select(F.col("b").alias("s"), F.col("a").alias("d"))
-    )
-    # PERSISTED: deg feeds three consumers (both orientation joins and
-    # the census aggregate).  The r9 shape relied on "identical
-    # broadcast plan → ReusedExchange", but the EXECUTED plan shows the
-    # runtime builds the two BroadcastExchanges as separate query
-    # stages, each re-running the degree aggregate and its exchange
-    # (plans/r10/graph_triangle_count_before.txt operators 57-78) —
-    # node-sized cache, three rebuilds saved (guide §5 multi-consumer
-    # rule, r10).
-    deg = und.groupBy("s").agg(F.count("*").alias("deg")).persist()
-
-    # Size-gated like every forced hint in this family: deg is
-    # node-sized and |nodes| ≤ 2·|pairs|, so the pair count bounds it
-    # (r9 review — an explicit F.broadcast bypasses Spark's own size
-    # check).
-    dg = F.broadcast(deg) if n_pairs <= _BROADCAST_EDGE_ROW_LIMIT else deg
-    ranked = (
-        pairs.join(dg, F.col("a") == F.col("s"))
-        .withColumnRenamed("deg", "dega")
-        .drop("s")
-        .join(dg, F.col("b") == F.col("s"))
-        .withColumnRenamed("deg", "degb")
-        .drop("s")
-    )
-    a_first = (F.col("dega") < F.col("degb")) | (
-        (F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ranked.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-    ).persist()
-
-    # Oriented out-adjacency: node-sized rows, Σ row lengths = |edges|
-    # (oriented edges are distinct by construction — collect_list, no
-    # dedupe needed).  PERSISTED for the same reason as deg above: the
-    # runtime builds the two endpoint broadcasts separately, and
-    # un-cached each rebuild re-ran the collect_list exchange over the
-    # full oriented edge set (r10).
-    adj = (
-        oriented.groupBy("src")
-        .agg(F.collect_list("dst").alias("nbrs"))
-        .select(F.col("src").alias("s"), "nbrs")
-        .persist()
-    )
-    ad = F.broadcast(adj) if n_pairs <= _BROADCAST_EDGE_ROW_LIMIT else adj
-    # Per oriented edge (u, v): |N+(u) ∩ N+(v)| — the wedge stream and
-    # its closing hash probe (Σ outdeg² rows, 41M at sf0.1, measured
-    # ~2/3 of the old wall) never materialize; array_intersect runs in
-    # whole-stage codegen over 1 edge-sized row per edge.  The dst-side
-    # join is inner: an edge whose dst has no out-neighbors closes no
-    # triangle and contributes 0 to the sum either way.
-    tri_edges = (
-        oriented.join(ad, F.col("src") == F.col("s"))
-        .withColumnRenamed("nbrs", "_nu")
-        .drop("s")
-        .join(ad, F.col("dst") == F.col("s"))
-        .withColumnRenamed("nbrs", "_nv")
-        .drop("s")
-    )
-    tri = tri_edges.select(
-        F.size(F.array_intersect("_nu", "_nv")).alias("_c")
-    ).agg(
-        F.coalesce(F.sum("_c"), F.lit(0)).cast("long").alias("n_triangles")
-    )
-
-    census = deg.agg(
-        F.count("*").alias("n_nodes"),
-        F.expr("sum(deg) div 2").alias("n_edges"),
-        F.sum(F.expr("deg * (deg - 1) div 2")).alias("n_wedges"),
-    )
-    return census.crossJoin(F.broadcast(tri)).select(
-        "n_nodes",
-        "n_edges",
-        "n_wedges",
-        "n_triangles",
-        F.round(
-            F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges"), 9
-        ).alias("global_clustering"),
-    )
-
-
-GRAPH_TRIANGLE_COUNT_SQL = f"""
-WITH {_PAIR_CTE},
-und AS (
-    SELECT a AS s, b AS d FROM pairs
-    UNION ALL SELECT b, a FROM pairs
-),
-deg AS (SELECT s, count(*) AS deg FROM und GROUP BY s),
-oriented AS (
-    SELECT CASE WHEN (da.deg, p.a) < (db.deg, p.b) THEN p.a ELSE p.b END AS src,
-           CASE WHEN (da.deg, p.a) < (db.deg, p.b) THEN p.b ELSE p.a END AS dst,
-           CASE WHEN (da.deg, p.a) < (db.deg, p.b) THEN db.deg ELSE da.deg END AS dst_deg
-    FROM pairs p
-    JOIN deg da ON da.s = p.a
-    JOIN deg db ON db.s = p.b
-),
-wedges AS (
-    SELECT e1.dst AS v, e2.dst AS w
-    FROM oriented e1 JOIN oriented e2 ON e1.src = e2.src
-    WHERE (e1.dst_deg, e1.dst) < (e2.dst_deg, e2.dst)
-),
-tri AS (
-    SELECT count(*) AS n_triangles
-    FROM wedges wg JOIN oriented o ON o.src = wg.v AND o.dst = wg.w
-),
-census AS (
-    SELECT count(*) AS n_nodes,
-           CAST(sum(deg) // 2 AS BIGINT) AS n_edges,
-           CAST(sum(deg * (deg - 1) // 2) AS BIGINT) AS n_wedges
-    FROM deg
-)
-SELECT n_nodes, n_edges, n_wedges, n_triangles,
-       round(3.0 * n_triangles / n_wedges, 9) AS global_clustering
-FROM census, tri
-"""
-
-
-# ---------------------------------------------------------------------------
-# graph_degree_stats — degree histogram
-# ---------------------------------------------------------------------------
-
-
-def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree histogram of the co-purchase graph: degree -> node count.
-
-    Two aggs: edges -> per-node degree (map-side combined), degree ->
-    histogram.  The second shuffle moves at most |distinct degrees|
-    rows per partition.
-    """
-    pairs = _copurchase_pairs(spark, sf_dir)
-    und = pairs.select(F.col("a").alias("s")).unionAll(
-        pairs.select(F.col("b").alias("s"))
-    )
-    return (
-        und.groupBy("s")
-        .agg(F.count("*").alias("degree"))
-        .groupBy("degree")
-        .agg(F.count("*").alias("n_nodes"))
-        .orderBy("degree")
-    )
-
-
-GRAPH_DEGREE_STATS_SQL = f"""
-WITH {_PAIR_CTE},
-und AS (SELECT a AS s FROM pairs UNION ALL SELECT b FROM pairs),
-deg AS (SELECT s, count(*) AS degree FROM und GROUP BY s)
-SELECT degree, count(*) AS n_nodes FROM deg GROUP BY degree ORDER BY degree
-"""
-
-
-# ---------------------------------------------------------------------------
-# graph_common_neighbors — link prediction on a deterministic subgraph
-# ---------------------------------------------------------------------------
-
-_CN_MOD = 4
-_CN_TOPK = 20
-
-
-def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 non-adjacent part pairs by common-neighbor count, with
-    the Jaccard link-prediction score, over the (part % 4 == 0)
-    subgraph.
-
-    Wedge enumeration on the subgraph (both wedge endpoints ordered
-    a < b so each candidate pair aggregates once), minus existing edges
-    via left-anti join, ranked (cn DESC, a, b).  The subgraph gate is
-    what bounds wedge volume here — documented sampling, applied
-    identically in the oracle.
-    """
-    # subgraph gate pushed into the lineitem scan (see _copurchase_pairs:
-    # exactly equivalent to filtering the generated pairs, 16× fewer
-    # generated pair rows and a 4× smaller basket shuffle)
-    pairs = _copurchase_pairs(spark, sf_dir, part_mod=_CN_MOD).persist()
-    # materialization wave + the broadcast gate for the wedge join below
-    n_sub = pairs.count()
-    und = pairs.select(F.col("a").alias("s"), F.col("b").alias("d")).unionAll(
-        pairs.select(F.col("b").alias("s"), F.col("a").alias("d"))
-    )
-    # persisted: feeds two broadcast hints (da, db) the runtime builds
-    # as separate stages (r10 executed-plan finding; node-sized cache)
-    deg = und.groupBy("s").agg(F.count("*").alias("deg")).persist()
-    w1 = und.select(F.col("s").alias("mid"), F.col("d").alias("a"))
-    w2 = und.select(F.col("s").alias("mid"), F.col("d").alias("b"))
-    # Broadcast the subgraph-edge side of the wedge self-join (gated —
-    # an explicit hint bypasses Spark's size check): wedge volume is
-    # Σ deg² ≫ |edges|, so a sort-merge join here shuffles + sorts the
-    # WEDGE stream; with the edge side broadcast, wedges generate
-    # map-side and the (a, b) aggregate's partial pass compresses them
-    # before the only remaining exchange (candidate-pair-sized).  Same
-    # recipe as graph_triangle_count's closing join (guide §3.1).
-    if 2 * n_sub <= _BROADCAST_EDGE_ROW_LIMIT:
-        w2 = F.broadcast(w2)
-    cand = (
-        w1.join(w2, "mid")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("common_neighbors"))
-        .join(pairs, ["a", "b"], "left_anti")
-    )
-    # node-sized degree hints, same gate as the wedge side (r9 review:
-    # every forced broadcast in this family is size-gated)
-    da = deg.select(F.col("s").alias("a"), F.col("deg").alias("dega"))
-    db = deg.select(F.col("s").alias("b"), F.col("deg").alias("degb"))
-    if 2 * n_sub <= _BROADCAST_EDGE_ROW_LIMIT:
-        da, db = F.broadcast(da), F.broadcast(db)
-    scored = cand.join(da, "a").join(db, "b")
-    return (
-        scored.select(
-            "a",
-            "b",
-            "common_neighbors",
-            F.round(
-                F.col("common_neighbors")
-                / (F.col("dega") + F.col("degb") - F.col("common_neighbors")),
-                9,
-            ).alias("jaccard"),
-        )
-        .orderBy(F.desc("common_neighbors"), "a", "b")
-        .limit(_CN_TOPK)
-    )
-
-
-GRAPH_COMMON_NEIGHBORS_SQL = f"""
-WITH {_PAIR_CTE},
-sub AS (SELECT a, b FROM pairs WHERE a % {_CN_MOD} = 0 AND b % {_CN_MOD} = 0),
-und AS (SELECT a AS s, b AS d FROM sub UNION ALL SELECT b, a FROM sub),
-deg AS (SELECT s, count(*) AS deg FROM und GROUP BY s),
-cand AS (
-    SELECT w1.d AS a, w2.d AS b, count(*) AS common_neighbors
-    FROM und w1 JOIN und w2 ON w1.s = w2.s
-    WHERE w1.d < w2.d
-    GROUP BY 1, 2
-),
-nonadj AS (
-    SELECT c.* FROM cand c
-    ANTI JOIN sub e ON e.a = c.a AND e.b = c.b
-)
-SELECT n.a, n.b, n.common_neighbors,
-       round(n.common_neighbors
-             / CAST(da.deg + db.deg - n.common_neighbors AS DOUBLE), 9)
-         AS jaccard
-FROM nonadj n
-JOIN deg da ON da.s = n.a
-JOIN deg db ON db.s = n.b
-ORDER BY n.common_neighbors DESC, n.a, n.b
-LIMIT {_CN_TOPK}
-"""
+from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
 # ---------------------------------------------------------------------------
@@ -1244,9 +887,6 @@ EMB_PQ_CODES_SQL = _emb_pq_codes_sql()
 # ---------------------------------------------------------------------------
 
 ROUND13_QUERIES = {
-    "graph_triangle_count": graph_triangle_count,
-    "graph_degree_stats": graph_degree_stats,
-    "graph_common_neighbors": graph_common_neighbors,
     "ts_autocorr": ts_autocorr,
     "evt_hourly_seasonality": evt_hourly_seasonality,
     "evt_burstiness": evt_burstiness,
@@ -1258,9 +898,6 @@ ROUND13_QUERIES = {
 }
 
 ROUND13_ORACLES = {
-    "graph_triangle_count": GRAPH_TRIANGLE_COUNT_SQL,
-    "graph_degree_stats": GRAPH_DEGREE_STATS_SQL,
-    "graph_common_neighbors": GRAPH_COMMON_NEIGHBORS_SQL,
     "ts_autocorr": TS_AUTOCORR_SQL,
     "evt_hourly_seasonality": EVT_HOURLY_SEASONALITY_SQL,
     "evt_burstiness": EVT_BURSTINESS_SQL,

@@ -28,12 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
+from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
 # ---------------------------------------------------------------------------

@@ -23,16 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.io.reader import read_table_utc as _t
+
 _FRAME_MS = 1000  # sampling cadence
 _SCENE_MS = 5000  # synthetic scene block length (stub decode)
 _CUT_THRESHOLD = 20000  # |Δluma| above this = cut
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
 
 
 def mm_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,18 +1,5 @@
-"""Round-24 query additions: triangle census and BM25 retrieval.
-
-``graph_triangles`` — per-node triangle count and local clustering
-coefficient over the co-purchase graph: the per-node drill-down of
-round 13's one-row global census (``graph_triangle_count``), which
-reports corpus-level totals but cannot say WHICH nodes sit in dense
-neighborhoods.  The classic skew trap in
-distributed triangle counting is wedge enumeration at hub nodes
-(wedges ∝ degree²); the standard fix (Suri & Vassilvitskii's MR
-node-iterator++) is to orient every edge from its lower-(degree, id)
-endpoint to its higher one, which caps every node's out-degree at
-O(sqrt(|E|)) and makes the wedge count sum(outdeg²) instead of
-sum(deg²).  Each triangle is enumerated exactly once under ANY
-orientation, so the DuckDB oracle can use plain id-ordering while the
-Spark plan degree-orients — identical output, skew-safe plan.
+"""Round-24 query addition: BM25 retrieval (``graph_triangles`` lives
+in ``graph_queries``).
 
 ``text_bm25_topk`` — Okapi BM25 (k1=1.2, b=0.75) retrieval of the
 top-10 documents for a fixed conjunctive keyword query.  The ranked
@@ -28,157 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.io.reader import read_table_utc as _t
+
 _BM25_K1 = 1.2
 _BM25_B = 0.75
 _BM25_TERMS = ("spark", "merge", "window")
 _BM25_TOPK = 10
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
-
-
-def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(node, degree, triangles, clustering) for every node with
-    degree >= 2, ordered by node.
-
-    Shuffle shape: degree agg (1 shuffle on node), rank join onto the
-    edge list (node-keyed), one self-join on the wedge apex, one
-    equi-join to close the wedge, explode-3 + count.  Every join is a
-    key equi-join on node ids — no row ever carries a neighbor list,
-    so nothing grows with degree; the (deg, id) orientation bounds the
-    apex fan-out at hubs.
-    """
-    from atd_data_lake_spark.round13_queries import _copurchase_pairs
-
-    pairs = _copurchase_pairs(spark, sf_dir)  # (a, b), a < b, distinct
-
-    deg = (
-        pairs.select(F.col("a").alias("node"))
-        .unionAll(pairs.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
-
-    # orient each edge from lower (degree, id) to higher: src -> dst,
-    # carrying the dst rank for the wedge ordering below
-    e = (
-        pairs.join(deg.select(F.col("node").alias("a"), F.col("degree").alias("da")), "a")
-        .join(deg.select(F.col("node").alias("b"), F.col("degree").alias("db")), "b")
-        .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                F.struct(
-                    F.col("a").alias("src"),
-                    F.col("b").alias("dst"),
-                    F.struct(F.col("db").alias("d"), F.col("b").alias("n")).alias("rdst"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.col("b").alias("src"),
-                    F.col("a").alias("dst"),
-                    F.struct(F.col("da").alias("d"), F.col("a").alias("n")).alias("rdst"),
-                )
-            )
-            .alias("o")
-        )
-        .select("o.src", "o.dst", "o.rdst")
-        # no persist: the three consumers re-derive the frame through
-        # AQE-reused shuffles (free disk reuse) instead of pinning an
-        # edge-sized deserialized block in executor memory — the
-        # difference between finishing and GC-thrashing in a small heap
-    )
-
-    # wedges at apex u: out-neighbors v < w in rank order; close with
-    # the oriented edge (v, w).  Both joins carry EDGE-sized (and at the
-    # apex, wedge-sized) streams, so they are hinted to sort-merge:
-    # Catalyst's size estimate through the basket posexplode is garbage
-    # (it priced the oriented edge frame under the broadcast threshold
-    # and planned THREE edge-sized broadcast builds — which OOMs a
-    # default 1 GB driver at sf0.1 and would be catastrophic at scale;
-    # SMJ spills gracefully at any size)
-    e1 = e.select(F.col("src").alias("u"), F.col("dst").alias("v"), F.col("rdst").alias("rv"))
-    e2 = e.select(F.col("src").alias("u"), F.col("dst").alias("w"), F.col("rdst").alias("rw"))
-    wedges = (
-        e1.join(e2.hint("merge"), "u")
-        .filter(F.col("rv") < F.col("rw"))
-        .select("u", "v", "w")
-    )
-    tri = wedges.join(
-        e.select(F.col("src").alias("v"), F.col("dst").alias("w")).hint("merge"),
-        ["v", "w"],
-    ).select("u", "v", "w")
-
-    tcnt = (
-        tri.select(F.col("u").alias("node"))
-        .unionAll(tri.select(F.col("v").alias("node")))
-        .unionAll(tri.select(F.col("w").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("triangles"))
-    )
-
-    return (
-        deg.filter(F.col("degree") >= 2)
-        .join(tcnt, "node", "left")
-        .select(
-            "node",
-            "degree",
-            F.coalesce("triangles", F.lit(0)).alias("triangles"),
-            F.round(
-                F.lit(2.0)
-                * F.coalesce("triangles", F.lit(0))
-                / (F.col("degree") * (F.col("degree") - F.lit(1))),
-                6,
-            ).alias("clustering"),
-        )
-        .orderBy("node")
-    )
-
-
-GRAPH_TRIANGLES_SQL = """
-WITH b AS (
-    SELECT l_orderkey,
-           list_sort(list_distinct(list(l_partkey))) AS parts
-    FROM lineitem GROUP BY l_orderkey
-),
-pairs AS (
-    SELECT DISTINCT t1.a, t2.b
-    FROM b, UNNEST(b.parts) t1(a), UNNEST(b.parts) t2(b)
-    WHERE t1.a < t2.b
-),
-deg AS (
-    SELECT node, count(*) AS degree
-    FROM (SELECT a AS node FROM pairs UNION ALL SELECT b FROM pairs)
-    GROUP BY node
-),
-tri AS (
-    -- id-orientation enumerates the same triangle set as the engine's
-    -- degree-orientation: each (u < v < w) exactly once
-    SELECT e1.a AS u, e1.b AS v, e2.b AS w
-    FROM pairs e1
-    JOIN pairs e2 ON e2.a = e1.b
-    JOIN pairs e3 ON e3.a = e1.a AND e3.b = e2.b
-),
-tcnt AS (
-    SELECT node, count(*) AS triangles
-    FROM (SELECT u AS node FROM tri
-          UNION ALL SELECT v FROM tri
-          UNION ALL SELECT w FROM tri)
-    GROUP BY node
-)
-SELECT d.node, d.degree,
-       COALESCE(t.triangles, 0) AS triangles,
-       round(2.0 * COALESCE(t.triangles, 0)
-             / (d.degree * (d.degree - 1)), 6) AS clustering
-FROM deg d LEFT JOIN tcnt t USING (node)
-WHERE d.degree >= 2
-ORDER BY d.node
-"""
 
 
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -301,10 +143,8 @@ ORDER BY rank
 
 
 ROUND24_QUERIES = {
-    "graph_triangles": graph_triangles,
     "text_bm25_topk": text_bm25_topk,
 }
 ROUND24_ORACLES = {
-    "graph_triangles": GRAPH_TRIANGLES_SQL,
     "text_bm25_topk": _bm25_sql(),
 }

@@ -1,4 +1,5 @@
-"""Round-30 query additions — curation-gate + community-detection batch.
+"""Round-30 query additions — curation gates (``graph_label_prop``
+lives in ``graph_queries``).
 
 - ``cur_perplexity_buckets`` — CCNet's defining step: score every doc
   under a corpus LM (the registry's unigram proxy), then split each
@@ -7,11 +8,7 @@
 - ``cur_gopher_rules`` — Gopher/Dolma-style rule-table quality gate:
   word-count bounds, mean word length, stopword presence, single-word
   dominance — per-rule observables plus the conjunctive keep verdict.
-- ``graph_label_prop`` — deterministic min-label propagation (3
-  synchronous rounds) over the co-purchase graph: the bounded-round
-  community sketch; min() makes every round order-free and hash-exact.
-
-All three carry full DuckDB oracles.
+Both carry full DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -19,12 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
+from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
 # ---------------------------------------------------------------------------
@@ -169,95 +161,15 @@ FROM agg
 
 
 # ---------------------------------------------------------------------------
-# graph_label_prop
-# ---------------------------------------------------------------------------
-
-_LP_ROUNDS = 3
-
-
-def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-round deterministic min-label propagation over the co-purchase
-    graph (same edge builder as ``graph_pagerank``: basket
-    posexplode×slice pair stream, no pre-distinct — the adjacency's
-    map-side collect_set dedupes).  Output (part, community); see
-    ``operators/graph.label_propagate`` for the one-edge-shuffle
-    iteration argument."""
-    from atd_data_lake_spark.operators.graph import label_propagate
-
-    baskets = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    pairs = baskets.select(
-        "parts", F.posexplode("parts").alias("_i", "pa")
-    ).select(
-        "pa",
-        F.explode(F.expr("slice(parts, _i + 2, size(parts))")).alias("pb"),
-    )
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-    # edges is pairs ∪ reversed(pairs) — symmetric by construction, so
-    # the label frame reads straight off the adjacency cache keys and
-    # the src-only union disappears from every round (guide §1.2)
-    out = label_propagate(edges, n_rounds=_LP_ROUNDS, symmetric_edges=True)
-    return out.select(F.col("node").alias("part"), F.col("label").alias("community"))
-
-
-def _label_prop_sql() -> str:
-    prelude = """
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-pairs AS (
-    SELECT a.l_partkey AS pa, b.l_partkey AS pb
-    FROM li a JOIN li b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-),
-edges AS (
-    SELECT pa AS src, pb AS dst FROM pairs
-    UNION ALL SELECT pb AS src, pa AS dst FROM pairs
-),
-l0 AS (
-    SELECT node, node AS label FROM (
-        SELECT src AS node FROM edges UNION SELECT dst FROM edges
-    )
-)"""
-    its = []
-    for k in range(1, _LP_ROUNDS + 1):
-        its.append(f""",
-l{k} AS (
-    SELECT p.node,
-           least(p.label, coalesce(min(nl.label), p.label)) AS label
-    FROM l{k - 1} p
-    LEFT JOIN edges e ON e.dst = p.node
-    LEFT JOIN l{k - 1} nl ON nl.node = e.src
-    GROUP BY p.node, p.label
-)""")
-    return (
-        prelude
-        + "".join(its)
-        + f"""
-SELECT node AS part, label AS community FROM l{_LP_ROUNDS}
-"""
-    )
-
-
-GRAPH_LABEL_PROP_SQL = _label_prop_sql()
-
-
-# ---------------------------------------------------------------------------
 # registration
 # ---------------------------------------------------------------------------
 
 ROUND30_QUERIES = {
     "cur_perplexity_buckets": cur_perplexity_buckets,
     "cur_gopher_rules": cur_gopher_rules,
-    "graph_label_prop": graph_label_prop,
 }
 
 ROUND30_ORACLES = {
     "cur_perplexity_buckets": _perplexity_buckets_sql(),
     "cur_gopher_rules": CUR_GOPHER_RULES_SQL,
-    "graph_label_prop": GRAPH_LABEL_PROP_SQL,
 }

@@ -22,12 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
+from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
 # ---------------------------------------------------------------------------
@@ -63,8 +58,10 @@ def mb_item_cf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole pair generation per direction), the per-part margins
     aggregate their own singleton slice directly instead of filtering a
     3-way sentinel union (whose executed plan re-evaluated every branch
-    per consumer), and the catalog-sized margin frame is persisted
-    because the runtime builds the two margin broadcasts separately.
+    per consumer).  The catalog-sized margin frame is NOT persisted:
+    a cache would rebuild the basket exchange in its own sub-execution,
+    so the two margin broadcasts (built separately by the runtime) each
+    re-run the cheap reduce-side margin slice instead.
     """
     from atd_data_lake_spark.round4_queries import basket_count_slices
 

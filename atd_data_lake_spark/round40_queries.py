@@ -1,18 +1,13 @@
-"""Round-40 query additions — personalized PageRank and per-document
-keyword extraction.
+"""Round-40 query addition — per-document keyword extraction
+(``graph_ppr`` lives in ``graph_queries``).
 
-- ``graph_ppr`` — 5-round integer-exact PERSONALIZED PageRank over the
-  co-purchase graph: teleport and initial mass restricted to a seed
-  set (every 97th part), so masses rank parts by relevance TO the
-  seeds — the recommendation / related-items form of PageRank
-  (``operators/graph.ppr_masses``).
 - ``text_doc_keywords`` — per-DOCUMENT top-3 TF-IDF keywords (the
   corpus-level ``text_tfidf_top_terms`` re-aimed at each doc): the
   keyword-extraction primitive behind tagging / routing / search
   indexing.  IDF is 9-dp-rounded before the per-term product so scores
   are engine-exact; rank window ties break on the term string.
 
-Both carry full DuckDB oracles.
+It carries a full DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -20,124 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
-
-
-# ---------------------------------------------------------------------------
-# graph_ppr
-# ---------------------------------------------------------------------------
-
-_PPR_ITER = 5
-_PPR_TOPK = 100
-_PPR_MASS = 1_000_000_000_000
-_PPR_SEED_MOD = 97
-
-
-def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-100 parts by personalized PageRank from the part%97==0 seeds.
-
-    100 TB shape: identical to ``graph_pagerank`` (one receiver-keyed
-    adjacency build, broadcast-gated node frames, zero driver actions in
-    the loop) plus one node-sized base join per round — see
-    ``operators/graph.ppr_masses``.
-    """
-    from atd_data_lake_spark.operators.graph import ppr_masses
-
-    baskets = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    # r10: NO pairs persist — the seed set is now a PREDICATE over the
-    # adjacency cache keys (``seed_pred``; symmetric graph ⇒ seeds from
-    # edges.src ≡ nodes.filter(pred)), so the pair stream has exactly
-    # one consumer (the adjacency groupBy) and caching it was a pure
-    # edge-sized materialization cost (guide §5's multi-consumer rule)
-    pairs = baskets.select(
-        "parts", F.posexplode("parts").alias("_i", "pa")
-    ).select(
-        "pa",
-        F.explode(F.expr("slice(parts, _i + 2, size(parts))")).alias("pb"),
-    )
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-    ranks = ppr_masses(
-        edges,
-        None,
-        n_iter=_PPR_ITER,
-        total_mass=_PPR_MASS,
-        dedupe_edges=True,
-        # edges is pairs ∪ reversed(pairs) — symmetric by construction
-        # (one-exchange receiver-keyed build, see ppr_masses)
-        symmetric_edges=True,
-        seed_pred=lambda c: (c % _PPR_SEED_MOD) == 0,
-    )
-    return (
-        ranks.select(F.col("node").alias("part"), "mass")
-        .orderBy(F.desc("mass"), "part")
-        .limit(_PPR_TOPK)
-    )
-
-
-def _ppr_sql() -> str:
-    prelude = f"""
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-pairs AS (
-    SELECT a.l_partkey AS pa, b.l_partkey AS pb
-    FROM li a JOIN li b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-),
-edges AS (
-    SELECT pa AS src, pb AS dst FROM pairs
-    UNION ALL SELECT pb AS src, pa AS dst FROM pairs
-),
-deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY 1),
-seeds AS (SELECT src FROM deg WHERE src % {_PPR_SEED_MOD} = 0),
-sn AS (SELECT CAST(count(*) AS BIGINT) AS s_n FROM seeds),
-base AS (
-    SELECT n.node,
-           CASE WHEN s.src IS NOT NULL
-                THEN CAST((15 * {_PPR_MASS}) // (100 * sn.s_n) AS BIGINT)
-                ELSE 0 END AS b,
-           CASE WHEN s.src IS NOT NULL
-                THEN CAST({_PPR_MASS} // sn.s_n AS BIGINT)
-                ELSE 0 END AS init
-    FROM (SELECT src AS node FROM edges
-          UNION SELECT dst FROM edges) n
-    LEFT JOIN seeds s ON s.src = n.node, sn
-),
-r0 AS (SELECT node, init AS mass FROM base)"""
-    its = []
-    for k in range(1, _PPR_ITER + 1):
-        its.append(f""",
-r{k} AS (
-    SELECT b.node, CAST(b.b + coalesce(c._in, 0) AS BIGINT) AS mass
-    FROM base b LEFT JOIN (
-        SELECT e.dst, sum((85 * r.mass) // (100 * e.deg)) AS _in
-        FROM (SELECT e0.src, e0.dst, d.deg
-              FROM edges e0 JOIN deg d ON e0.src = d.src) e
-        JOIN r{k - 1} r ON e.src = r.node
-        GROUP BY e.dst
-    ) c ON b.node = c.dst
-)""")
-    return (
-        prelude
-        + "".join(its)
-        + f"""
-SELECT node AS part, mass FROM r{_PPR_ITER}
-ORDER BY mass DESC, part LIMIT {_PPR_TOPK}
-"""
-    )
-
-
-GRAPH_PPR_SQL = _ppr_sql()
+from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
 # ---------------------------------------------------------------------------
@@ -214,11 +92,9 @@ ORDER BY doc_id, rank
 
 
 ROUND40_QUERIES = {
-    "graph_ppr": graph_ppr,
     "text_doc_keywords": text_doc_keywords,
 }
 
 ROUND40_ORACLES = {
-    "graph_ppr": GRAPH_PPR_SQL,
     "text_doc_keywords": TEXT_DOC_KEYWORDS_SQL,
 }

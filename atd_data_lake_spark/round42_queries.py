@@ -45,18 +45,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from atd_data_lake_spark.io.reader import read_table_utc as _t
 from atd_data_lake_spark.operators.sketches import (
     bloom_bitmap,
     cms_counters,
     cms_estimate,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------

@@ -35,16 +35,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from atd_data_lake_spark.io.reader import read_table_utc as _t
+
 _LR_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "on", "for")
 _LR_ITERS = 3
 _LR_CAP = 256  # length-feature cap, tokens
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
 
 
 def _features(spark: SparkSession, sf_dir: str) -> DataFrame:

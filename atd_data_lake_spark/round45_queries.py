@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.io.reader import read_table_utc as _t
 from atd_data_lake_spark.operators.sketches import cms_positions_sql
 
 _SCM_W = 1024
@@ -37,13 +38,6 @@ _SCM_D = 4
 _SCM_WINDOW = "60 minutes"
 _SCM_DELAY = "30 minutes"
 _SCM_WATCH = 20  # watchlist: user_id < 20
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
 
 
 def evt_stream_countmin_executed(

@@ -34,12 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
+from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
 # ---------------------------------------------------------------------------
@@ -1154,122 +1149,6 @@ ORDER BY cohort_week, weeks_since
 
 
 # ---------------------------------------------------------------------------
-# graph_adamic_adar — Adamic-Adar link prediction on the copurchase graph
-# ---------------------------------------------------------------------------
-
-_AA_MOD = 4
-_AA_TOPK = 20
-
-
-def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 non-adjacent part pairs by ADAMIC-ADAR score
-    AA(a,b) = Σ_{z ∈ Γ(a)∩Γ(b)} 1/ln(deg z) — the link-prediction
-    measure that down-weights promiscuous hubs, one rung above
-    ``graph_common_neighbors``' raw count/Jaccard.  Same (part % 4)
-    subgraph gate and wedge enumeration; every common neighbor has
-    deg ≥ 2 by construction, so ln(deg) > 0 always.
-
-    Engine-exactness: each wedge's 1/ln(deg_mid) term is rounded to
-    9 dp and DECIMAL-summed per pair (order-independent), final score
-    rounded to 6 dp; ties broken by (a, b).
-
-    100 TB shape: degree attaches to the wedge midpoints BEFORE the
-    wedge self-join (one broadcast onto the edge list), so the pair
-    aggregate is one map-side-combined groupBy over wedge rows —
-    identical shuffle volume to the common-neighbors count."""
-    from atd_data_lake_spark.round13_queries import _copurchase_pairs
-
-    from atd_data_lake_spark.round13_queries import _BROADCAST_EDGE_ROW_LIMIT
-
-    # subgraph gate pushed into the lineitem scan (see _copurchase_pairs:
-    # exactly equivalent to filtering the generated pairs, 16× fewer
-    # generated pair rows and a 4× smaller basket shuffle)
-    pairs = _copurchase_pairs(spark, sf_dir, part_mod=_AA_MOD).persist()
-    # materialization wave + the broadcast gate for the wedge join below
-    n_sub = pairs.count()
-    und = pairs.select(F.col("a").alias("s"), F.col("b").alias("d")).unionAll(
-        pairs.select(F.col("b").alias("s"), F.col("a").alias("d"))
-    )
-    deg = und.groupBy("s").agg(F.count("*").alias("deg"))
-    # node-sized degree hint, same gate as the wedge side (r9 review)
-    if 2 * n_sub > _BROADCAST_EDGE_ROW_LIMIT:
-        undd_join = und.join(deg, "s")
-    else:
-        undd_join = und.join(F.broadcast(deg), "s")
-    # persisted: undd feeds the probe stream AND the broadcast wedge
-    # side, which the runtime builds as a separate stage that would
-    # re-run the deg join (r10 executed-plan finding; subgraph-sized)
-    undd = undd_join.select(
-        "s",
-        "d",
-        F.round(F.lit(1.0) / F.log(F.col("deg").cast("double")), 9)
-        .cast("decimal(20,9)")
-        .alias("w"),
-    ).persist()
-    w1 = undd.select(F.col("s").alias("mid"), F.col("d").alias("a"), "w")
-    w2 = undd.select(F.col("s").alias("mid"), F.col("d").alias("b"))
-    # broadcast the edge-sized wedge side (size-gated) so the Σ deg²
-    # wedge stream never shuffles — the graph_common_neighbors /
-    # graph_triangle_count recipe (guide §3.1)
-    if 2 * n_sub <= _BROADCAST_EDGE_ROW_LIMIT:
-        w2 = F.broadcast(w2)
-    cand = (
-        w1.join(w2, "mid")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(
-            F.count("*").cast("long").alias("common_neighbors"),
-            F.sum("w").alias("_aa"),
-        )
-        .join(pairs, ["a", "b"], "left_anti")
-    )
-    return (
-        cand.select(
-            "a",
-            "b",
-            "common_neighbors",
-            F.round(F.col("_aa").cast("double"), 6).alias("aa_score"),
-        )
-        .orderBy(F.col("aa_score").desc(), "a", "b")
-        .limit(_AA_TOPK)
-    )
-
-
-def _graph_adamic_adar_sql() -> str:
-    from atd_data_lake_spark.round13_queries import _PAIR_CTE
-
-    return f"""
-WITH {_PAIR_CTE},
-sub AS (SELECT a, b FROM pairs WHERE a % {_AA_MOD} = 0 AND b % {_AA_MOD} = 0),
-und AS (SELECT a AS s, b AS d FROM sub UNION ALL SELECT b, a FROM sub),
-deg AS (SELECT s, count(*) AS deg FROM und GROUP BY s),
-undd AS (
-    SELECT und.s, und.d,
-           CAST(round(1.0 / ln(CAST(deg.deg AS DOUBLE)), 9)
-                AS DECIMAL(20,9)) AS w
-    FROM und JOIN deg USING (s)
-),
-cand AS (
-    SELECT w1.d AS a, w2.d AS b,
-           count(*) AS common_neighbors,
-           sum(w1.w) AS aa
-    FROM undd w1 JOIN undd w2 ON w1.s = w2.s
-    WHERE w1.d < w2.d
-    GROUP BY 1, 2
-),
-nonadj AS (
-    SELECT c.* FROM cand c
-    ANTI JOIN sub e ON e.a = c.a AND e.b = c.b
-)
-SELECT a, b, CAST(common_neighbors AS BIGINT) AS common_neighbors,
-       round(CAST(aa AS DOUBLE), 6) AS aa_score
-FROM nonadj
-ORDER BY aa_score DESC, a, b
-LIMIT {_AA_TOPK}
-"""
-
-
-# ---------------------------------------------------------------------------
 # text_ttr_deciles — type-token-ratio by document-length decile
 # ---------------------------------------------------------------------------
 
@@ -1446,10 +1325,11 @@ def mb_affinity_npmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         / -F.log(p_ab),
         6,
     )
-    # both margin joins broadcast the persisted catalog-sized margin
-    # frame (the runtime builds the two BroadcastExchanges separately —
-    # executed-plan finding r10 — so the cache, not broadcast reuse, is
-    # what keeps the margin slice from recomputing)
+    # both margin joins broadcast the catalog-sized margin frame.  The
+    # runtime builds the two BroadcastExchanges separately (executed-plan
+    # finding r10) and the frame is NOT persisted (see
+    # basket_count_slices), so each build re-runs the reduce-side margin
+    # slice over the shared basket exchange
     pn = F.broadcast(part_n)
     return (
         pair_n.join(pn, F.col("a") == F.col("pk"))
@@ -1514,7 +1394,6 @@ ROUND46_QUERIES = {
     "sim_maxdot_topk": sim_maxdot_topk,
     "evt_funnel_conversion": evt_funnel_conversion,
     "evt_retention_cohorts": evt_retention_cohorts,
-    "graph_adamic_adar": graph_adamic_adar,
     "text_ttr_deciles": text_ttr_deciles,
     "evt_pivot_monthly": evt_pivot_monthly,
     "mb_affinity_npmi": mb_affinity_npmi,
@@ -1534,7 +1413,6 @@ def round46_oracles() -> dict[str, str]:
         "sim_maxdot_topk": SIM_MAXDOT_SQL,
         "evt_funnel_conversion": EVT_FUNNEL_SQL,
         "evt_retention_cohorts": EVT_RETENTION_SQL,
-        "graph_adamic_adar": _graph_adamic_adar_sql(),
         "text_ttr_deciles": TEXT_TTR_DECILES_SQL,
         "evt_pivot_monthly": EVT_PIVOT_MONTHLY_SQL,
         "mb_affinity_npmi": MB_AFFINITY_NPMI_SQL,

@@ -41,14 +41,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.io.reader import read_table_utc as _t
+
 D2 = "decimal(12,2)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
 
 
 def _revenue() -> F.Column:
@@ -1064,8 +1059,9 @@ def mb_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     free, on disk, without pinning a multi-TB intermediate in executor
     memory at 100 TB.  The r9→r10 slice rewrite is documented on
     ``basket_count_slices`` (each consumer now computes only ITS slice
-    instead of re-evaluating all three union branches; the only cache
-    is the catalog-sized per-part margin frame, double-broadcast).
+    instead of re-evaluating all three union branches; the catalog-sized
+    per-part margin frame is double-broadcast and deliberately NOT
+    persisted, so this query holds no cache).
     Lift is one IEEE division of exact bigint counts (identical both
     engines): lift = n_pair · n_orders / (n_a · n_b)."""
     pair_counts, per_part_n, n_orders_1 = basket_count_slices(spark, sf_dir)

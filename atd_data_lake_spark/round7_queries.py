@@ -1,14 +1,6 @@
-"""Round-7 query additions: iterative graph analytics + CDC snapshot diff.
+"""Round-7 query addition: CDC snapshot diff (``graph_pagerank`` lives
+in ``graph_queries``).
 
-- ``graph_pagerank`` — 5 power-iteration rounds of PageRank over the
-  co-purchase part graph, in INTEGER-EXACT arithmetic: rank is a bigint
-  "mass" (10¹² units split across nodes) and every transfer is an
-  integer division, so the result is bit-identical regardless of
-  partitioning, accumulation order, or engine — the same discipline as
-  the exact-cents stddev (a1) and exact-sum correlation
-  (evt_value_correlation).  This gives an ITERATIVE algorithm — the
-  class the driver normally can only rows-check — a full value-hash
-  DuckDB oracle (5 unrolled CTE iterations).
 - ``dq_snapshot_diff`` — per-key CDC changelog between two table
   snapshots: added / removed / changed rows via one full-outer join on
   the primary key.  The ops complement of ``dq_schema_drift`` (which
@@ -16,8 +8,8 @@
   incremental-publish pipeline audits before a merge (reference analog:
   the catalog-diff that drives the incremental anti-join J1).
 
-Every query has a DuckDB oracle; every computed column is aliased
-identically on both sides.
+It has a DuckDB oracle; every computed column is aliased identically
+on both sides.
 """
 
 from __future__ import annotations
@@ -25,142 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from atd_data_lake_spark.io.reader import read_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_table(spark, sf_dir, name)
-
-
-# ---------------------------------------------------------------------------
-# graph_pagerank — integer-exact power iteration over the co-purchase graph
-# ---------------------------------------------------------------------------
-
-_PR_ITER = 5
-_PR_TOPK = 100
-_PR_MASS = 1_000_000_000_000  # 10^12 rank units of total mass
-
-
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-100 parts by 5-iteration PageRank over the co-purchase graph.
-
-    Graph: undirected co-purchase edges (two parts sharing an order),
-    oriented both ways.  Rank is bigint mass: node starts with
-    ``10¹² div N``; each round a node keeps the teleport share
-    ``15·10¹² div (100·N)`` and receives ``85·mass div (100·deg)`` from
-    each in-neighbor.  Integer division drops sub-unit remainders on
-    both engines identically (all operands positive), so five rounds of
-    joins are hash-exact — no float accumulation anywhere.
-
-    Scale shape: the graph materializes once as a RECEIVER-keyed
-    adjacency ``(dst, ins array<struct<src, deg>>)`` — one groupBy(dst)
-    shuffle, with each in-neighbor's total out-degree riding in the
-    struct.  That orientation makes the ITERATIONS shuffle-free: the
-    cached adjacency is dst-partitioned, and explode + the broadcast
-    rank join preserve that partitioning, so each round's groupBy(dst)
-    plans partial+final HashAggregate with NO Exchange between them
-    (verified: the executed 5-round plan holds exactly ONE
-    ``hashpartitioning(dst)`` exchange — the build).  Five rounds over
-    a 100 TB edge set shuffle the edge stream once, not once per round
-    (the earlier src-keyed adjacency paid an edge-sized contribution
-    shuffle every round; the swap measured bit-identical and
-    flat-to-faster at sf0.1 where round shuffles are cheap — the win is
-    structural).  Hub-heavy graphs: ``salt_buckets=k`` bounds adjacency
-    rows at max_in_degree/k for one ≤k-rows-per-node exchange per round
-    (tests/test_graph_salted.py asserts bit-identical masses).  The
-    rank frame is node-sized; AQE broadcasts it while it fits,
-    shuffle-joins beyond.  Driver involvement per round: zero (no
-    collect, no count) — the loop is a fixed 5-round unroll, so lineage
-    stays bounded without checkpoints.
-    """
-    # basket posexplode×slice pair generation (the mb_copurchase_lift
-    # codegen path — measured 1.7× faster end-to-end here than the
-    # li×li self-join: one collect_set shuffle instead of a distinct +
-    # re-shuffle-both-sides equi-join)
-    baskets = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    pairs = baskets.select(
-        "parts", F.posexplode("parts").alias("_i", "pa")
-    ).select(
-        "pa",
-        F.explode(F.expr("slice(parts, _i + 2, size(parts))")).alias("pb"),
-    )
-    # NO .distinct() here: the raw pair stream (duplicates across
-    # baskets) feeds the adjacency groupBy, whose map-side collect_set
-    # partial dedupes before the shuffle — one full-edge-stream
-    # exchange saved vs distinct-then-aggregate, output bit-identical
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-
-    # node-sized adjacency + integer-exact rounds live in
-    # operators/graph.pagerank_masses (shared with the hub-salted
-    # variant, which is bit-identical — tests/test_graph_salted.py)
-    from atd_data_lake_spark.operators.graph import pagerank_masses
-
-    ranks = pagerank_masses(
-        edges,
-        n_iter=_PR_ITER,
-        total_mass=_PR_MASS,
-        dedupe_edges=True,
-        # edges is pairs ∪ reversed(pairs) — symmetric by construction,
-        # so the node frame reads straight off the adjacency cache keys
-        # (deletes the explode+distinct+count node job; guide §1.2)
-        symmetric_edges=True,
-    )
-    return (
-        ranks.select(F.col("node").alias("part"), "mass")
-        .orderBy(F.desc("mass"), "part")
-        .limit(_PR_TOPK)
-    )
-
-
-def _pagerank_sql() -> str:
-    prelude = f"""
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-pairs AS (
-    SELECT a.l_partkey AS pa, b.l_partkey AS pb
-    FROM li a JOIN li b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-),
-edges AS (
-    SELECT pa AS src, pb AS dst FROM pairs
-    UNION ALL SELECT pb AS src, pa AS dst FROM pairs
-),
-deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY 1),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg),
-r0 AS (
-    SELECT src AS node, CAST({_PR_MASS} // n_nodes AS BIGINT) AS mass
-    FROM deg, n
-)"""
-    its = []
-    for k in range(1, _PR_ITER + 1):
-        its.append(f""",
-r{k} AS (
-    SELECT e.dst AS node,
-           CAST((15 * {_PR_MASS}) // (100 * any_value(n.n_nodes))
-                + sum((85 * r.mass) // (100 * e.deg)) AS BIGINT) AS mass
-    FROM (SELECT e0.src, e0.dst, d.deg
-          FROM edges e0 JOIN deg d ON e0.src = d.src) e
-    JOIN r{k - 1} r ON e.src = r.node, n
-    GROUP BY 1
-)""")
-    return (
-        prelude
-        + "".join(its)
-        + f"""
-SELECT node AS part, mass FROM r{_PR_ITER}
-ORDER BY mass DESC, part LIMIT {_PR_TOPK}
-"""
-    )
-
-
-GRAPH_PAGERANK_SQL = _pagerank_sql()
+from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
 # ---------------------------------------------------------------------------
@@ -250,11 +107,9 @@ SELECT * FROM j WHERE change_type != 'unchanged' ORDER BY o_orderkey
 
 
 ROUND7_QUERIES = {
-    "graph_pagerank": graph_pagerank,
     "dq_snapshot_diff": dq_snapshot_diff,
 }
 
 ROUND7_ORACLES = {
-    "graph_pagerank": GRAPH_PAGERANK_SQL,
     "dq_snapshot_diff": DQ_SNAPSHOT_DIFF_SQL,
 }

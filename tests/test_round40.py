@@ -6,7 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from atd_data_lake_spark.operators.graph import pagerank_masses, ppr_masses
-from atd_data_lake_spark.round40_queries import graph_ppr, text_doc_keywords
+from atd_data_lake_spark.graph_queries import graph_ppr
+from atd_data_lake_spark.round40_queries import text_doc_keywords
 
 
 def test_ppr_concentrates_mass_near_seeds(spark):

@@ -51,6 +51,40 @@ def test_shingle_hashes_repersists_after_clear_cache(spark, sf_dir):
     spark.catalog.clearCache()
 
 
+def test_shingle_hashes_concurrent_callers_share_one_frame(spark, sf_dir):
+    """Threads building frames from one session (the driver contract's
+    pool) race on the memo: every caller must get the SAME persisted
+    handle and the memo must hold one entry for the plan."""
+    import sys
+    import threading
+
+    n_threads = 8
+    d = _docs(spark, sf_dir, 3)
+    before = len(dedup._SHINGLE_FRAMES)
+    barrier = threading.Barrier(n_threads, timeout=60)
+    got = [None] * n_threads
+
+    def call(i):
+        barrier.wait()
+        got[i] = shingle_hashes(d, "doc_id", "text", 3)
+
+    threads = [threading.Thread(target=call, args=(i,)) for i in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got[0] is not None
+    assert all(g is got[0] for g in got)
+    assert len(dedup._SHINGLE_FRAMES) == before + 1
+    spark.catalog.clearCache()
+
+
 def test_dedup_suite_shares_one_shingle_pass(spark, sf_dir, monkeypatch):
     """ngram_jaccard_pairs + containment_pairs over the same corpus
     shingle ONCE: the second operator reuses the memoized frame, so the
@@ -337,7 +371,7 @@ def test_graph_adamic_adar_bounds(spark, sf_dir):
     common_neighbors / ln(2) (each term is 1/ln(deg) with deg >= 2)."""
     import math
 
-    from atd_data_lake_spark.round46_queries import graph_adamic_adar
+    from atd_data_lake_spark.graph_queries import graph_adamic_adar
 
     rows = graph_adamic_adar(spark, sf_dir).collect()
     assert rows

@@ -22,6 +22,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -79,14 +80,18 @@ def gen() -> None:
          # shingles decorrelate across replicas (clean linear dedup
          # scaling) while the language-id stopword needles — and with
          # them the quality/lang gates — keep firing.  Stopword list
-         # from operators/text.STOPWORDS (all languages).
+         # from operators/text.STOPWORDS (all languages), each word
+         # regex-escaped.  The replacement needs no escaping: ``$1`` puts
+         # the matched token back verbatim (a ``$`` or ``\`` inside a
+         # token is not re-read as a group reference), and the suffix is
+         # ``r`` plus digits.
          .withColumn(
              "text",
              F.regexp_replace(
                  F.col("text"),
                  F.lit(
                      r"\b(?!(?:" + "|".join(sorted({
-                         w for ws in _stopwords().values() for w in ws
+                         re.escape(w) for ws in _stopwords().values() for w in ws
                      })) + r")\b)(\S+)"
                  ),
                  F.concat(F.lit("$1r"), F.col("_rep").cast("string")),
