@@ -94,17 +94,50 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     )
 
 
+def _token_shingles(toks: list[str] | None, n: int) -> list[str] | None:
+    """Distinct word n-gram shingles of a token list; None when it has
+    < n tokens."""
+    if not toks or len(toks) < n:
+        return None
+    return list({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)})
+
+
 def _doc_shingles(text: str | None, n: int) -> list[str] | None:
     """Distinct word n-gram shingles; None when the doc has < n tokens
     or NULL/empty text (same semantics as ``word_shingles``'s empty
     array after explode) — a NULL row must degrade to "no shingles",
     never crash the Arrow worker."""
-    if not text:
+    return _token_shingles(text.split(), n) if text else None
+
+
+def shingle_hash_arrays(
+    ids, token_lists, n: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """The distinct-shingle hash rows of one Arrow batch: for each
+    (id, tokens) pair, its distinct word n-grams hashed by
+    ``pd.util.hash_array`` in ONE vectorized call.  Returns (id per
+    row, int64 hash per row, shingle count per doc), or None when no
+    doc has n tokens.  The one hash loop behind ``shingle_hash_rows``
+    and the curation pipeline's fused profile+shingle pass, so their
+    hashes are bit-identical."""
+    sh_ids: list = []
+    all_sh: list[str] = []
+    counts: list[int] = []
+    for did, toks in zip(ids, token_lists):
+        sh = _token_shingles(toks, n)
+        if not sh:
+            continue
+        sh_ids.append(did)
+        all_sh.extend(sh)
+        counts.append(len(sh))
+    if not all_sh:
         return None
-    toks = text.split()
-    if len(toks) < n:
-        return None
-    return list({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)})
+    hashes = pd.util.hash_array(np.array(all_sh, dtype=object)).astype(np.int64)
+    return (
+        np.repeat(np.array(sh_ids), counts),
+        hashes,
+        np.array(counts, dtype=np.int64),
+    )
 
 
 def shingle_hash_rows(
@@ -134,24 +167,14 @@ def shingle_hash_rows(
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids: list = []
-            all_sh: list[str] = []
-            counts: list[int] = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                sh = _doc_shingles(text, n)
-                if not sh:
-                    continue
-                ids.append(did)
-                all_sh.extend(sh)
-                counts.append(len(sh))
-            if not all_sh:
-                continue
-            hashes = pd.util.hash_array(np.array(all_sh, dtype=object)).astype(
-                np.int64
+            rows = shingle_hash_arrays(
+                pdf[id_col], (t.split() if t else None for t in pdf[text_col]), n
             )
-            out = {"_id": np.repeat(np.array(ids), counts), "_hash": hashes}
+            if rows is None:
+                continue
+            ids, hashes, cnt = rows
+            out = {"_id": ids, "_hash": hashes}
             if with_size:
-                cnt = np.array(counts, dtype=np.int64)
                 out["_sz"] = np.repeat(cnt, cnt)
             yield pd.DataFrame(out)
 

@@ -38,6 +38,7 @@ batches (``atd_data_lake/core/catalog.py``); these operators are the
 from __future__ import annotations
 
 import hashlib
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -52,6 +53,8 @@ __all__ = [
     "cms_positions_sql",
     "cms_counters",
     "cms_estimate",
+    "sketch_bucket_col",
+    "sketch_quantile_cols",
 ]
 
 _H1 = "CAST(conv(substring(md5({key}), 1, 15), 16, 10) AS BIGINT)"
@@ -307,3 +310,44 @@ def cms_estimate(
             .alias("est_count")
         )
     )
+
+
+# DDSketch (Masson et al., VLDB'19): log-gamma buckets with relative
+# accuracy alpha.  The bucket function is deterministic, so the sketch
+# CONTENTS are SQL-reproducible (the oracles replay ceil(ln(v)/ln gamma)).
+_SK_ALPHA = 0.01
+_SK_GAMMA = (1.0 + _SK_ALPHA) / (1.0 - _SK_ALPHA)  # exact double, both engines
+_SK_QUANTILES = (("p50", 0.50), ("p95", 0.95), ("p99", 0.99))
+
+
+def sketch_bucket_col(value: Column, gamma: float = _SK_GAMMA) -> Column:
+    """DDSketch bucket id ceil(ln(v)/ln gamma) of a positive value."""
+    return F.ceil(F.log(value) / F.lit(math.log(gamma))).cast("int")
+
+
+def sketch_quantile_cols(
+    quantiles: tuple[tuple[str, float], ...] = _SK_QUANTILES,
+    gamma: float = _SK_GAMMA,
+) -> list[Column]:
+    """Quantile estimates off merged (bucket, cnt) rows grouped by the
+    window key, given their ``cum`` (running count in bucket order) and
+    ``total`` columns: for rank r_q = ceil(q·total), the estimate is
+    2·γ^b/(γ+1) at the smallest bucket whose cumulative count reaches
+    r_q.  Implemented as min-over-conditional so all quantiles come out
+    of ONE cumulative pass."""
+    cols = []
+    for name, q in quantiles:
+        b_q = F.min(
+            F.when(
+                F.col("cum") >= F.ceil(F.lit(q) * F.col("total")), F.col("bucket")
+            )
+        )
+        cols.append(
+            F.round(
+                2.0
+                * F.pow(F.lit(gamma), b_q.cast("double"))
+                / F.lit(gamma + 1.0),
+                6,
+            ).alias(name)
+        )
+    return cols

@@ -31,7 +31,6 @@ from atd_data_lake_spark.operators.dedup import (
     simhash_near_dups,
 )
 from atd_data_lake_spark.operators.fuzzy import levenshtein_ratio
-from atd_data_lake_spark.operators.incremental import incremental_plan
 from atd_data_lake_spark.operators.similarity import (
     cosine_topk,
     embedding_near_dups,
@@ -46,7 +45,6 @@ from atd_data_lake_spark.operators.windows import (
     daily_cumulative,
     first_seen_rank,
     latest_per_group,
-    trailing_avg,
 )
 
 
@@ -2213,6 +2211,14 @@ from atd_data_lake_spark.graph_queries import (  # noqa: E402
 QUERIES.update(GRAPH_QUERIES)
 ORACLES.update(GRAPH_ORACLES)
 
+from atd_data_lake_spark.executed_queries import (  # noqa: E402
+    EXECUTED_ORACLES,
+    EXECUTED_QUERIES,
+)
+
+QUERIES.update(EXECUTED_QUERIES)
+ORACLES.update(EXECUTED_ORACLES)
+
 from atd_data_lake_spark.round8_queries import (  # noqa: E402
     ROUND8_ORACLES,
     ROUND8_QUERIES,
@@ -2301,14 +2307,6 @@ from atd_data_lake_spark.round17_queries import (  # noqa: E402
 QUERIES.update(ROUND17_QUERIES)
 ORACLES.update(ROUND17_ORACLES)
 
-from atd_data_lake_spark.round18_queries import (  # noqa: E402
-    ROUND18_ORACLES,
-    ROUND18_QUERIES,
-)
-
-QUERIES.update(ROUND18_QUERIES)
-ORACLES.update(ROUND18_ORACLES)
-
 from atd_data_lake_spark.round19_queries import (  # noqa: E402
     ROUND19_ORACLES,
     ROUND19_QUERIES,
@@ -2350,14 +2348,6 @@ from atd_data_lake_spark.round24_queries import (  # noqa: E402
 QUERIES.update(ROUND24_QUERIES)
 ORACLES.update(ROUND24_ORACLES)
 
-from atd_data_lake_spark.round25_queries import (  # noqa: E402
-    ROUND25_ORACLES,
-    ROUND25_QUERIES,
-)
-
-QUERIES.update(ROUND25_QUERIES)
-ORACLES.update(ROUND25_ORACLES)
-
 from atd_data_lake_spark.round26_queries import (  # noqa: E402
     ROUND26_ORACLES,
     ROUND26_QUERIES,
@@ -2398,14 +2388,6 @@ from atd_data_lake_spark.round30_queries import (  # noqa: E402
 QUERIES.update(ROUND30_QUERIES)
 ORACLES.update(ROUND30_ORACLES)
 
-from atd_data_lake_spark.round31_queries import (  # noqa: E402
-    ROUND31_ORACLES,
-    ROUND31_QUERIES,
-)
-
-QUERIES.update(ROUND31_QUERIES)
-ORACLES.update(ROUND31_ORACLES)
-
 from atd_data_lake_spark.round32_queries import (  # noqa: E402
     ROUND32_ORACLES,
     ROUND32_QUERIES,
@@ -2421,14 +2403,6 @@ from atd_data_lake_spark.round33_queries import (  # noqa: E402
 
 QUERIES.update(ROUND33_QUERIES)
 ORACLES.update(ROUND33_ORACLES)
-
-from atd_data_lake_spark.round34_queries import (  # noqa: E402
-    ROUND34_ORACLES,
-    ROUND34_QUERIES,
-)
-
-QUERIES.update(ROUND34_QUERIES)
-ORACLES.update(ROUND34_ORACLES)
 
 from atd_data_lake_spark.round35_queries import (  # noqa: E402
     ROUND35_ORACLES,
@@ -2466,14 +2440,6 @@ from atd_data_lake_spark.round38_queries import (  # noqa: E402
 
 QUERIES.update(ROUND38_QUERIES)
 ORACLES.update(ROUND38_ORACLES)
-
-from atd_data_lake_spark.round39_queries import (  # noqa: E402
-    ROUND39_ORACLES,
-    ROUND39_QUERIES,
-)
-
-QUERIES.update(ROUND39_QUERIES)
-ORACLES.update(ROUND39_ORACLES)
 
 from atd_data_lake_spark.round40_queries import (  # noqa: E402
     ROUND40_ORACLES,
@@ -2514,14 +2480,6 @@ from atd_data_lake_spark.round44_queries import (  # noqa: E402
 
 QUERIES.update(ROUND44_QUERIES)
 ORACLES.update(ROUND44_ORACLES)
-
-from atd_data_lake_spark.round45_queries import (  # noqa: E402
-    ROUND45_ORACLES,
-    ROUND45_QUERIES,
-)
-
-QUERIES.update(ROUND45_QUERIES)
-ORACLES.update(ROUND45_ORACLES)
 
 from atd_data_lake_spark.round46_queries import (  # noqa: E402
     ROUND46_QUERIES,

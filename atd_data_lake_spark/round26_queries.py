@@ -1,23 +1,7 @@
-"""Round-26 query additions: executed stream-stream join and RFM
-customer segmentation.
+"""Round-26 query addition: RFM customer segmentation.
 
-``evt_stream_join_executed`` — the last unexercised Structured
-Streaming surface: a watermarked STREAM-STREAM inner join (clicks ⋈
-purchases per user within a 30-minute event-time band), run as a real
-job — file source, join state store on both sides, append-mode memory
-sink — and value-hashed against a plain SQL band-join oracle.  Rounds
-18/25 executed the built-in windowed agg / dropDuplicates and the
-custom ``applyInPandasWithState`` operator; this adds the two-sided
-join state machine (per-key buffered rows, watermark-driven eviction).
-
-Determinism contract: inner stream-stream joins emit a match in the
-micro-batch where both rows are present; ``availableNow`` over the
-single parquet file drains both branches in one batch, so the emitted
-set is exactly the batch band-join — watermark eviction only trims
-state afterwards and removes no output.  The query is stopped once the
-data batch commits: no stateful timeout is registered, but the
-poll-and-stop guard (see round25) keeps the wall-time bounded even if
-the no-data watermark-commit batch lingers.
+(The round's executed stream-stream join, ``evt_stream_join_executed``,
+lives in ``executed_queries.py``.)
 
 ``rfm_segments`` — classic warehouse RFM (recency / frequency /
 monetary) segmentation over orders, the canonical "score customers by
@@ -37,86 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-_JOIN_WINDOW_MIN = 30
-
-
-def evt_stream_join_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(click_id, purchase_id, user_id, lag_us) — each purchase within
-    30 minutes at-or-after a click by the same user, from an executed
-    watermarked stream-stream join."""
-    from atd_data_lake_spark.round18_queries import _events_stream
-
-    src = _events_stream(spark, sf_dir)
-    ev = src.select(
-        "event_id",
-        F.to_utc_timestamp("ts", "UTC").alias("its"),
-        "user_id",
-        "event_type",
-    )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("its").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("its").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {_JOIN_WINDOW_MIN} MINUTES")),
-        "inner",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("lag_us"),
-    )
-
-    name = "evt_stream_join_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # Inner-join output is complete once the single data batch commits
-    # (eviction batches that follow only clean state) — stop then.
-    from atd_data_lake_spark.streaming.control import stop_after_data_batch
-
-    stop_after_data_batch(query)
-    return spark.table(name).orderBy("click_id", "purchase_id")
-
-
-EVT_STREAM_JOIN_EXECUTED_SQL = f"""
-SELECT c.event_id AS click_id,
-       p.event_id AS purchase_id,
-       c.user_id,
-       epoch_us(p.ts) - epoch_us(c.ts) AS lag_us
-FROM events c
-JOIN events p
-  ON c.user_id = p.user_id
- AND p.ts >= c.ts
- AND p.ts <= c.ts + INTERVAL {_JOIN_WINDOW_MIN} MINUTE
-WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-ORDER BY click_id, purchase_id
-"""
 
 
 def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,10 +101,8 @@ ORDER BY c_custkey
 
 
 ROUND26_QUERIES = {
-    "evt_stream_join_executed": evt_stream_join_executed,
     "rfm_segments": rfm_segments,
 }
 ROUND26_ORACLES = {
-    "evt_stream_join_executed": EVT_STREAM_JOIN_EXECUTED_SQL,
     "rfm_segments": RFM_SEGMENTS_SQL,
 }

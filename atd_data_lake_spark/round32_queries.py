@@ -252,87 +252,14 @@ DEDUP_INCREMENTAL_SPANS_SQL = (
 )
 
 
-# ---------------------------------------------------------------------------
-# evt_txlog_compact_executed
-# ---------------------------------------------------------------------------
-
-
-def evt_txlog_compact_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXECUTED transactional lifecycle under the external oracle:
-    4 idempotent-keyed txlog appends (batch slices of events) →
-    ``compact`` (OPTIMIZE: 4+ data files → 2, metadata swap) → an
-    adversarial REPLAY of batch 2 after the compaction (the commit-id
-    index must survive the file rewrite or the rollup doubles) →
-    snapshot read → per-type rollup, value-hashed against plain SQL over
-    the source.  Proves compact preserves row content AND the
-    exactly-once contract across it."""
-    import shutil
-    import tempfile
-
-    from atd_data_lake_spark.io import txlog
-
-    work = tempfile.mkdtemp(prefix="txlog_compact_")
-    try:
-        table = f"{work}/tbl"
-        ev = _t(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
-        )
-        for m in range(4):
-            txlog.append(
-                ev.filter(F.col("event_id") % 4 == m),
-                table,
-                commit_id=f"batch-{m}",
-            )
-        assert len(txlog.snapshot_files(table)) >= 4
-        txlog.compact(spark, table, target_files=2)
-        assert len(txlog.snapshot_files(table)) == 2
-        # restart-window replay AFTER the rewrite: must be a no-op
-        replay = txlog.append(
-            ev.filter(F.col("event_id") % 4 == 2),
-            table,
-            commit_id="batch-2",
-        )
-        assert replay.replayed
-        out = txlog.read_table(spark, table)
-        agg = (
-            out.groupBy("event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(12,2)"))
-                    .cast("double"),
-                    2,
-                ).alias("total_value"),
-            )
-            .orderBy("event_type")
-        )
-        rows = agg.collect()  # materialize before the temp dir vanishes
-        return spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-EVT_TXLOG_COMPACT_SQL = """
-SELECT event_type,
-       count(*) AS n_events,
-       round(CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE), 2)
-           AS total_value
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-"""
-
-
 ROUND32_QUERIES = {
     "dedup_repeated_spans": dedup_repeated_spans,
     "cur_dsir_resample": cur_dsir_resample,
     "dedup_incremental_spans": dedup_incremental_spans,
-    "evt_txlog_compact_executed": evt_txlog_compact_executed,
 }
 
 ROUND32_ORACLES = {
     "dedup_repeated_spans": DEDUP_REPEATED_SPANS_SQL,
     "cur_dsir_resample": CUR_DSIR_RESAMPLE_SQL,
     "dedup_incremental_spans": DEDUP_INCREMENTAL_SPANS_SQL,
-    "evt_txlog_compact_executed": EVT_TXLOG_COMPACT_SQL,
 }

@@ -1,14 +1,7 @@
-"""Round-35 query additions — change data feed, BPE tokenizer
-train+apply, l-diversity.
+"""Round-35 query additions — BPE tokenizer train+apply, l-diversity.
+(The round's change-data-feed query, ``evt_txlog_cdf_executed``, lives
+in ``executed_queries.py``.)
 
-- ``evt_txlog_cdf_executed`` — EXECUTED change-data-feed over the
-  native commit-log table (``io/txlog.changes``, Delta
-  ``table_changes`` semantics): append a base snapshot, run a COW MERGE
-  carrying both updates and inserts, then read the row-level feed
-  between the two versions — updates surface as delete(old)+insert(new),
-  carried-over rows cancel, and only the symmetric difference of the
-  snapshot file lists is ever read.  The external oracle re-derives the
-  exact feed from the source table.
 - ``text_bpe_apply`` — the tokenizer primitive: a LOADED 20-merge BPE
   model (trained at import by the canonical ``train_bpe_merges``
   pair-count/merge loop over a fixed seed corpus — the deployed-
@@ -28,7 +21,7 @@ train+apply, l-diversity.
   SENSITIVE attribute takes ≥ l distinct values, catching the
   homogeneous classes k-anonymity certifies.
 
-All three carry full DuckDB oracles.
+Both carry full DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -39,82 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from atd_data_lake_spark.io.reader import read_table_utc as _t
-
-
-# ---------------------------------------------------------------------------
-# evt_txlog_cdf_executed
-# ---------------------------------------------------------------------------
-
-
-def evt_txlog_cdf_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v1 = append of the event_id % 3 == 0 slice; v2 = MERGE whose
-    source updates every event_id % 6 == 0 row (value + 100) and
-    inserts the % 3 == 1 slice.  ``changes(1, 2)`` must therefore be
-    exactly: inserts = the new slice + the updated row versions,
-    deletes = the pre-update row versions — and nothing from the
-    carried-over rows the COW rewrite copied.  Rolled up per
-    (change_type, event_type) and value-hashed externally."""
-    import shutil
-    import tempfile
-
-    from atd_data_lake_spark.io import txlog
-
-    work = tempfile.mkdtemp(prefix="txlog_cdf_")
-    try:
-        table = f"{work}/tbl"
-        ev = _t(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
-        )
-        txlog.append(ev.filter(F.col("event_id") % 3 == 0), table,
-                     commit_id="base")
-        source = ev.filter(F.col("event_id") % 3 == 1).unionByName(
-            ev.filter(F.col("event_id") % 6 == 0).withColumn(
-                "value", F.col("value") + F.lit(100.0)
-            )
-        )
-        txlog.merge(spark, table, source, on=["event_id"],
-                    commit_id="upsert")
-        feed = txlog.changes(spark, table, from_version=1, to_version=2)
-        agg = (
-            feed.groupBy(
-                F.col("_change_type").alias("change_type"), "event_type"
-            )
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(14,2)"))
-                    .cast("double"),
-                    2,
-                ).alias("total_value"),
-            )
-            .orderBy("change_type", "event_type")
-        )
-        rows = agg.collect()  # materialize before the temp dir vanishes
-        return spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-EVT_TXLOG_CDF_SQL = """
-WITH ins AS (
-    SELECT event_type, value FROM events WHERE event_id % 3 = 1
-    UNION ALL
-    SELECT event_type, value + 100.0 FROM events WHERE event_id % 6 = 0
-),
-del AS (
-    SELECT event_type, value FROM events WHERE event_id % 6 = 0
-)
-SELECT 'insert' AS change_type, event_type,
-       count(*) AS n_rows,
-       round(CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE), 2)
-           AS total_value
-FROM ins GROUP BY event_type
-UNION ALL
-SELECT 'delete', event_type, count(*),
-       round(CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE), 2)
-FROM del GROUP BY event_type
-ORDER BY change_type, event_type
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -319,13 +236,11 @@ ORDER BY priority, status, order_month
 
 
 ROUND35_QUERIES = {
-    "evt_txlog_cdf_executed": evt_txlog_cdf_executed,
     "text_bpe_apply": text_bpe_apply,
     "dq_l_diversity": dq_l_diversity,
 }
 
 ROUND35_ORACLES = {
-    "evt_txlog_cdf_executed": EVT_TXLOG_CDF_SQL,
     "text_bpe_apply": TEXT_BPE_APPLY_SQL,
     "dq_l_diversity": DQ_L_DIVERSITY_SQL,
 }

@@ -20,7 +20,10 @@ mergeable quantile sketches.
   collapse in ONE map-side-combined aggregate, windows merge sketch
   rows by bucket-count addition (commutative/associative ⇒ partition-
   and merge-order-invariant), relative error ≤ 2α/(1−α) ≈ 2% at
-  α = 0.01 by construction.
+  α = 0.01 by construction.  Its streaming twin,
+  ``evt_stream_sketch_quantile_executed``, lives in
+  ``executed_queries.py``; the bucket and quantile formulas both use
+  are ``operators/sketches.sketch_bucket_col``/``sketch_quantile_cols``.
 
 - ``dq_calibration_bins`` — reliability diagram + expected calibration
   error for the same score/label pair (does a 0.9 score MEAN 90%?),
@@ -28,12 +31,8 @@ mergeable quantile sketches.
 - ``text_kn_bigram_logprob`` — interpolated Kneser-Ney bigram LM
   scoring (the standard n-gram smoothing) trained in-plan by three
   map-side-combined aggregates over hashed buckets.
-- ``evt_stream_sketch_quantile_executed`` — the STREAMING twin of the
-  sketch rollup: append-mode watermarked windows pre-aggregate
-  (window, type, bucket) counts — bounded per-bucket state, no raw
-  values retained — and quantiles finalize on read over the sink.
 
-All six carry full DuckDB oracles.  The sketch is oracle-able —
+All five carry full DuckDB oracles.  The sketch is oracle-able —
 unlike random-sampling KLL — precisely BECAUSE the bucket function
 ``ceil(ln(v)/ln γ)`` is deterministic: both engines compute identical
 bucket ids, so even the sketch CONTENTS are SQL-reproducible.
@@ -61,6 +60,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from atd_data_lake_spark.io.reader import read_table_utc as _t
+from atd_data_lake_spark.operators.sketches import (
+    _SK_GAMMA,
+    _SK_QUANTILES,
+    sketch_bucket_col,
+    sketch_quantile_cols,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -354,10 +359,7 @@ ORDER BY bin
 # ts_rolling_p95_sketch
 # ---------------------------------------------------------------------------
 
-_SK_ALPHA = 0.01
-_SK_GAMMA = (1.0 + _SK_ALPHA) / (1.0 - _SK_ALPHA)  # exact double, both engines
 _SK_WINDOW_DAYS = 7
-_SK_QUANTILES = (("p50", 0.50), ("p95", 0.95), ("p99", 0.99))
 
 
 def daily_value_sketch(ev: DataFrame, gamma: float = _SK_GAMMA) -> DataFrame:
@@ -374,37 +376,11 @@ def daily_value_sketch(ev: DataFrame, gamma: float = _SK_GAMMA) -> DataFrame:
         .select(
             "event_type",
             F.to_date("ts").alias("day"),
-            F.ceil(F.log(F.col("value")) / F.lit(math.log(gamma)))
-            .cast("int")
-            .alias("bucket"),
+            sketch_bucket_col(F.col("value"), gamma).alias("bucket"),
         )
         .groupBy("event_type", "day", "bucket")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-
-
-def sketch_quantile_cols(gamma: float = _SK_GAMMA) -> list[F.Column]:
-    """Quantile estimates off merged (bucket, cnt) rows grouped by the
-    window key: for rank r_q = ceil(q·total), the estimate is
-    2·γ^b/(γ+1) at the smallest bucket whose cumulative count reaches
-    r_q.  Implemented as min-over-conditional so all quantiles come out
-    of ONE cumulative pass."""
-    cols = []
-    for name, q in _SK_QUANTILES:
-        b_q = F.min(
-            F.when(
-                F.col("cum") >= F.ceil(F.lit(q) * F.col("total")), F.col("bucket")
-            )
-        )
-        cols.append(
-            F.round(
-                2.0
-                * F.pow(F.lit(gamma), b_q.cast("double"))
-                / F.lit(gamma + 1.0),
-                6,
-            ).alias(name)
-        )
-    return cols
 
 
 def ts_rolling_p95_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -635,131 +611,8 @@ ORDER BY bk.doc_id
 """
 
 
-# ---------------------------------------------------------------------------
-# evt_stream_sketch_quantile_executed
-# ---------------------------------------------------------------------------
-
-_SSK_WINDOW = "60 minutes"
-_SSK_DELAY = "30 minutes"
-
-
-def evt_stream_sketch_quantile_executed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """EXECUTED Structured Streaming twin of the mergeable-sketch
-    pattern: the stream pre-aggregates per (hour window, type, DDSketch
-    bucket) COUNTS in append mode (watermark-finalized, emitted exactly
-    once) — the storable sketch rows — and the quantile finalization
-    (p50/p95) runs on READ over the sink, exactly how a 100 TB
-    streaming-percentile pipeline splits work: the unbounded stream
-    only ever maintains bounded per-bucket counters (no raw-value
-    state, unlike a percentile_approx over the window), and any later
-    consumer derives any quantile from the stored rows.
-
-    Harness discipline per round-34: NTZ event time, named memory sink
-    stopped before reuse, availableNow drain (the final no-data batch
-    advances the watermark and flushes finalized windows).
-    """
-    from atd_data_lake_spark.round34_queries import _drain, _events_stream
-
-    src = _events_stream(spark, sf_dir)
-    its = F.to_utc_timestamp("ts", "UTC")
-    sketch_rows = (
-        src.filter(F.col("value") > 0)
-        .select(
-            its.alias("its"),
-            "event_type",
-            F.ceil(F.log(F.col("value")) / F.lit(math.log(_SK_GAMMA)))
-            .cast("int")
-            .alias("bucket"),
-        )
-        .withWatermark("its", _SSK_DELAY)
-        .groupBy(
-            F.window("its", _SSK_WINDOW).alias("w"), "event_type", "bucket"
-        )
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    sink = _drain(
-        sketch_rows, "evt_stream_sketch_quantile_sink", spark, "append"
-    )
-    w_cum = (
-        Window.partitionBy("w", "event_type")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy("w", "event_type")
-    cum = sink.select(
-        F.col("w.start").alias("window_start"),
-        "event_type",
-        "bucket",
-        "cnt",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("total"),
-    )
-    quants = []
-    for name, q in (("p50", 0.50), ("p95", 0.95)):
-        b_q = F.min(
-            F.when(
-                F.col("cum") >= F.ceil(F.lit(q) * F.col("total")),
-                F.col("bucket"),
-            )
-        )
-        quants.append(
-            F.round(
-                2.0
-                * F.pow(F.lit(_SK_GAMMA), b_q.cast("double"))
-                / F.lit(_SK_GAMMA + 1.0),
-                6,
-            ).alias(name)
-        )
-    return (
-        cum.groupBy("window_start", "event_type")
-        .agg(F.max("total").cast("long").alias("n_events"), *quants)
-        .orderBy("window_start", "event_type")
-    )
-
-
-EVT_STREAM_SKETCH_QUANTILE_SQL = f"""
-WITH mx AS (SELECT max(ts) AS m FROM events),
-sk AS (
-    SELECT make_timestamp(
-               CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 * 1000000)
-             AS window_start,
-           event_type,
-           CAST(ceil(ln(value) / {math.log(_SK_GAMMA)!r}) AS INTEGER)
-             AS bucket,
-           count(*) AS cnt
-    FROM events WHERE value > 0
-    GROUP BY 1, 2, 3
-),
-fin AS (
-    SELECT s.* FROM sk s, mx
-    WHERE epoch(s.window_start) + 3600 <= epoch(m) - 1800
-),
-cum AS (
-    SELECT window_start, event_type, bucket, cnt,
-           sum(cnt) OVER (PARTITION BY window_start, event_type
-               ORDER BY bucket
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-           sum(cnt) OVER (PARTITION BY window_start, event_type) AS total
-    FROM fin
-)
-SELECT window_start, event_type, CAST(max(total) AS BIGINT) AS n_events,
-       round(2.0 * pow({_SK_GAMMA!r}, CAST(min(CASE WHEN cum >=
-           ceil(0.50 * total) THEN bucket END) AS DOUBLE))
-           / ({_SK_GAMMA!r} + 1.0), 6) AS p50,
-       round(2.0 * pow({_SK_GAMMA!r}, CAST(min(CASE WHEN cum >=
-           ceil(0.95 * total) THEN bucket END) AS DOUBLE))
-           / ({_SK_GAMMA!r} + 1.0), 6) AS p95
-FROM cum
-GROUP BY window_start, event_type
-ORDER BY window_start, event_type
-"""
-
-
 ROUND41_QUERIES = {
     "text_kn_bigram_logprob": text_kn_bigram_logprob,
-    "evt_stream_sketch_quantile_executed": evt_stream_sketch_quantile_executed,
     "dq_classifier_auc": dq_classifier_auc,
     "dq_pr_curve": dq_pr_curve,
     "dq_calibration_bins": dq_calibration_bins,
@@ -768,7 +621,6 @@ ROUND41_QUERIES = {
 
 ROUND41_ORACLES = {
     "text_kn_bigram_logprob": TEXT_KN_BIGRAM_LOGPROB_SQL,
-    "evt_stream_sketch_quantile_executed": EVT_STREAM_SKETCH_QUANTILE_SQL,
     "dq_classifier_auc": DQ_CLASSIFIER_AUC_SQL,
     "dq_pr_curve": DQ_PR_CURVE_SQL,
     "dq_calibration_bins": DQ_CALIBRATION_BINS_SQL,

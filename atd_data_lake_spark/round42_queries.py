@@ -253,86 +253,15 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-# ---------------------------------------------------------------------------
-# evt_txlog_skipping_executed
-# ---------------------------------------------------------------------------
-
-_SKIP_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
-def evt_txlog_skipping_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXECUTED min/max file skipping through the txlog: events land as
-    one append per event_type (the clustered-write layout a stream
-    partitioned by type produces), then ``read_where(event_type =
-    'purchase')`` resolves the snapshot's commit-log stats and opens
-    ONLY the files whose [min, max] covers 'purchase' — 1 of the 5 data
-    files; the residual predicate keeps the result exact either way.
-    Daily rollup of what came back, value-hashed against raw events.
-    The file-count assertion (1 of 5 opened) lives in
-    tests/test_txlog_skipping.py; here the oracle pins that pruning
-    never changes RESULTS."""
-    import shutil
-    import tempfile
-
-    from atd_data_lake_spark.io import txlog
-
-    work = tempfile.mkdtemp(prefix="txlog_skip_")
-    try:
-        table = f"{work}/tbl"
-        ev = _t(spark, sf_dir, "events").select(
-            "event_id", "ts", "event_type", "value"
-        )
-        for t in _SKIP_TYPES:
-            txlog.append(
-                ev.filter(F.col("event_type") == t).coalesce(1),
-                table,
-                commit_id=f"slice-{t}",
-            )
-        picked = txlog.read_where(
-            spark, table, "event_type", "purchase", "purchase"
-        )
-        agg = (
-            picked.groupBy(F.to_date("ts").alias("day"))
-            .agg(
-                F.count("*").cast("long").alias("n_events"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(14,2)")).cast(
-                        "double"
-                    ),
-                    2,
-                ).alias("total_value"),
-            )
-            .orderBy("day")
-        )
-        rows = agg.collect()  # materialize before the temp dir vanishes
-        return spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-EVT_TXLOG_SKIPPING_SQL = """
-SELECT CAST(ts AS DATE) AS day,
-       CAST(count(*) AS BIGINT) AS n_events,
-       round(CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE), 2)
-           AS total_value
-FROM events
-WHERE event_type = 'purchase'
-GROUP BY 1
-ORDER BY day
-"""
-
-
 ROUND42_QUERIES = {
     "cur_bloom_decontam": cur_bloom_decontam,
     "agg_countmin_user_counts": agg_countmin_user_counts,
     "dedup_jaccard_prefix": dedup_jaccard_prefix,
-    "evt_txlog_skipping_executed": evt_txlog_skipping_executed,
 }
 
 ROUND42_ORACLES = {
     "cur_bloom_decontam": CUR_BLOOM_DECONTAM_SQL,
     "agg_countmin_user_counts": AGG_COUNTMIN_SQL,
-    "evt_txlog_skipping_executed": EVT_TXLOG_SKIPPING_SQL,
     # dedup_jaccard_prefix assembled in queries.py, where the shared
     # jaccard SQL builder lives
 }

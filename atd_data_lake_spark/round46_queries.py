@@ -92,8 +92,9 @@ def _profile_shingle_rows(d: DataFrame) -> DataFrame:
     also md5-fingerprinting every doc for a column the pipeline never
     reads).  The fused op tokenizes once, computes only the profile
     columns the gates consume, and derives the shingles from the SAME
-    token lists (``s.strip().split()`` tokens ≡ ``s.split()``'s, so the
-    shingle sets are identical to ``_doc_shingles``'s).  The profile
+    token lists (``s.strip().split()`` tokens ≡ ``s.split()``'s) through
+    ``dedup.shingle_hash_arrays``, the hash loop ``shingle_hash_rows``
+    runs, so the shingle hashes are bit-identical.  The profile
     formulas are ``text.profile_arrays`` — one definition shared with
     ``profile_documents``, so pipeline and single-operator oracles
     cannot drift.  At 100 TB this halves the flagship's corpus I/O and
@@ -106,6 +107,7 @@ def _profile_shingle_rows(d: DataFrame) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
+    from atd_data_lake_spark.operators.dedup import shingle_hash_arrays
     from atd_data_lake_spark.operators.scale import fan_out
     from atd_data_lake_spark.operators.text import STOPWORDS, profile_arrays
 
@@ -140,25 +142,12 @@ def _profile_shingle_rows(d: DataFrame) -> DataFrame:
                     "lang_pred": cols["lang_pred"],
                 }
             )
-            sh_ids: list = []
-            all_sh: list[str] = []
-            counts: list[int] = []
-            for did, t in zip(ids, toks):
-                # same guard as dedup._doc_shingles: < 3 tokens → no rows
-                if not t or len(t) < 3:
-                    continue
-                sh = list({" ".join(t[i : i + 3]) for i in range(len(t) - 2)})
-                sh_ids.append(did)
-                all_sh.extend(sh)
-                counts.append(len(sh))
-            if all_sh:
-                hashes = pd.util.hash_array(
-                    np.array(all_sh, dtype=object)
-                ).astype(np.int64)
-                cnt = np.array(counts, dtype=np.int64)
+            rows = shingle_hash_arrays(ids, toks, 3)
+            if rows is not None:
+                sh_ids, hashes, cnt = rows
                 shf = pd.DataFrame(
                     {
-                        "_id": np.repeat(np.array(sh_ids), counts),
+                        "_id": sh_ids,
                         "_hash": hashes,
                         "_sz": np.repeat(cnt, cnt),
                         "n_tokens": pd.array(
@@ -373,76 +362,6 @@ SELECT doc_id,
             ELSE 'test' END AS split
 FROM labeled
 ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# evt_txlog_cluster_skip_executed — EXECUTED multi-column skipping
-# ---------------------------------------------------------------------------
-
-
-def evt_txlog_cluster_skip_executed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """EXECUTED clustered-write + MULTI-COLUMN file skipping through the
-    txlog (the r9 ``write_clustered``/``read_where_multi`` pair): events
-    land as ONE clustered commit (range-partitioned and sorted on
-    (user_id, value) into 8 files, so each file's commit-log min/max is
-    range-disjoint on user_id), then a 2-predicate read
-    (user_id ∈ [100, 500] AND value ∈ [10, 50]) intersects the
-    per-column prunings and opens only the files where BOTH ranges
-    land.  Rollup of what came back, value-hashed against raw events —
-    the oracle pins that pruning never changes RESULTS; the file-count
-    assertion (1 of 16 for a correlated 2-predicate band) lives in
-    tests/test_txlog_skipping.py."""
-    import shutil
-    import tempfile
-
-    from atd_data_lake_spark.io import txlog
-
-    work = tempfile.mkdtemp(prefix="txlog_cskip_")
-    try:
-        table = f"{work}/tbl"
-        ev = _t(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        txlog.write_clustered(
-            ev, table, cluster_by=["user_id", "value"], num_files=8,
-            commit_id="clustered-load",
-        )
-        picked = txlog.read_where_multi(
-            spark, table,
-            {"user_id": (100, 500), "value": (10.0, 50.0)},
-        )
-        agg = (
-            picked.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("n_events"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(14,2)")).cast(
-                        "double"
-                    ),
-                    2,
-                ).alias("total_value"),
-            )
-            .orderBy("event_type")
-        )
-        rows = agg.collect()  # materialize before the temp dir vanishes
-        return spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-EVT_TXLOG_CLUSTER_SKIP_SQL = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       round(CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE), 2)
-           AS total_value
-FROM events
-WHERE user_id BETWEEN 100 AND 500
-  AND value BETWEEN 10.0 AND 50.0
-GROUP BY 1
-ORDER BY event_type
 """
 
 
@@ -836,87 +755,6 @@ SELECT t.prev_type, t.next_type, CAST(t.n AS BIGINT) AS n,
        round(t.n / CAST(m.n_prev AS DOUBLE), 6) AS confidence
 FROM trans t JOIN margin m USING (prev_type)
 ORDER BY prev_type, next_type
-"""
-
-
-# ---------------------------------------------------------------------------
-# evt_stream_benford_executed — 11th EXECUTED streaming query
-# ---------------------------------------------------------------------------
-
-_SBF_WINDOW = "60 minutes"
-_SBF_DELAY = "30 minutes"
-
-
-def evt_stream_benford_executed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """EXECUTED Structured Streaming twin of ``dq_benford_digits``: the
-    stream maintains per (hour window, leading digit) COUNTS in append
-    mode (watermark-finalized — bounded state, ≤ 9 counters per window)
-    and the fraud-screen fractions are derived on READ over the sink —
-    live data-quality monitoring in the same split-the-work shape as
-    the sketch-quantile stream (the unbounded side only ever holds
-    mergeable counters).
-
-    Harness discipline per round-34: NTZ event time, named memory sink
-    stopped before reuse, availableNow drain."""
-    from pyspark.sql import Window
-
-    from atd_data_lake_spark.round34_queries import _drain, _events_stream
-
-    src = _events_stream(spark, sf_dir)
-    its = F.to_utc_timestamp("ts", "UTC")
-    n100 = F.round(F.col("value") * 100).cast("long")
-    digits = (
-        src.select(
-            its.alias("its"),
-            F.substring(n100.cast("string"), 1, 1).cast("int").alias(
-                "digit"
-            ),
-        )
-        .filter(F.col("digit") >= 1)
-        .withWatermark("its", _SBF_DELAY)
-        .groupBy(F.window("its", _SBF_WINDOW).alias("w"), "digit")
-        .agg(F.count("*").cast("long").alias("n_obs"))
-    )
-    sink = _drain(digits, "evt_stream_benford_sink", spark, "append")
-    w_all = Window.partitionBy("w")
-    return (
-        sink.select(
-            F.col("w.start").alias("window_start"),
-            "digit",
-            "n_obs",
-            F.round(
-                F.col("n_obs") / F.sum("n_obs").over(w_all), 6
-            ).alias("obs_frac"),
-        )
-        .orderBy("window_start", "digit")
-    )
-
-
-EVT_STREAM_BENFORD_SQL = """
-WITH mx AS (SELECT max(ts) AS m FROM events),
-d AS (
-    SELECT make_timestamp(
-               CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 * 1000000)
-             AS window_start,
-           CAST(substr(CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR),
-                       1, 1) AS INT) AS digit
-    FROM events
-),
-counts AS (
-    SELECT window_start, digit, count(*) AS n_obs
-    FROM d WHERE digit >= 1 GROUP BY 1, 2
-),
-fin AS (
-    SELECT c.* FROM counts c, mx
-    WHERE epoch(c.window_start) + 3600 <= epoch(m) - 1800
-)
-SELECT window_start, digit, CAST(n_obs AS BIGINT) AS n_obs,
-       round(n_obs / CAST(sum(n_obs) OVER (PARTITION BY window_start)
-             AS DOUBLE), 6) AS obs_frac
-FROM fin
-ORDER BY window_start, digit
 """
 
 
@@ -1384,13 +1222,11 @@ LIMIT 20
 
 ROUND46_QUERIES = {
     "cur_full_pipeline": cur_full_pipeline,
-    "evt_txlog_cluster_skip_executed": evt_txlog_cluster_skip_executed,
     "dq_ks_statistic": dq_ks_statistic,
     "dq_benford_digits": dq_benford_digits,
     "text_good_turing": text_good_turing,
     "text_js_divergence": text_js_divergence,
     "mb_sequential_rules": mb_sequential_rules,
-    "evt_stream_benford_executed": evt_stream_benford_executed,
     "sim_maxdot_topk": sim_maxdot_topk,
     "evt_funnel_conversion": evt_funnel_conversion,
     "evt_retention_cohorts": evt_retention_cohorts,
@@ -1403,13 +1239,11 @@ ROUND46_QUERIES = {
 def round46_oracles() -> dict[str, str]:
     return {
         "cur_full_pipeline": _cur_full_pipeline_sql(),
-        "evt_txlog_cluster_skip_executed": EVT_TXLOG_CLUSTER_SKIP_SQL,
         "dq_ks_statistic": DQ_KS_STATISTIC_SQL,
         "dq_benford_digits": DQ_BENFORD_SQL,
         "text_good_turing": TEXT_GOOD_TURING_SQL,
         "text_js_divergence": TEXT_JS_DIVERGENCE_SQL,
         "mb_sequential_rules": MB_SEQUENTIAL_RULES_SQL,
-        "evt_stream_benford_executed": EVT_STREAM_BENFORD_SQL,
         "sim_maxdot_topk": SIM_MAXDOT_SQL,
         "evt_funnel_conversion": EVT_FUNNEL_SQL,
         "evt_retention_cohorts": EVT_RETENTION_SQL,

@@ -24,6 +24,17 @@ from pyspark.sql import SparkSession
 # in pipeline code, never via spark.sql.session.timeZone.
 LOCAL_TZ = "America/Chicago"
 
+_DRIVER_MEM_BYTES = 90 * 1024**3
+
+
+def default_driver_memory(physical_bytes: int) -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 90g, or a
+    quarter of physical memory on a host with less than 90g (a 90g heap
+    on a 15 GB host gets the test run OOM-killed)."""
+    if physical_bytes >= _DRIVER_MEM_BYTES:
+        return "90g"
+    return f"{physical_bytes // 4 // 1024**2}m"
+
 
 def get_spark(
     app_name: str = "atd_data_lake_spark",
@@ -40,6 +51,7 @@ def get_spark(
     coalescing) on a 1000-executor cluster.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
@@ -50,7 +62,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory(physical)),
+        )
         .config("spark.ui.enabled", "false")
     )
     if not SparkSession.getActiveSession():

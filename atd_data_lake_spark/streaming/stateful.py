@@ -13,7 +13,6 @@ watermark-driven timeout.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -52,8 +51,6 @@ def sessionize(
     processing-time timeout closes idle sessions.  The same function
     works in batch tests through ``applyInPandasWithState``'s batch
     execution (state spans the whole group)."""
-    import datetime as _dt
-
     gap_us = gap_seconds * 1_000_000
 
     def fn(

@@ -1,17 +1,69 @@
-"""Round-34 targeted tests: append-mode watermark semantics and the
-stream-static join.  Oracle value parity is covered by the driver sweep;
-these pin the STREAMING-specific contracts."""
+"""The executed family (``executed_queries``): one home per
+``*_executed`` query, each shared harness piece written once, and the
+streaming contracts the oracle sweep cannot see — append-mode
+finalization and its eviction boundary, re-run stability, the
+stream-static join and the Benford stream's per-window census."""
 
 from __future__ import annotations
 
+import ast
 import datetime
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from atd_data_lake_spark.round34_queries import (
+from atd_data_lake_spark import executed_queries as eq
+from atd_data_lake_spark.executed_queries import (
     evt_stream_append_window_executed,
+    evt_stream_benford_executed,
     evt_stream_static_join_executed,
 )
+
+PKG = Path(eq.__file__).parent
+REPO = PKG.parent
+_PRIVATE_HARNESS = {"_drain", "_events_stream", "_run_to_memory"}
+
+
+def test_executed_queries_defined_only_in_family_module():
+    from atd_data_lake_spark.queries import ORACLES, QUERIES
+
+    executed = [n for n in QUERIES if n.endswith("_executed")]
+    assert sorted(executed) == sorted(eq.EXECUTED_QUERIES)
+    assert all(QUERIES[n] is eq.EXECUTED_QUERIES[n] for n in executed)
+    assert all(ORACLES[n] == eq.EXECUTED_ORACLES[n] for n in executed)
+    for path in PKG.rglob("*.py"):
+        if path.name == "executed_queries.py":
+            continue
+        tree = ast.parse(path.read_text())
+        defined = [
+            n.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.FunctionDef) and n.name.endswith("_executed")
+        ]
+        assert not defined, f"{path.name} defines {defined}"
+
+
+def test_no_module_imports_the_private_stream_harness():
+    for root in (PKG, REPO / "tests", REPO / "tools"):
+        for path in root.rglob("*.py"):
+            tree = ast.parse(path.read_text())
+            imported = {
+                a.name
+                for n in ast.walk(tree)
+                if isinstance(n, ast.ImportFrom)
+                for a in n.names
+            }
+            assert not imported & _PRIVATE_HARNESS, path
+
+
+def test_shared_harness_written_once():
+    src = Path(eq.__file__).read_text()
+    assert src.count('"events.parquet"') == 1
+    assert src.count('format("memory")') == 1
+    assert src.count("mkdtemp(") == 1
+    assert eq.EXECUTED_ORACLES["evt_txlog_compact_executed"] is (
+        eq.EXECUTED_ORACLES["evt_stream_txlog_executed"]
+    )
 
 
 def test_append_mode_emits_only_finalized_windows(spark, sf_dir):
@@ -117,3 +169,24 @@ def test_append_mode_eviction_boundary_pinned(spark, tmp_path):
         (r["window_start"], r["event_type"], r["n_events"], r["total_value"])
         for r in out
     ] == [(base, "A", 2, 3.0)]
+
+
+def test_evt_stream_benford_matches_batch_on_finalized_windows(
+    spark, sf_dir
+):
+    """The executed stream's finalized per-window digit census must
+    equal the batch computation over the same windows (exactly-once
+    append-mode emission), and per-window fractions sum to 1."""
+    from collections import defaultdict
+
+    rows = evt_stream_benford_executed(spark, sf_dir).collect()
+    assert rows
+    per_win = defaultdict(float)
+    for r in rows:
+        assert 1 <= r["digit"] <= 9 and r["n_obs"] > 0
+        per_win[r["window_start"]] += r["obs_frac"]
+    # rounding to 6 dp leaves ≤ 9 * 5e-7 of slack per window
+    assert all(abs(s - 1.0) < 1e-4 for s in per_win.values())
+    # deterministic across re-execution (stream re-drains from scratch)
+    again = evt_stream_benford_executed(spark, sf_dir).collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))

@@ -1,37 +1,7 @@
-"""Round-30 operator tests: perplexity buckets, Gopher rule gate,
-min-label propagation."""
+"""Round-30 operator tests: perplexity buckets, Gopher rule gate (the
+min-label propagation tests live in test_graph.py)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-
-def test_label_propagate_two_components(spark):
-    """Two disjoint 3-cycles converge to their min node id within 3
-    rounds; no label leaks across components."""
-    from atd_data_lake_spark.operators.graph import label_propagate
-
-    und = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10)]
-    edges = spark.createDataFrame(
-        und + [(b, a) for a, b in und], "src long, dst long"
-    )
-    out = {r.node: r.label for r in label_propagate(edges, n_rounds=3).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
-
-
-def test_label_propagate_bounded_rounds_on_path(spark):
-    """On a directed-both-ways path 1-2-3-4-5-6, k rounds reach k hops:
-    after 3 rounds node 5 sees label 2 (3 hops), not 1 (4 hops)."""
-    from atd_data_lake_spark.operators.graph import label_propagate
-
-    und = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)]
-    edges = spark.createDataFrame(
-        und + [(b, a) for a, b in und], "src long, dst long"
-    )
-    out = {r.node: r.label for r in label_propagate(edges, n_rounds=3).collect()}
-    assert out[4] == 1
-    assert out[5] == 2
-    assert out[6] == 3
 
 
 def test_gopher_rules_pinned(spark, sf_dir, monkeypatch):
@@ -76,31 +46,3 @@ def test_perplexity_buckets_partition_by_lang(spark, sf_dir):
         sizes = [per_lang[(lang, b)] for b in ("head", "middle", "tail")]
         assert max(sizes) - min(sizes) <= 1
         assert all(s > 0 for s in sizes)
-
-
-def test_label_propagate_keeps_sink_nodes(spark):
-    """r6 review: a node appearing only as a destination must still be
-    labeled (directed graph; symmetric callers were unaffected)."""
-    from atd_data_lake_spark.operators.graph import label_propagate
-
-    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    out = {r.node: r.label for r in label_propagate(edges, n_rounds=3).collect()}
-    assert out == {1: 1, 2: 1, 3: 1}
-
-
-def test_tracked_caches_reclaims_graph_adjacency(spark):
-    """r6 review: the cache scope is shared across operator modules —
-    graph.py's adjacency persist registers too."""
-    from atd_data_lake_spark.operators.graph import label_propagate
-    from atd_data_lake_spark.operators.scale import tracked_caches
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
-    )
-    with tracked_caches() as reg:
-        out = label_propagate(edges, n_rounds=2).collect()
-        assert out
-        # the receiver-keyed adjacency + the constant src-only label frame
-        assert len(reg) == 2
-        assert all(df.is_cached for df in reg)
-    assert not any(df.is_cached for df in reg)

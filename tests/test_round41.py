@@ -12,10 +12,12 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from atd_data_lake_spark.round41_queries import (
+from atd_data_lake_spark.operators.sketches import (
     _SK_ALPHA,
     _SK_GAMMA,
     _SK_QUANTILES,
+)
+from atd_data_lake_spark.round41_queries import (
     daily_value_sketch,
     dq_classifier_auc,
     dq_pr_curve,

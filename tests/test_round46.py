@@ -255,31 +255,6 @@ def test_mb_sequential_rules_confidence_partitions(spark, sf_dir):
     assert all(abs(s - 1.0) < 1e-3 for s in sums.values())
 
 
-def test_evt_stream_benford_matches_batch_on_finalized_windows(
-    spark, sf_dir
-):
-    """The executed stream's finalized per-window digit census must
-    equal the batch computation over the same windows (exactly-once
-    append-mode emission), and per-window fractions sum to 1."""
-    from collections import defaultdict
-
-    from atd_data_lake_spark.round46_queries import (
-        evt_stream_benford_executed,
-    )
-
-    rows = evt_stream_benford_executed(spark, sf_dir).collect()
-    assert rows
-    per_win = defaultdict(float)
-    for r in rows:
-        assert 1 <= r["digit"] <= 9 and r["n_obs"] > 0
-        per_win[r["window_start"]] += r["obs_frac"]
-    # rounding to 6 dp leaves ≤ 9 * 5e-7 of slack per window
-    assert all(abs(s - 1.0) < 1e-4 for s in per_win.values())
-    # deterministic across re-execution (stream re-drains from scratch)
-    again = evt_stream_benford_executed(spark, sf_dir).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-
-
 def test_sim_maxdot_topk_agrees_with_numpy(spark, sf_dir):
     """The distributed MIPS result must equal a local numpy
     brute-force over the same vectors (rank, id, rounded dot)."""
@@ -364,22 +339,6 @@ def test_evt_retention_cohorts_shape(spark, sf_dir):
     for cells in by_cohort.values():
         assert 0 in cells
         assert cells[0] == max(cells.values())
-
-
-def test_graph_adamic_adar_bounds(spark, sf_dir):
-    """AA down-weights hubs: every score is positive and at most
-    common_neighbors / ln(2) (each term is 1/ln(deg) with deg >= 2)."""
-    import math
-
-    from atd_data_lake_spark.graph_queries import graph_adamic_adar
-
-    rows = graph_adamic_adar(spark, sf_dir).collect()
-    assert rows
-    scores = [r["aa_score"] for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    for r in rows:
-        assert r["common_neighbors"] >= 1
-        assert 0.0 < r["aa_score"] <= r["common_neighbors"] / math.log(2) + 1e-6
 
 
 def test_text_ttr_deciles_shape(spark, sf_dir):
