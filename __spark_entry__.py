@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from atd_data_lake_spark.queries import q1_pricing_summary
+    from atd_data_lake_spark.tpch_queries import q1_pricing_summary
 
     return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 

@@ -1,21 +1,12 @@
-"""Round-3 query additions: classic OLAP shapes + LLM-curation composites.
+"""Round-3 query additions: LLM-curation composites and event analytics.
 
-Two families:
+- PII scrubbing (operators/pii.py), keep-best-per-near-dup-cluster
+  (operators/curation.py), 3-step event funnel, and SemDeDup-style
+  semantic dedup (operators/semdedup.py);
+- as-of join with tolerance, lead/lag/ntile windows, incremental
+  aggregate maintenance, z-score anomalies and unigram log-probs.
 
-1. **TPC-H classics** (q3/q6/q14/q18 shapes) — the remaining canonical
-   join/agg patterns a warehouse engine must run: top-k over a 3-table
-   join (q3), scan-only predicate aggregate (q6), conditional-aggregate
-   ratio over a dimension join (q14), and group-having semi-join back to
-   detail (q18).  The reference's own workload is covered by SURVEY §2;
-   these prove the same engine handles the standard analytics the
-   reference's Socrata consumers would run downstream.
-2. **Curation composites** — PII scrubbing (operators/pii.py),
-   keep-best-per-near-dup-cluster (operators/curation.py), 3-step event
-   funnel, and SemDeDup-style semantic dedup (operators/semdedup.py).
-
-Decimal-exactness discipline: every money aggregate goes through the
-same exact-decimal-sum construction as q1 (queries.py D2 notes) so the
-driver's value-hash comparison is engine-independent.
+The round's TPC-H classics (q3/q6/q14/q18) live in ``tpch_queries``.
 """
 
 from __future__ import annotations
@@ -24,210 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from atd_data_lake_spark.io.reader import read_table_utc as _t
-
-D2 = "decimal(12,2)"
-
-
-def _revenue() -> F.Column:
-    ep = F.col("l_extendedprice").cast(D2)
-    one_minus_disc = F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast(
-        "decimal(3,2)"
-    )
-    return F.round(F.sum(ep * one_minus_disc).cast("double"), 2)
-
-
-_REVENUE_SQL = (
-    "round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))"
-    " * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE), 2)"
-)
-
-
-# ---------------------------------------------------------------------------
-# TPC-H classics
-# ---------------------------------------------------------------------------
-
-
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: top-10 unshipped orders by revenue for one market
-    segment.  Plan: the segment-filtered customer set broadcasts into
-    orders BEFORE the lineitem shuffle; top-k is a single ordered limit
-    (no global sort materialization — Spark's TakeOrderedAndProject)."""
-    cut = F.lit("1998-06-01").cast("timestamp")
-    c = (
-        _t(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cut)
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cut)
-    j = l.join(
-        o.join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey")).select(
-            "o_orderkey", "o_orderdate", "o_orderpriority"
-        ),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    )
-    return (
-        j.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_revenue().alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-Q3_SQL = f"""
-SELECT l_orderkey, o_orderdate, o_orderpriority, {_REVENUE_SQL} AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-06-01'
-  AND l_shipdate  > TIMESTAMP '1998-06-01'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey ASC
-LIMIT 10
-"""
-
-
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: scan-only filtered aggregate — every predicate
-    pushes to the parquet scan, zero joins, one-row result.  The query
-    whose whole cost IS the scan; at 100 TB the plan must show
-    PushedFilters on shipdate/discount/quantity and a 3-column
-    ReadSchema."""
-    l = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        & (F.col("l_discount").between(0.03, 0.05))
-        & (F.col("l_quantity") < 24)
-    )
-    ep = F.col("l_extendedprice").cast(D2)
-    disc = F.col("l_discount").cast("decimal(3,2)")
-    return l.agg(
-        F.round(F.sum(ep * disc).cast("double"), 2).alias("revenue"),
-        F.count("*").alias("n_lineitems"),
-    )
-
-
-Q6_SQL = """
-SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-                    * CAST(l_discount AS DECIMAL(3,2))) AS DOUBLE), 2) AS revenue,
-       count(*) AS n_lineitems
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-  AND l_shipdate <  TIMESTAMP '1998-01-01'
-  AND l_discount BETWEEN 0.03 AND 0.05
-  AND l_quantity < 24
-"""
-
-
-def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: promo revenue share for one ship month —
-    conditional aggregate over a broadcast dimension join.  The ratio is
-    built from exact integer cents with HALF_UP division (queries.py
-    _avg_hu notes: round(double) diverges between engines on ties)."""
-    l = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    ep = F.col("l_extendedprice").cast(D2)
-    one_minus_disc = F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast(
-        "decimal(3,2)"
-    )
-    # ep·(1-disc) is decimal(16,4): scale by 10⁴ for an EXACT integer —
-    # scaling by 100 would leave fractional cents, which Spark's long
-    # cast truncates but DuckDB's rounds (observed divergence)
-    units = (ep * one_minus_disc * 10000).cast("long")
-    agg = (
-        l.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", units).otherwise(F.lit(0))).alias(
-                "_promo_u"
-            ),
-            F.sum(units).alias("_total_u"),
-        )
-    )
-    # promo share in percent at 6 dp + revenues at 2 dp: all integer
-    # HALF_UP arithmetic (positive operands), engine-neutral
-    share = F.expr(
-        "CAST((CAST(_promo_u AS DECIMAL(38,0)) * 200000000 + _total_u)"
-        " div (2 * _total_u) AS DOUBLE) / 1000000.0"
-    )
-    return agg.select(
-        share.alias("promo_pct"),
-        (F.expr("(_promo_u + 50) div 100").cast("double") / 100.0).alias(
-            "promo_revenue"
-        ),
-        (F.expr("(_total_u + 50) div 100").cast("double") / 100.0).alias(
-            "total_revenue"
-        ),
-    )
-
-
-Q14_SQL = """
-WITH agg AS (
-    SELECT sum(CASE WHEN p_type = 'PROMO' THEN CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                       * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))) * 10000 AS BIGINT)
-                    ELSE 0 END) AS promo_u,
-           sum(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                       * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))) * 10000 AS BIGINT))
-               AS total_u
-    FROM lineitem
-    JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate >= TIMESTAMP '1997-03-01'
-      AND l_shipdate <  TIMESTAMP '1997-04-01'
-)
-SELECT ((CAST(promo_u AS HUGEINT) * 200000000 + total_u) // (2 * total_u)) / 1000000.0 AS promo_pct,
-       ((promo_u + 50) // 100) / 100.0 AS promo_revenue,
-       ((total_u + 50) // 100) / 100.0 AS total_revenue
-FROM agg
-"""
-
-
-def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: orders whose total quantity exceeds a threshold,
-    joined back to the customer.  Plan: the HAVING aggregate runs FIRST
-    (one lineitem shuffle producing a tiny key set), then the survivors
-    broadcast into orders/customer — the detail tables are never
-    re-shuffled on a fat key."""
-    l = _t(spark, sf_dir, "lineitem")
-    big = (
-        l.groupBy("l_orderkey")
-        .agg(F.round(F.sum(F.col("l_quantity").cast(D2)).cast("double"), 2).alias("total_qty"))
-        .filter(F.col("total_qty") > 300)
-    )
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        o.join(F.broadcast(big), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_name",
-            "o_orderkey",
-            "o_orderdate",
-            F.round(F.col("o_totalprice").cast(D2).cast("double"), 2).alias(
-                "o_totalprice"
-            ),
-            "total_qty",
-        )
-    )
-
-
-Q18_SQL = """
-SELECT c_name, o_orderkey, o_orderdate,
-       round(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE), 2) AS o_totalprice,
-       total_qty
-FROM orders
-JOIN (
-    SELECT l_orderkey,
-           round(CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE), 2) AS total_qty
-    FROM lineitem GROUP BY l_orderkey
-    HAVING total_qty > 300
-) big ON o_orderkey = big.l_orderkey
-JOIN customer ON o_custkey = c_custkey
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -760,10 +547,6 @@ ORDER BY m.vec_id
 
 
 ANALYTICS_QUERIES = {
-    "q3_shipping_priority": q3_shipping_priority,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "q14_promo_effect": q14_promo_effect,
-    "q18_large_volume_customers": q18_large_volume_customers,
     "evt_funnel": evt_funnel,
     "j9_asof_tolerance": j9_asof_tolerance,
     "inc_agg_maintenance": inc_agg_maintenance,
@@ -776,10 +559,6 @@ ANALYTICS_QUERIES = {
 }
 
 ANALYTICS_ORACLES = {
-    "q3_shipping_priority": Q3_SQL,
-    "q6_forecast_revenue": Q6_SQL,
-    "q14_promo_effect": Q14_SQL,
-    "q18_large_volume_customers": Q18_SQL,
     "evt_funnel": EVT_FUNNEL_SQL,
     "j9_asof_tolerance": J9_TOLERANCE_SQL,
     "inc_agg_maintenance": INC_AGG_SQL,

@@ -54,7 +54,8 @@ time to an instant before its watermark.
 
 Shared pieces, each written once: the events file-stream source
 (``_events_stream``), the named memory-sink drain (``_drain``), the
-temp-dir rollup scaffold (``_scratch_rollup``), the 15-minute windowed
+scratch temp dir (``_scratch_dir``) and the rollup scaffold on it
+(``_scratch_rollup``), the 15-minute windowed
 counts (``_windowed_counts``) and the per-type rollup (``_type_rollup``).
 Sink names and temp-dir prefixes are unique per query, so the registry
 can build these frames concurrently in one session.
@@ -62,6 +63,7 @@ can build these frames concurrently in one session.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import math
 import os
@@ -110,19 +112,34 @@ def _drain(
     """Run a streaming frame into the named memory sink (``availableNow``,
     output ``mode``), block in ``wait`` and return the sink table.  A
     query still active under the same name is stopped first, so
-    re-invocation in a long-lived session is safe."""
+    re-invocation in a long-lived session is safe.  The run checkpoints
+    to its own scratch dir, removed once ``wait`` returns: Spark keeps
+    its default temporary checkpoint when ``stop_after_data_batch``
+    stops a query mid no-data batch (4.8 MB per sessionize run)."""
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    query = (
-        frame.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    wait(query)
+    with _scratch_dir(f"{name}-ckpt-") as ckpt:
+        query = (
+            frame.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        wait(query)
     return spark.table(name)
+
+
+@contextlib.contextmanager
+def _scratch_dir(prefix: str):
+    """A fresh temp dir, removed on exit (also when the body raises)."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def _scratch_rollup(
@@ -133,15 +150,12 @@ def _scratch_rollup(
     removed.  The rollup is a handful of rows: materializing it lets the
     temp table and checkpoint go — the query runs on every bench/sweep
     and would otherwise grow /tmp by ~2x the events table per invocation
-    (r6 review); the ``finally`` also covers stream/read failures
-    mid-body (r6 advice)."""
-    work = tempfile.mkdtemp(prefix=prefix)
-    try:
+    (r6 review); ``_scratch_dir`` also removes it on stream/read
+    failures mid-body (r6 advice)."""
+    with _scratch_dir(prefix) as work:
         agg = build(work)
         rows = agg.collect()
         return spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _windowed_counts(

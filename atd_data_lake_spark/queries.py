@@ -21,6 +21,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from atd_data_lake_spark.functions.datetime_fns import floor_15min_epoch, timebin_15min
+from atd_data_lake_spark.functions.money import (
+    D2,
+    REVENUE_SQL,
+    avg_hu,
+    avg_hu_sql,
+    cents_sum,
+    dsum,
+    revenue,
+)
 from atd_data_lake_spark.io.reader import read_table_utc as _t
 from atd_data_lake_spark.operators.asof import asof_join
 from atd_data_lake_spark.operators.dedup import (
@@ -48,183 +57,9 @@ from atd_data_lake_spark.operators.windows import (
 )
 
 
-# All source numerics are 2-decimal doubles.  For hash-exact oracle parity,
-# aggregates sum in DECIMAL (exact, order-independent), cast to double, and
-# only then apply double ops + round — identical bit patterns on any engine
-# regardless of partitioning/summation order.  D2 is sized to the data
-# (max |value| < 1e6) so products stay inside decimal(38,_) on both engines.
-D2 = "decimal(12,2)"
-
-
-def _dsum(col) -> F.Column:
-    """Exact decimal sum of a 2-dp double column, emitted as double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(D2)).cast("double")
-
-
-def _cents_sum(col) -> F.Column:
-    """Exact integer sum of a 2-dp double column, in cents (bigint)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum((c.cast(D2) * 100).cast("long"))
-
-
-def _avg_hu(cents_col: str, n_col: str, k: int) -> F.Column:
-    """Decimal-HALF_UP average at k places from integer cents + count —
-    pure integer arithmetic, so Spark and DuckDB produce the identical
-    double.  (round(double,k) itself diverges between engines on shortest-
-    repr ties: Spark rounds the decimal string, DuckDB the binary value.)
-    """
-    scale = 10 ** (k - 2)  # cents → k decimal places
-    return F.expr(
-        f"CAST(({cents_col} * {2 * scale} + {n_col}) div (2 * {n_col}) AS DOUBLE)"
-        f" / CAST({10**k} AS DOUBLE)"
-    )
-
-
-#: the same construction, for oracle SQL strings (DuckDB // is floor div;
-#: all summands here are positive so floor == toward-zero)
-def _avg_hu_sql(cents_expr: str, n_expr: str, k: int) -> str:
-    scale = 10 ** (k - 2)
-    return (
-        f"(({cents_expr} * {2 * scale} + {n_expr}) // (2 * {n_expr})) / {10**k}.0"
-    )
-
-
 # ---------------------------------------------------------------------------
-# Flagship + aggregation family
+# Aggregation family
 # ---------------------------------------------------------------------------
-
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: TPC-H-Q1-shaped pricing summary.  Covers A1-family
-    multi-aggregate groupBy (gs_ready_agg.py:69-92 is the reference's
-    flagship aggregation) + P4 date predicate pushdown."""
-    l = _t(spark, sf_dir, "lineitem")
-    ep = F.col("l_extendedprice").cast(D2)
-    one_minus_disc = F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast(
-        "decimal(3,2)"
-    )
-    one_plus_tax = F.lit(1).cast("decimal(3,2)") + F.col("l_tax").cast("decimal(3,2)")
-    grouped = (
-        l.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(_dsum("l_quantity"), 2).alias("sum_qty"),
-            F.round(_dsum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(ep * one_minus_disc).cast("double"), 2).alias(
-                "sum_disc_price"
-            ),
-            F.round(F.sum(ep * one_minus_disc * one_plus_tax).cast("double"), 2).alias(
-                "sum_charge"
-            ),
-            _cents_sum("l_quantity").alias("_qty_cents"),
-            _cents_sum("l_extendedprice").alias("_price_cents"),
-            _cents_sum("l_discount").alias("_disc_cents"),
-            F.count("*").alias("count_order"),
-        )
-    )
-    return grouped.select(
-        "l_returnflag",
-        "l_linestatus",
-        "sum_qty",
-        "sum_base_price",
-        "sum_disc_price",
-        "sum_charge",
-        _avg_hu("_qty_cents", "count_order", 6).alias("avg_qty"),
-        _avg_hu("_price_cents", "count_order", 6).alias("avg_price"),
-        _avg_hu("_disc_cents", "count_order", 6).alias("avg_disc"),
-        "count_order",
-    )
-
-
-Q1_SQL = f"""
-SELECT l_returnflag, l_linestatus, sum_qty, sum_base_price, sum_disc_price, sum_charge,
-       {_avg_hu_sql("qty_cents", "count_order", 6)} AS avg_qty,
-       {_avg_hu_sql("price_cents", "count_order", 6)} AS avg_price,
-       {_avg_hu_sql("disc_cents", "count_order", 6)} AS avg_disc,
-       count_order
-FROM (
-    SELECT l_returnflag, l_linestatus,
-           round(CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE), 2) AS sum_qty,
-           round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE), 2) AS sum_base_price,
-           round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-                         * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE), 2)
-               AS sum_disc_price,
-           round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-                         * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2)))
-                         * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(3,2)))) AS DOUBLE), 2)
-               AS sum_charge,
-           sum(CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT)) AS qty_cents,
-           sum(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)) AS price_cents,
-           sum(CAST(CAST(l_discount AS DECIMAL(12,2)) * 100 AS BIGINT)) AS disc_cents,
-           count(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-)
-"""
-
-
-def olap_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q5-shaped star join: revenue by nation for one region/year
-    with the local-supplier condition (c_nationkey = s_nationkey).
-
-    Plan shape (the point of this query): region/nation are explicit
-    broadcasts, the region filter prunes customers BEFORE any fact-table
-    shuffle, and the two fact joins (orders⋈customer-set, lineitem⋈orders)
-    are the only key shuffles — AQE upgrades them to broadcasts when the
-    pruned side is small.  The date filter pushes to the orders scan."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-
-    n_r = n.join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")).select(
-        "n_nationkey", "n_name"
-    )
-    c2 = c.join(F.broadcast(n_r), F.col("c_nationkey") == F.col("n_nationkey")).select(
-        "c_custkey", "c_nationkey", "n_name"
-    )
-    o2 = o.join(c2, F.col("o_custkey") == F.col("c_custkey")).select(
-        "o_orderkey", "c_nationkey", "n_name"
-    )
-    j = l.join(o2, F.col("l_orderkey") == F.col("o_orderkey")).join(
-        s,
-        (F.col("l_suppkey") == F.col("s_suppkey"))
-        & (F.col("c_nationkey") == F.col("s_nationkey")),
-    )
-    ep = F.col("l_extendedprice").cast(D2)
-    one_minus_disc = F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast(
-        "decimal(3,2)"
-    )
-    return (
-        j.groupBy("n_name")
-        .agg(F.round(F.sum(ep * one_minus_disc).cast("double"), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"))
-    )
-
-
-OLAP_STAR_JOIN_SQL = """
-SELECT n_name,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-                     * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE), 2)
-           AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY n_name
-"""
 
 
 def a1_tumbling_window_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,7 +72,7 @@ def a1_tumbling_window_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(floor_15min_epoch("ts").alias("win_start"), "event_type")
         .agg(
             F.count("*").alias("volume"),
-            _cents_sum("value").alias("_cents"),
+            cents_sum("value").alias("_cents"),
             F.sum(v2).cast("double").alias("_sx"),
             F.sum(v2 * v2).cast("double").alias("_sxx"),
         )
@@ -249,7 +84,7 @@ def a1_tumbling_window_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
         "win_start",
         "event_type",
         "volume",
-        _avg_hu("_cents", "volume", 3).alias("value_avg"),
+        avg_hu("_cents", "volume", 3).alias("value_avg"),
         F.round(std, 3).alias("value_std"),
     )
 
@@ -259,7 +94,7 @@ def a1_tumbling_window_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
 # std is also sample stddev, gs_ready_agg.py:80-83)
 A1_SQL = f"""
 SELECT win_start, event_type, volume,
-       {_avg_hu_sql("cents", "volume", 3)} AS value_avg,
+       {avg_hu_sql("cents", "volume", 3)} AS value_avg,
        round(CASE WHEN n > 1 THEN sqrt(greatest((sxx - sx * sx / n) / (n - 1), 0.0))
                   ELSE 0.0 END, 3) AS value_std
 FROM (
@@ -291,7 +126,7 @@ def a3_sensor_daily_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_obs"),
         F.min("ts").alias("ts_min"),
         F.max("ts").alias("ts_max"),
-        F.round(_dsum("value"), 2).alias("value_sum"),
+        F.round(dsum("value"), 2).alias("value_sum"),
     )
 
 
@@ -333,7 +168,7 @@ def a6_trailing_7day_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (util/perfmet_knack.py:114-158, SAMPLE_DAYS=7)."""
     e = _t(spark, sf_dir, "events")
     daily = e.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        F.round(_dsum("value"), 6).alias("daily_value")
+        F.round(dsum("value"), 6).alias("daily_value")
     )
     epoch_day = F.datediff(F.col("day"), F.lit("1970-01-01"))
     w = Window.partitionBy("user_id").orderBy(epoch_day).rangeBetween(-6, 0)
@@ -480,26 +315,16 @@ def j2_enrich_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = _t(spark, sf_dir, "lineitem")
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
-    revenue = F.col("l_extendedprice").cast(D2) * (
-        F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)")
-    )
     return (
         l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy("n_name")
-        .agg(
-            F.round(F.sum(revenue).cast("double"), 2).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
+        .agg(revenue().alias("revenue"), F.count("*").alias("n_items"))
     )
 
 
-J2_SQL = """
-SELECT n_name,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-                     * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE), 2)
-           AS revenue,
-       count(*) AS n_items
+J2_SQL = f"""
+SELECT n_name, {REVENUE_SQL} AS revenue, count(*) AS n_items
 FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
               JOIN nation ON s_nationkey = n_nationkey
 GROUP BY n_name
@@ -520,7 +345,7 @@ def j3_double_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand", "n_name")
         .agg(
             F.count("*").alias("n_items"),
-            F.round(_dsum("l_quantity"), 2).alias("sum_qty"),
+            F.round(dsum("l_quantity"), 2).alias("sum_qty"),
         )
     )
 
@@ -676,7 +501,7 @@ def p4_pushdown_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_returnflag")
         .agg(
-            F.round(_dsum("l_extendedprice"), 2).alias("sum_price"),
+            F.round(dsum("l_extendedprice"), 2).alias("sum_price"),
             F.count("*").alias("n"),
         )
     )
@@ -704,7 +529,7 @@ def p12_case_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("OTHER")
     )
     return e.groupBy(category.alias("category")).agg(
-        F.count("*").alias("n"), F.round(_dsum("value"), 2).alias("value_sum")
+        F.count("*").alias("n"), F.round(dsum("value"), 2).alias("value_sum")
     )
 
 
@@ -726,15 +551,15 @@ def p13_derived_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
     flag = F.when(F.col("value") >= 100, 1).otherwise(0).cast("long")
     grouped = e.groupBy(flag.alias("high_value")).agg(
-        F.count("*").alias("n"), _cents_sum("value").alias("_cents")
+        F.count("*").alias("n"), cents_sum("value").alias("_cents")
     )
     return grouped.select(
-        "high_value", "n", _avg_hu("_cents", "n", 6).alias("value_avg")
+        "high_value", "n", avg_hu("_cents", "n", 6).alias("value_avg")
     )
 
 
 P13_SQL = f"""
-SELECT high_value, n, {_avg_hu_sql("cents", "n", 6)} AS value_avg
+SELECT high_value, n, {avg_hu_sql("cents", "n", 6)} AS value_avg
 FROM (
     SELECT CAST(CASE WHEN value >= 100 THEN 1 ELSE 0 END AS BIGINT) AS high_value,
            count(*) AS n,
@@ -2011,8 +1836,6 @@ SELECT doc_id, lang, n_chars FROM r WHERE pr >= 0.1
 # ---------------------------------------------------------------------------
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q1_pricing_summary": q1_pricing_summary,
-    "olap_star_join": olap_star_join,
     "a1_tumbling_window_15min": a1_tumbling_window_15min,
     "a2_daily_counts": a2_daily_counts,
     "a3_sensor_daily_obs": a3_sensor_daily_obs,
@@ -2083,8 +1906,6 @@ QUERIES.update(PIPELINE_QUERIES)
 QUERIES.update(COVERAGE_QUERIES)
 
 ORACLES: dict[str, str] = {
-    "q1_pricing_summary": Q1_SQL,
-    "olap_star_join": OLAP_STAR_JOIN_SQL,
     "a1_tumbling_window_15min": A1_SQL,
     "a2_daily_counts": A2_SQL,
     "a3_sensor_daily_obs": A3_SQL,
@@ -2202,6 +2023,14 @@ from atd_data_lake_spark.round7_queries import (  # noqa: E402
 
 QUERIES.update(ROUND7_QUERIES)
 ORACLES.update(ROUND7_ORACLES)
+
+from atd_data_lake_spark.tpch_queries import (  # noqa: E402
+    TPCH_ORACLES,
+    TPCH_QUERIES,
+)
+
+QUERIES.update(TPCH_QUERIES)
+ORACLES.update(TPCH_ORACLES)
 
 from atd_data_lake_spark.graph_queries import (  # noqa: E402
     GRAPH_ORACLES,

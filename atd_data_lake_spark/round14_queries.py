@@ -1,5 +1,6 @@
-"""Round-14 query additions: weighted sampling, change-point detection,
-revenue concentration, and sample-trained PCA projection.
+"""Round-14 query additions: weighted sampling, change-point detection
+and sample-trained PCA projection (the round's revenue-concentration
+query, ``olap_revenue_gini``, lives in ``tpch_queries``).
 
 - ``cur_weighted_sample`` — Efraimidis-Spirakis A-ES weighted sampling
   without replacement over ``documents`` (weight = n_chars): each row
@@ -14,12 +15,6 @@ revenue concentration, and sample-trained PCA projection.
   most likely level shift; reports the detected day, peak magnitude,
   and the exact mean before/after.  Counts are integers so every sum is
   exact; mu enters once as a double product.  Oracle-backed.
-- ``olap_revenue_gini`` — Gini coefficient of per-customer revenue
-  within each nation (revenue concentration): exact-decimal revenue,
-  rank-weighted sum formula G = (2·Σ i·x_i − (n+1)·Σx_i)/(n·Σx_i).
-  Ties in revenue cannot affect the value (swapping equal x under the
-  rank weights is invariant), so the result is hash-stable.
-  Oracle-backed.
 - ``emb_pca_project`` — top-8 linear projection of the embedding
   corpus.  UPGRADED r7 from rows-only to a full driver value-hash
   oracle via the model-injection recipe (``ivf_topk_model`` /
@@ -213,97 +208,6 @@ ORDER BY p.event_type
 
 
 # ---------------------------------------------------------------------------
-# olap_revenue_gini — revenue concentration per nation
-# ---------------------------------------------------------------------------
-
-
-def olap_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of per-customer revenue within each nation.
-
-    Revenue = exact-decimal sum of extendedprice*(1-discount) per
-    customer (the q1 cents discipline).  Within a nation, customers
-    rank by (revenue, custkey); G = (2·Σ i·x_i − (n+1)·Σx) / (n·Σx)
-    with Σ i·x_i accumulated in decimal — one final double expression,
-    round(6).  Equal revenues make the rank weighting permutation-
-    invariant, so the tiebreak never leaks into the value.
-    """
-    from pyspark.sql import Window
-
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    rev_expr = (
-        F.col("l_extendedprice").cast("decimal(12,2)")
-        * (F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)"))
-    )
-    per_cust = (
-        li.join(o.select("o_orderkey", "o_custkey"), li.l_orderkey == o.o_orderkey)
-        .groupBy("o_custkey")
-        .agg(F.sum(rev_expr).cast("decimal(38,4)").alias("rev"))
-    )
-    with_nation = per_cust.join(
-        F.broadcast(
-            c.select("c_custkey", "c_nationkey").join(
-                F.broadcast(n.select("n_nationkey", "n_name")),
-                c.c_nationkey == n.n_nationkey,
-            )
-        ),
-        per_cust.o_custkey == F.col("c_custkey"),
-    ).select("n_name", "o_custkey", "rev")
-    w = Window.partitionBy("n_name").orderBy("rev", "o_custkey")
-    ranked = with_nation.withColumn("i", F.row_number().over(w))
-    agg = ranked.groupBy("n_name").agg(
-        F.count("*").cast("double").alias("n"),
-        F.sum("rev").cast("double").alias("sx"),
-        F.sum(F.col("rev") * F.col("i")).cast("double").alias("six"),
-    )
-    gini = (F.lit(2.0) * F.col("six") - (F.col("n") + 1.0) * F.col("sx")) / (
-        F.col("n") * F.col("sx")
-    )
-    return agg.select(
-        "n_name",
-        F.col("n").cast("long").alias("n_customers"),
-        F.round(F.col("sx"), 2).alias("total_revenue"),
-        F.round(gini, 6).alias("gini"),
-    ).orderBy("n_name")
-
-
-OLAP_REVENUE_GINI_SQL = """
-WITH per_cust AS (
-    SELECT o.o_custkey,
-           CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                    * (CAST(1 AS DECIMAL(3,2))
-                       - CAST(l.l_discount AS DECIMAL(3,2))))
-                AS DECIMAL(38,4)) AS rev
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    GROUP BY 1
-),
-ranked AS (
-    SELECT n.n_name, p.rev,
-           row_number() OVER (PARTITION BY n.n_name
-                              ORDER BY p.rev, p.o_custkey) AS i
-    FROM per_cust p
-    JOIN customer c ON c.c_custkey = p.o_custkey
-    JOIN nation n ON n.n_nationkey = c.c_nationkey
-),
-agg AS (
-    SELECT n_name,
-           CAST(count(*) AS DOUBLE) AS n,
-           CAST(sum(rev) AS DOUBLE) AS sx,
-           CAST(sum(rev * i) AS DOUBLE) AS six
-    FROM ranked GROUP BY 1
-)
-SELECT n_name,
-       CAST(n AS BIGINT) AS n_customers,
-       round(sx, 2) AS total_revenue,
-       round((2.0 * six - (n + 1.0) * sx) / (n * sx), 6) AS gini
-FROM agg
-ORDER BY n_name
-"""
-
-
-# ---------------------------------------------------------------------------
 # emb_pca_project — sample-trained PCA, full-corpus projection
 # ---------------------------------------------------------------------------
 
@@ -467,14 +371,12 @@ EMB_PCA_PROJECT_SQL = _emb_pca_project_sql()
 ROUND14_QUERIES = {
     "cur_weighted_sample": cur_weighted_sample,
     "evt_change_points": evt_change_points,
-    "olap_revenue_gini": olap_revenue_gini,
     "emb_pca_project": emb_pca_project,
 }
 
 ROUND14_ORACLES = {
     "cur_weighted_sample": CUR_WEIGHTED_SAMPLE_SQL,
     "evt_change_points": EVT_CHANGE_POINTS_SQL,
-    "olap_revenue_gini": OLAP_REVENUE_GINI_SQL,
     # emb_pca_project: UPGRADED r7 to a full oracle via the injected
     # loading matrix + scalar centering (was rows-only)
     "emb_pca_project": EMB_PCA_PROJECT_SQL,

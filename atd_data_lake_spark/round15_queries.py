@@ -1,5 +1,6 @@
 """Round-15 query additions: window-frame completeness, behavioral
-entropy, Pareto concentration, and a compression-ratio quality signal.
+entropy and a compression-ratio quality signal (the round's Pareto
+concentration query, ``olap_pareto_8020``, lives in ``tpch_queries``).
 
 - ``w4_value_frames`` — the remaining window-function family members:
   ``nth_value``, ``first_value``/``last_value`` over explicit ROWS
@@ -12,11 +13,6 @@ entropy, Pareto concentration, and a compression-ratio quality signal.
   float-log terms rounded then DECIMAL-summed (the text_token_entropy
   discipline) so the aggregate is order-invariant and engine-exact.
   Oracle-backed.
-- ``olap_pareto_8020`` — how many top customers cover 80% of each
-  nation's revenue: descending cumulative DECIMAL sum, the 80% test in
-  exact integer-decimal arithmetic (cum·10 ≥ total·8 — no float
-  threshold anywhere).  The concentration complement of
-  ``olap_revenue_gini``.  Oracle-backed.
 - ``text_compression_ratio`` — zlib-level-6 compressibility per source
   (the classic boilerplate/repetition quality signal: low ratio =
   highly redundant text).  Deterministic for a fixed zlib, but not
@@ -169,104 +165,6 @@ ORDER BY user_id
 
 
 # ---------------------------------------------------------------------------
-# olap_pareto_8020 — customers covering 80% of national revenue
-# ---------------------------------------------------------------------------
-
-
-def olap_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per nation: the number of top customers whose cumulative revenue
-    first reaches 80% of the national total, and that count's share of
-    the customer base.
-
-    Descending cumulative DECIMAL revenue per nation; the threshold
-    test is cum·10 ≥ total·8 in decimal — exact, no float boundary.
-    min(rank | test) via conditional min.  Shares round(6) at the end.
-    """
-    from pyspark.sql import Window
-
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    rev_expr = (
-        F.col("l_extendedprice").cast("decimal(12,2)")
-        * (F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)"))
-    )
-    per_cust = (
-        li.join(o.select("o_orderkey", "o_custkey"), li.l_orderkey == o.o_orderkey)
-        .groupBy("o_custkey")
-        .agg(F.sum(rev_expr).cast("decimal(38,4)").alias("rev"))
-    )
-    with_nation = per_cust.join(
-        F.broadcast(
-            c.select("c_custkey", "c_nationkey").join(
-                F.broadcast(n.select("n_nationkey", "n_name")),
-                c.c_nationkey == n.n_nationkey,
-            )
-        ),
-        per_cust.o_custkey == F.col("c_custkey"),
-    ).select("n_name", "o_custkey", "rev")
-    w = Window.partitionBy("n_name").orderBy(F.desc("rev"), "o_custkey")
-    ranked = with_nation.select(
-        "n_name",
-        "rev",
-        F.row_number().over(w).alias("i"),
-        F.sum("rev")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("cum"),
-        F.sum("rev").over(Window.partitionBy("n_name")).alias("total"),
-    )
-    hit = (F.col("cum") * 10 >= F.col("total") * 8).cast("boolean")
-    agg = ranked.groupBy("n_name").agg(
-        F.count("*").alias("n_customers"),
-        F.min(F.when(hit, F.col("i"))).alias("top_for_80pct"),
-    )
-    return agg.select(
-        "n_name",
-        "n_customers",
-        "top_for_80pct",
-        F.round(F.col("top_for_80pct") / F.col("n_customers"), 6).alias(
-            "share_of_customers"
-        ),
-    ).orderBy("n_name")
-
-
-OLAP_PARETO_8020_SQL = """
-WITH per_cust AS (
-    SELECT o.o_custkey,
-           CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                    * (CAST(1 AS DECIMAL(3,2))
-                       - CAST(l.l_discount AS DECIMAL(3,2))))
-                AS DECIMAL(38,4)) AS rev
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    GROUP BY 1
-),
-ranked AS (
-    SELECT n.n_name, p.rev,
-           row_number() OVER (PARTITION BY n.n_name
-                              ORDER BY p.rev DESC, p.o_custkey) AS i,
-           sum(p.rev) OVER (PARTITION BY n.n_name
-                            ORDER BY p.rev DESC, p.o_custkey
-                            ROWS UNBOUNDED PRECEDING) AS cum,
-           sum(p.rev) OVER (PARTITION BY n.n_name) AS total
-    FROM per_cust p
-    JOIN customer c ON c.c_custkey = p.o_custkey
-    JOIN nation n ON n.n_nationkey = c.c_nationkey
-),
-agg AS (
-    SELECT n_name, count(*) AS n_customers,
-           min(CASE WHEN cum * 10 >= total * 8 THEN i END) AS top_for_80pct
-    FROM ranked GROUP BY 1
-)
-SELECT n_name, n_customers, top_for_80pct,
-       round(top_for_80pct / CAST(n_customers AS DOUBLE), 6)
-         AS share_of_customers
-FROM agg
-ORDER BY n_name
-"""
-
-
-# ---------------------------------------------------------------------------
 # text_compression_ratio — zlib compressibility quality signal (rows-only)
 # ---------------------------------------------------------------------------
 
@@ -339,7 +237,6 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 ROUND15_QUERIES = {
     "w4_value_frames": w4_value_frames,
     "evt_user_entropy": evt_user_entropy,
-    "olap_pareto_8020": olap_pareto_8020,
     # rows-only
     "text_compression_ratio": text_compression_ratio,
 }
@@ -347,5 +244,4 @@ ROUND15_QUERIES = {
 ROUND15_ORACLES = {
     "w4_value_frames": W4_VALUE_FRAMES_SQL,
     "evt_user_entropy": EVT_USER_ENTROPY_SQL,
-    "olap_pareto_8020": OLAP_PARETO_8020_SQL,
 }

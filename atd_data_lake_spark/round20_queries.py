@@ -1,5 +1,6 @@
-"""Round-20 query additions: expectations-style validation, YoY
-growth, and Matryoshka-truncation retrieval eval.
+"""Round-20 query additions: expectations-style validation and
+Matryoshka-truncation retrieval eval (the round's YoY growth query,
+``olap_yoy_growth``, lives in ``tpch_queries``).
 
 - ``dq_expectations`` — declarative constraint suite (the
   great-expectations shape): each rule is a predicate compiled into ONE
@@ -7,9 +8,6 @@ growth, and Matryoshka-truncation retrieval eval.
   per rule with violation counts and pass/fail.  Rules here: value
   ranges, cross-field order (l_shipdate >= o_orderdate — violated in
   this synthetic data, so the report is non-trivial), domain membership.
-- ``olap_yoy_growth`` — year-over-year revenue growth per nation: the
-  lag-window reporting shape on exact-decimal annual revenue; growth is
-  one final double, round(6).
 - ``emb_matryoshka_eval`` — recall@10 of 16-dim-truncated cosine
   retrieval against full 64-dim ground truth, per query: the
   dimension-truncation quality check behind every Matryoshka-embedding
@@ -114,72 +112,6 @@ ORDER BY rule
 
 
 # ---------------------------------------------------------------------------
-# olap_yoy_growth
-# ---------------------------------------------------------------------------
-
-
-def olap_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Year-over-year revenue growth per nation: exact-decimal annual
-    revenue, lag window over year, growth = cur/prev − 1 (round 6,
-    NULL for each nation's first year)."""
-    from pyspark.sql import Window
-
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    rev_expr = (
-        F.col("l_extendedprice").cast("decimal(12,2)")
-        * (F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)"))
-    )
-    annual = (
-        li.join(
-            o.select("o_orderkey", "o_custkey", F.year("o_orderdate").alias("yr")),
-            li.l_orderkey == F.col("o_orderkey"),
-        )
-        .join(F.broadcast(c.select("c_custkey", "c_nationkey")), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n.select("n_nationkey", "n_name")), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name", "yr")
-        .agg(F.sum(rev_expr).cast("decimal(38,4)").alias("rev"))
-    )
-    w = Window.partitionBy("n_name").orderBy("yr")
-    out = annual.select(
-        "n_name",
-        "yr",
-        F.round(F.col("rev").cast("double"), 2).alias("revenue"),
-        F.round(
-            (F.col("rev").cast("double") / F.lag("rev").over(w).cast("double"))
-            - 1.0,
-            6,
-        ).alias("yoy_growth"),
-    )
-    return out.orderBy("n_name", "yr")
-
-
-OLAP_YOY_GROWTH_SQL = """
-WITH annual AS (
-    SELECT n.n_name, year(o.o_orderdate) AS yr,
-           CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                    * (CAST(1 AS DECIMAL(3,2))
-                       - CAST(l.l_discount AS DECIMAL(3,2))))
-                AS DECIMAL(38,4)) AS rev
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN nation n ON n.n_nationkey = c.c_nationkey
-    GROUP BY 1, 2
-)
-SELECT n_name, yr,
-       round(CAST(rev AS DOUBLE), 2) AS revenue,
-       round(CAST(rev AS DOUBLE)
-             / CAST(lag(rev) OVER (PARTITION BY n_name ORDER BY yr)
-                    AS DOUBLE) - 1.0, 6) AS yoy_growth
-FROM annual
-ORDER BY n_name, yr
-"""
-
-
-# ---------------------------------------------------------------------------
 # emb_matryoshka_eval
 # ---------------------------------------------------------------------------
 
@@ -277,12 +209,10 @@ ORDER BY q.query_id
 
 ROUND20_QUERIES = {
     "dq_expectations": dq_expectations,
-    "olap_yoy_growth": olap_yoy_growth,
     "emb_matryoshka_eval": emb_matryoshka_eval,
 }
 
 ROUND20_ORACLES = {
     "dq_expectations": DQ_EXPECTATIONS_SQL,
-    "olap_yoy_growth": OLAP_YOY_GROWTH_SQL,
     "emb_matryoshka_eval": EMB_MATRYOSHKA_EVAL_SQL,
 }

@@ -2,18 +2,15 @@
 per the round-4 freeze policy — new entries take their external check
 after the never-checked queue drains).
 
-- ``q5_local_supplier_volume`` — TPC-H Q5, the one member of the
-  22-query suite the registry was missing: revenue from lineitems whose
-  customer and supplier sit in the SAME nation, within one region and
-  one order year, grouped by nation.
 - ``cur_semantic_decontaminate`` — embedding-level benchmark
   decontamination (paraphrase leakage, the complement of the n-gram
   ``cur_decontaminate``): every corpus vector scored against a held-out
   benchmark set, best match + threshold flag.  Zero-shuffle map stage;
   benchmark matrix ships in the task closure.
 
-Both queries have full DuckDB oracles; every computed column is aliased
-identically on both sides.
+Each query has a full DuckDB oracle; every computed column is aliased
+identically on both sides.  The round's TPC-H Q5
+(``q5_local_supplier_volume``) lives in ``tpch_queries``.
 """
 
 from __future__ import annotations
@@ -22,91 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from atd_data_lake_spark.io.reader import read_table_utc as _t
-
-
-# ---------------------------------------------------------------------------
-# q5 — local supplier volume (completes the TPC-H 22)
-# ---------------------------------------------------------------------------
-
-
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5: per-nation revenue where the ordering customer and the
-    supplying supplier share the nation, region ASIA, order year 1996.
-
-    Plan shape: region⋈nation collapses to a ≤|nations| broadcast that
-    keys BOTH the supplier and customer sides; the only real shuffle is
-    lineitem⋈orders on orderkey (the two fact tables).  The
-    same-nation predicate is evaluated post-join on two broadcast-borne
-    int columns — never a second fact shuffle.  At 100 TB customer
-    outgrows the broadcast threshold and AQE falls back to a shuffle
-    join on o_custkey; every other edge is unchanged."""
-    r = (
-        _t(spark, sf_dir, "region")
-        .filter(F.col("r_name") == "ASIA")
-        .select("r_regionkey")
-    )
-    n = (
-        _t(spark, sf_dir, "nation")
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("n_nationkey", "n_name")
-    )
-    s = (
-        _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_nationkey").alias("s_nkey"), "n_name")
-    )
-    c = (
-        _t(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("cn_key"))),
-            F.col("c_nationkey") == F.col("cn_key"),
-            "left_semi",
-        )
-        .select("c_custkey", "c_nationkey")
-    )
-    o = (
-        _t(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-        )
-        .select("o_orderkey", "o_custkey")
-    )
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    from atd_data_lake_spark.round4_queries import _revenue
-
-    j = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .filter(F.col("c_nationkey") == F.col("s_nkey"))
-    )
-    return (
-        j.groupBy("n_name")
-        .agg(_revenue().alias("revenue"))
-        .orderBy(F.desc("revenue"), "n_name")
-    )
-
-
-from atd_data_lake_spark.round4_queries import _REVENUE_SQL  # noqa: E402
-
-Q5_SQL = f"""
-SELECT n_name, {_REVENUE_SQL} AS revenue
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE c_nationkey = s_nationkey
-  AND r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1997-01-01'
-GROUP BY n_name
-ORDER BY revenue DESC, n_name
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -213,13 +125,11 @@ ORDER BY doc_id
 
 
 ROUND28_QUERIES = {
-    "q5_local_supplier_volume": q5_local_supplier_volume,
     "cur_semantic_decontaminate": cur_semantic_decontaminate,
     "text_ngram_novelty": text_ngram_novelty,
 }
 
 ROUND28_ORACLES = {
-    "q5_local_supplier_volume": Q5_SQL,
     "cur_semantic_decontaminate": CUR_SEMDECON_SQL,
     "text_ngram_novelty": TEXT_NGRAM_NOVELTY_SQL,
 }

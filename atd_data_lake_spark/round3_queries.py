@@ -30,10 +30,10 @@ get right at 100 TB, not just another query:
   per-source TOKEN budget (running-sum window).
 - ``dedup_incremental_batch`` — continuous-ingest dedup: the J1
   anti-join pattern on content hashes.
-- ``q10_returned_items`` — the remaining runnable TPC-H classic on
-  this schema (Q10: returned-item revenue per customer).
 
-Decimal/epoch exactness rules follow queries.py: money through the
+The round's TPC-H shapes (q10/q13/q15/q19) live in ``tpch_queries``.
+
+Decimal/epoch exactness rules: money through ``functions.money``'s
 exact-decimal-sum construction, time through integer epoch
 microseconds, so every oracle hash is engine-independent.
 """
@@ -43,9 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.functions.money import D2
 from atd_data_lake_spark.io.reader import read_table_utc as _t
-
-D2 = "decimal(12,2)"
 
 
 # ---------------------------------------------------------------------------
@@ -265,71 +264,6 @@ SELECT vec_id,
        END AS rmse
 FROM s
 ORDER BY vec_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# q10_returned_items — TPC-H Q10 shape
-# ---------------------------------------------------------------------------
-
-
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: top-20 customers by revenue lost to returns in
-    one quarter.  Plan: the date filter prunes orders at the scan; the
-    returnflag filter prunes lineitem at the scan; nation broadcasts;
-    customer joins AFTER the fact-side aggregate input is filtered, so
-    AQE can pick broadcast vs shuffle by the surviving size."""
-    lo = F.lit("1997-01-01").cast("timestamp")
-    hi = F.lit("1997-04-01").cast("timestamp")
-    o = (
-        _t(spark, sf_dir, "orders")
-        .filter((F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi))
-        .select("o_orderkey", "o_custkey")
-    )
-    l = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    )
-    c = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_acctbal", "c_nationkey"
-    )
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-
-    ep = F.col("l_extendedprice").cast(D2)
-    one_minus = F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast(
-        "decimal(3,2)"
-    )
-    rev = F.round(F.sum(ep * one_minus).cast("double"), 2)
-
-    j = (
-        l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-    )
-    return (
-        j.groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(rev.alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-Q10_SQL = """
-SELECT c_custkey, c_name, c_acctbal, n_name,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))))
-             AS DOUBLE), 2) AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1997-01-01'
-  AND o_orderdate <  TIMESTAMP '1997-04-01'
-GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY revenue DESC, c_custkey ASC
-LIMIT 20
 """
 
 
@@ -746,151 +680,6 @@ ORDER BY e.user_id
 
 
 # ---------------------------------------------------------------------------
-# q13 / q15 / q19 shapes — the remaining runnable TPC-H classics
-# ---------------------------------------------------------------------------
-
-
-def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: distribution of customers by order count,
-    INCLUDING zero-order customers — the left-join + double-aggregate
-    pattern.  First agg keys on custkey (orders side pre-aggregated
-    before the customer join so the join carries one row per customer,
-    not one per order), second agg on the count itself."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    per_cust = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(F.count("*").alias("c_count"))
-    )
-    dist = c.join(per_cust, "c_custkey", "left").select(
-        F.coalesce(F.col("c_count"), F.lit(0)).alias("c_count")
-    )
-    return (
-        dist.groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-Q13_SQL = """
-WITH per_cust AS (
-  SELECT o_custkey AS c_custkey, CAST(count(*) AS BIGINT) AS c_count
-  FROM orders GROUP BY o_custkey
-)
-SELECT coalesce(c_count, 0) AS c_count,
-       CAST(count(*) AS BIGINT) AS custdist
-FROM customer LEFT JOIN per_cust USING (c_custkey)
-GROUP BY coalesce(c_count, 0)
-ORDER BY custdist DESC, c_count DESC
-"""
-
-
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: supplier(s) with MAX quarterly revenue — the
-    agg-then-rejoin-on-max pattern (a scalar subquery).  The revenue
-    aggregate computes once and feeds both the max and the final join
-    (self-referencing plan); ties all surface, as in the spec."""
-    lo = F.lit("1997-01-01").cast("timestamp")
-    hi = F.lit("1997-04-01").cast("timestamp")
-    rev = (
-        _t(spark, sf_dir, "lineitem")
-        .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
-        .groupBy(F.col("l_suppkey").alias("s_suppkey"))
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice").cast(D2)
-                    * (
-                        F.lit(1).cast("decimal(3,2)")
-                        - F.col("l_discount").cast("decimal(3,2)")
-                    )
-                ).cast("double"),
-                2,
-            ).alias("total_revenue")
-        )
-        # both the max and the final join consume this aggregate; persist
-        # so the lineitem scan+agg runs once, not once per consumer
-        .persist()
-    )
-    mx = rev.agg(F.max("total_revenue").alias("m"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        rev.join(F.broadcast(mx), F.col("total_revenue") == F.col("m"))
-        .join(s, "s_suppkey")
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
-    )
-
-
-Q15_SQL = """
-WITH rev AS (
-  SELECT l_suppkey AS s_suppkey,
-         round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-               * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))))
-               AS DOUBLE), 2) AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate <  TIMESTAMP '1997-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, total_revenue
-FROM rev JOIN supplier USING (s_suppkey)
-WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-ORDER BY s_suppkey
-"""
-
-
-def q19_disjunctive_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape on available columns: revenue under an
-    OR-of-ANDs predicate spanning both join sides.  The plan question
-    Q19 exists to ask: does the optimizer push the join-independent
-    parts of each disjunct below the join (brand/size prune the part
-    scan, quantity prunes the lineitem scan) instead of evaluating the
-    whole disjunction post-join?  Catalyst's constraint propagation
-    extracts `(brand1 AND size≤10) OR (brand2 AND size≤20)` onto the
-    part scan and `qty BETWEEN 1 AND 30` onto lineitem."""
-    l = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    j = l.join(p, F.col("l_partkey") == F.col("p_partkey"))
-    d1 = (
-        (F.col("p_brand") == "Brand#1")
-        & (F.col("p_size") <= 10)
-        & F.col("l_quantity").between(1, 20)
-    )
-    d2 = (
-        (F.col("p_brand") == "Brand#2")
-        & (F.col("p_size") <= 20)
-        & F.col("l_quantity").between(10, 30)
-    )
-    rev = F.round(
-        F.sum(
-            F.col("l_extendedprice").cast(D2)
-            * (
-                F.lit(1).cast("decimal(3,2)")
-                - F.col("l_discount").cast("decimal(3,2)")
-            )
-        ).cast("double"),
-        2,
-    )
-    return j.filter(d1 | d2).agg(
-        rev.alias("revenue"), F.count("*").alias("n_lineitems")
-    )
-
-
-Q19_SQL = """
-SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))))
-             AS DOUBLE), 2) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lineitems
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND p_size <= 10 AND l_quantity BETWEEN 1 AND 20)
-   OR (p_brand = 'Brand#2' AND p_size <= 20 AND l_quantity BETWEEN 10 AND 30)
-"""
-
-
-# ---------------------------------------------------------------------------
 # agg_group_medians — ordered-statistic aggregate
 # ---------------------------------------------------------------------------
 
@@ -1302,7 +1091,6 @@ ROUND3_QUERIES = {
     "evt_retention": evt_retention,
     "text_top_tokens": text_top_tokens,
     "emb_int8_quantize": emb_int8_quantize,
-    "q10_returned_items": q10_returned_items,
     "j_asof_nearest": j_asof_nearest,
     "cur_token_budget": cur_token_budget,
     "dedup_incremental_batch": dedup_incremental_batch,
@@ -1311,9 +1099,6 @@ ROUND3_QUERIES = {
     "li_unpivot": li_unpivot,
     "evt_value_correlation": evt_value_correlation,
     "j_salted_skew_join": j_salted_skew_join,
-    "q13_order_count_distribution": q13_order_count_distribution,
-    "q15_top_supplier": q15_top_supplier,
-    "q19_disjunctive_pricing": q19_disjunctive_pricing,
     "agg_group_medians": agg_group_medians,
     "agg_approx_sketches": agg_approx_sketches,
     "geo_radius_join": geo_radius_join,
@@ -1329,7 +1114,6 @@ ROUND3_ORACLES = {
     "evt_retention": EVT_RETENTION_SQL,
     "text_top_tokens": TEXT_TOP_TOKENS_SQL,
     "emb_int8_quantize": EMB_INT8_QUANTIZE_SQL,
-    "q10_returned_items": Q10_SQL,
     "j_asof_nearest": J_ASOF_NEAREST_SQL,
     "cur_token_budget": CUR_TOKEN_BUDGET_SQL,
     "dedup_incremental_batch": DEDUP_INCREMENTAL_SQL,
@@ -1338,9 +1122,6 @@ ROUND3_ORACLES = {
     "li_unpivot": LI_UNPIVOT_SQL,
     "evt_value_correlation": EVT_VALUE_CORRELATION_SQL,
     "j_salted_skew_join": J_SALTED_SKEW_JOIN_SQL,
-    "q13_order_count_distribution": Q13_SQL,
-    "q15_top_supplier": Q15_SQL,
-    "q19_disjunctive_pricing": Q19_SQL,
     "agg_group_medians": AGG_GROUP_MEDIANS_SQL,
     "emb_label_centroids": EMB_LABEL_CENTROIDS_SQL,
     "cur_substring_decontaminate": CUR_SUBSTRING_DECON_SQL,

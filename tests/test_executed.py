@@ -18,6 +18,7 @@ from atd_data_lake_spark.executed_queries import (
     evt_stream_benford_executed,
     evt_stream_static_join_executed,
 )
+from atd_data_lake_spark.streaming.control import stop_after_data_batch
 
 PKG = Path(eq.__file__).parent
 REPO = PKG.parent
@@ -64,6 +65,25 @@ def test_shared_harness_written_once():
     assert eq.EXECUTED_ORACLES["evt_txlog_compact_executed"] is (
         eq.EXECUTED_ORACLES["evt_stream_txlog_executed"]
     )
+
+
+def test_drain_leaves_no_temporary_checkpoint(spark, sf_dir, monkeypatch):
+    """sessionize is stopped after its data batch, often mid no-data
+    batch, and Spark then keeps its default ``temporary-*`` checkpoint
+    under the JVM's tmpdir.  The drain must never use that default: no
+    such dir may exist while the stream runs, nor after it."""
+    tmp = Path(spark.sparkContext._jvm.System.getProperty("java.io.tmpdir"))
+    before = set(tmp.glob("temporary-*"))
+    seen: list[Path] = []
+
+    def wait(query):
+        seen.extend(set(tmp.glob("temporary-*")) - before)
+        stop_after_data_batch(query)
+
+    monkeypatch.setattr(eq, "stop_after_data_batch", wait)
+    assert eq.sessionize_stream_executed(spark, sf_dir).count() > 0
+    assert not seen
+    assert set(tmp.glob("temporary-*")) <= before
 
 
 def test_append_mode_emits_only_finalized_windows(spark, sf_dir):

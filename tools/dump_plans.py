@@ -1,25 +1,43 @@
 #!/usr/bin/env python
 """Dump `.explain("formatted")` for named registry queries into
-plans/<tag>/<query>_<suffix>.txt (executed first via the noop sink so
-AQE final plans and cached-subtree statistics are materialized).
+<out>/<query>_<suffix>.txt (each query collected first, so AQE final
+plans and cached-subtree statistics are materialized).  The ids that
+vary from run to run — expression ids ``#N``, exchange ``plan_id=N``,
+and the codegen and query-stage ids, which follow the order in which
+AQE stages happen to materialize — are written as ``N``, so ``diff -r``
+of two dumps compares plans.
 
-    python tools/dump_plans.py --tag r09 --suffix after q1 q2 ...
+    python tools/dump_plans.py --out /tmp/plans_after --suffix after q1 q2 ...
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+_RUN_IDS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"codegen id : \d+"), "codegen id : N"),
+    (re.compile(r"(QueryStage\nOutput \[\d+\]: [^\n]*\nArguments: )\d+"), r"\1N"),
+]
+
+
+def strip_run_ids(plan: str) -> str:
+    for pattern, repl in _RUN_IDS:
+        plan = pattern.sub(repl, plan)
+    return plan
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
-    ap.add_argument("--tag", default="r09")
+    ap.add_argument("--out", default=os.path.join(REPO, "plans", "r09"))
     ap.add_argument("--suffix", default="after")
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -50,7 +68,7 @@ def main() -> int:
         shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = os.path.join(REPO, "plans", args.tag)
+    out_dir = args.out
     os.makedirs(out_dir, exist_ok=True)
     for name in args.names:
         spark.sparkContext.setJobDescription(f"plan: {name}")
@@ -67,6 +85,7 @@ def main() -> int:
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
+            txt = strip_run_ids(txt)
             path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
             with open(path, "w") as f:
                 f.write(txt)
