@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.dedup_queries import dedup_clusters_sql
 from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
@@ -419,7 +420,7 @@ def cur_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from atd_data_lake_spark.operators.text import profile_documents
 
     d = _t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(d, n=3, threshold=0.1).persist()
+    pairs = ngram_jaccard_pairs(d, n=3, threshold=0.1)
     comps = dedup_clusters(pairs).select("doc_id", "component")
     quality = profile_documents(d.select("doc_id", "text"), text_col="text").select(
         "doc_id", "quality"
@@ -428,10 +429,10 @@ def cur_keep_best_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _keep_best_sql() -> str:
-    from atd_data_lake_spark.queries import _dedup_clusters_sql, _text_profile_sql
+    from atd_data_lake_spark.queries import _text_profile_sql
 
     return f"""
-WITH comps AS ({_dedup_clusters_sql()}),
+WITH comps AS ({dedup_clusters_sql()}),
 prof AS ({_text_profile_sql()}),
 ranked AS (
     SELECT comps.component AS cluster_id, comps.doc_id, prof.quality,

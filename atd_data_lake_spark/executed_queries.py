@@ -75,6 +75,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from atd_data_lake_spark.functions.money import D2, dsum
 from atd_data_lake_spark.io import txlog
 from atd_data_lake_spark.io.reader import read_table_utc as _t
 from atd_data_lake_spark.operators.sketches import (
@@ -169,7 +170,7 @@ def _windowed_counts(
         src.select(
             its.alias("its"),
             "event_type",
-            F.col("value").cast("decimal(12,2)").alias("v"),
+            F.col("value").cast(D2).alias("v"),
         )
         .withWatermark("its", "30 minutes")
         .groupBy(F.window("its", "15 minutes").alias("w"), "event_type")
@@ -193,10 +194,7 @@ def _type_rollup(out: DataFrame) -> DataFrame:
         out.groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(12,2)")).cast("double"),
-                2,
-            ).alias("total_value"),
+            F.round(dsum("value"), 2).alias("total_value"),
         )
         .orderBy("event_type")
     )
@@ -294,7 +292,7 @@ def evt_stream_static_join_executed(
         its.alias("its"),
         "user_id",
         "event_type",
-        F.col("value").cast("decimal(12,2)").alias("v"),
+        F.col("value").cast(D2).alias("v"),
     ).join(dim, "user_id")  # static side re-planned per micro-batch
     agg = joined.groupBy("c_mktsegment", "event_type").agg(
         F.count("*").alias("n_events"),

@@ -13,12 +13,13 @@ order holds both — and carries a full DuckDB value-hash oracle.
 - ``graph_triangles`` — per-node triangles + local clustering.
 - ``graph_k_hop`` — per-seed 1/2/3-hop BFS reach.
 
-Shared pieces, each written once: the basket posexplode×slice pair
-generator (``_basket_pairs``) under both the distinct ``a < b`` pair
-frame (``_copurchase_pairs``) and the raw both-ways ``src/dst`` stream
-of the iterative queries (``_copurchase_edges``); the both-ways
-orientation (``_both_ways``); the oracles' basket pair CTE
-(``_PAIR_CTE``) and lineitem self-join prelude (``_EDGES_PRELUDE``).
+Shared pieces, each written once: the scan-gated basket pairs
+(``_basket_pairs``, over ``basket_queries``' one pair generator) under
+both the distinct ``a < b`` pair frame (``_copurchase_pairs``) and the
+raw both-ways ``src/dst`` stream of the iterative queries
+(``_copurchase_edges``); the both-ways orientation (``_both_ways``); the
+oracles' basket pair CTE (``_PAIR_CTE``, over ``basket_queries``'
+``BASKET_CTE``) and lineitem self-join prelude (``_EDGES_PRELUDE``).
 Every forced broadcast is size-gated by ``operators/graph._hinted``
 against the one ``BROADCAST_NODE_ROW_LIMIT``; every cache goes through
 ``scoped_persist``.
@@ -29,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.basket_queries import BASKET_CTE, basket_pairs, baskets
 from atd_data_lake_spark.io.reader import read_table_utc as _t
 from atd_data_lake_spark.operators.graph import (
     BROADCAST_NODE_ROW_LIMIT,
@@ -52,8 +54,9 @@ def _basket_pairs(
     names: tuple[str, str] = ("a", "b"),
 ) -> DataFrame:
     """Co-purchase pairs ``lo < hi``, one row per basket holding both
-    (NOT distinct), via the basket posexplode×slice generator — one
-    collect_set shuffle, no lineitem self-join (measured 1.7× faster
+    (NOT distinct), via the basket pair generator
+    (``basket_queries.basket_pairs``) — one collect_set shuffle, no
+    lineitem self-join (measured 1.7× faster
     end-to-end than the li×li self-join).
 
     ``part_mod=k`` pushes the subgraph gate ``a % k == 0 AND b % k == 0``
@@ -67,14 +70,7 @@ def _basket_pairs(
     li = _t(spark, sf_dir, "lineitem")
     if part_mod is not None:
         li = li.filter(F.col("l_partkey") % part_mod == 0)
-    lo, hi = names
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    return baskets.select("parts", F.posexplode("parts").alias("_i", lo)).select(
-        lo,
-        F.explode(F.expr("slice(parts, _i + 2, size(parts))")).alias(hi),
-    )
+    return basket_pairs(baskets(li), names)
 
 
 def _copurchase_pairs(
@@ -102,12 +98,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _both_ways(_basket_pairs(spark, sf_dir, names=("pa", "pb")), "src", "dst")
 
 
-_PAIR_CTE = """
-b AS (
-    SELECT l_orderkey,
-           list_sort(list_distinct(list(l_partkey))) AS parts
-    FROM lineitem GROUP BY l_orderkey
-),
+_PAIR_CTE = f"""
+{BASKET_CTE},
 pairs AS (
     SELECT DISTINCT t1.a, t2.b
     FROM b, UNNEST(b.parts) t1(a), UNNEST(b.parts) t2(b)

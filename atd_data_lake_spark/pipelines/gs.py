@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from atd_data_lake_spark.functions.datetime_fns import day_of_week_ref
 from atd_data_lake_spark.functions.ids import md5_concat
+from atd_data_lake_spark.functions.money import D2
 
 GS_TIME_FMT = "M/d/yyyy h:mm:ss a"  # gs_json_standard.py:179-191 _getTime
 
@@ -212,7 +213,7 @@ def _exact_std(col: str) -> F.Column:
     formula then runs on identical doubles on any engine/partitioning —
     bit-identical results where incremental-moment ``stddev_samp`` has
     summation-order float noise.  stddev-of-one → 0 (pandas semantics)."""
-    d = F.col(col).cast("decimal(12,2)")
+    d = F.col(col).cast(D2)
     n = F.count("*").cast("double")
     sx = F.sum(d).cast("double")
     sxx = F.sum(d * d).cast("double")

@@ -32,19 +32,8 @@ from atd_data_lake_spark.functions.money import (
 )
 from atd_data_lake_spark.io.reader import read_table_utc as _t
 from atd_data_lake_spark.operators.asof import asof_join
-from atd_data_lake_spark.operators.dedup import (
-    exact_dedup,
-    incremental_minhash_near_dups,
-    minhash_near_dups,
-    ngram_jaccard_pairs,
-    simhash_near_dups,
-)
 from atd_data_lake_spark.operators.fuzzy import levenshtein_ratio
-from atd_data_lake_spark.operators.similarity import (
-    cosine_topk,
-    embedding_near_dups,
-    lsh_topk,
-)
+from atd_data_lake_spark.operators.similarity import cosine_topk, lsh_topk
 from atd_data_lake_spark.operators.text import (
     BPE_PRETOKEN_RE,
     STOPWORDS,
@@ -696,92 +685,8 @@ FROM events
 
 
 # ---------------------------------------------------------------------------
-# Training-data pipeline: dedup / text / similarity
+# Training-data pipeline: text / similarity (dedup: dedup_queries.py)
 # ---------------------------------------------------------------------------
-
-
-def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup by content hash (operators/dedup.exact_dedup)."""
-    d = _t(spark, sf_dir, "documents")
-    return exact_dedup(d, text_col="text", id_col="doc_id")
-
-
-DEDUP_EXACT_SQL = """
-SELECT md5(text) AS content_hash, min(doc_id) AS canonical_id, count(*) AS n_dups
-FROM documents GROUP BY 1
-"""
-
-
-def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs ≥ 0.1 via inverted-index join
-    (operators/dedup.ngram_jaccard_pairs) — never a cross join."""
-    d = _t(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(d, n=3, threshold=0.1)
-
-
-def _jaccard_pairs_sql(threshold: float) -> str:
-    """Exact word-trigram Jaccard pair list at ``threshold`` — the one
-    pair construction every cluster/report/split oracle must share with
-    its Spark query AT THE SAME THRESHOLD (a 0.1-threshold oracle under
-    a 0.5-threshold query agreed by luck below sf0.1, where no pair's
-    jaccard fell in [0.1, 0.5) — caught by the round-5 sf0.1 sweep)."""
-    return f"""
-WITH t AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-    FROM documents WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 3
-),
-g AS (
-    SELECT DISTINCT doc_id, concat_ws(' ', toks[i], toks[i+1], toks[i+2]) AS shingle
-    FROM t, UNNEST(range(1, len(toks) - 1)) AS u(i)
-),
-sz AS (SELECT doc_id, count(*) AS sz FROM g GROUP BY 1),
-inter AS (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-    FROM g a JOIN g b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-)
-SELECT id_a, id_b, round(n * 1.0 / (sa.sz + sb.sz - n), 6) AS jaccard
-FROM inter JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
-WHERE round(n * 1.0 / (sa.sz + sb.sz - n), 6) >= {threshold}
-"""
-
-
-DEDUP_JACCARD_SQL = _jaccard_pairs_sql(0.1)
-
-# Oracles for the VERIFIED MinHash queries: banding recall at the
-# r=3/21-band geometry is 1 − ~3e-7 at J = 0.8 (and deterministic), so
-# the verified output equals the exact Jaccard pair set — which DuckDB
-# computes directly, no MinHash needed.
-DEDUP_MINHASH_SQL = """
-WITH t AS (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-    FROM documents WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 3
-),
-g AS (
-    SELECT DISTINCT doc_id, concat_ws(' ', toks[i], toks[i+1], toks[i+2]) AS shingle
-    FROM t, UNNEST(range(1, len(toks) - 1)) AS u(i)
-),
-sz AS (SELECT doc_id, count(*) AS sz FROM g GROUP BY 1),
-inter AS (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-    FROM g a JOIN g b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-)
-SELECT id_a, id_b, round(n * 1.0 / (sa.sz + sb.sz - n), 6) AS jaccard
-FROM inter JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
-WHERE round(n * 1.0 / (sa.sz + sb.sz - n), 6) >= 0.8
-"""
-
-# Incremental variant: only pairs touching the incoming batch
-# (doc_id % 10 == 7); id_b is always incoming, id_a < id_b when both are.
-DEDUP_INC_MINHASH_SQL = """
-WITH p AS (""" + DEDUP_MINHASH_SQL + """)
-SELECT CASE WHEN id_a % 10 = 7 AND id_b % 10 <> 7 THEN id_b ELSE id_a END AS id_a,
-       CASE WHEN id_a % 10 = 7 AND id_b % 10 <> 7 THEN id_a ELSE id_b END AS id_b,
-       jaccard
-FROM p
-WHERE id_a % 10 = 7 OR id_b % 10 = 7
-"""
 
 
 def text_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -921,42 +826,6 @@ SELECT tok.doc_id,
             ELSE round(1.0 - tok.n_distinct / CAST(tok.n_tok AS DOUBLE), 6) END
            AS dup_token_frac
 FROM tok LEFT JOIN agg ON tok.doc_id = agg.doc_id
-"""
-
-
-def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clustering: n-gram-Jaccard pairs ≥ 0.1 grouped into
-    connected components (operators/components.dedup_clusters) — the
-    keep-one-per-cluster step that makes pair lists actionable."""
-    from atd_data_lake_spark.operators.components import dedup_clusters
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(d, n=3, threshold=0.1).persist()
-    return dedup_clusters(pairs)
-
-
-def _dedup_clusters_sql() -> str:
-    """Oracle: transitive closure by recursive CTE over the same pair
-    list; component = min reachable node (incl. self)."""
-    return f"""
-WITH RECURSIVE pairs AS ({DEDUP_JACCARD_SQL}),
-sym AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION
-    SELECT id_b, id_a FROM pairs
-),
-reach AS (
-    SELECT u, v FROM sym
-    UNION
-    SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u
-),
-comp AS (
-    SELECT u AS doc_id, least(u, min(v)) AS component
-    FROM reach GROUP BY u
-)
-SELECT doc_id, component,
-       count(*) OVER (PARTITION BY component) AS n_members
-FROM comp
 """
 
 
@@ -1110,128 +979,6 @@ FROM (
 """
 
 
-# --- non-SQL-expressible (rows-only checks): deterministic but hash-based ---
-
-
-def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, VERIFIED by exact Jaccard ≥ 0.8 —
-    the full production shape (operators/dedup.minhash_near_dups).
-    The registry uses the light 32-hash/10-band geometry (r=3): the
-    corpus's true pairs sit at J ≥ 0.8 with most ≥ 0.89, where the
-    banding miss probability is ≤ 7.7e-4 per pair — and the hash family
-    is deterministic, so equality with the exact Jaccard pair set is a
-    fixed fact of the corpus, verified at sf0.001/0.01/0.1
-    (test_dedup_scale.py).  That equality is what licenses the DuckDB
-    oracle — upgrading this from the rows-only check the candidate form
-    was limited to.  Raise num_hashes/bands for corpora where borderline
-    pairs matter (the operator default is 64/21, miss ≈ 3e-7)."""
-    d = _t(spark, sf_dir, "documents")
-    return minhash_near_dups(d, num_hashes=32, bands=10, threshold=0.8)
-
-
-def dedup_incremental_minhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous-ingest near-dup pairs: docs with doc_id%10==7 arrive
-    as the new batch against the rest as standing corpus; candidates
-    (standing side never self-joins; incoming band keys broadcast) are
-    verified by exact Jaccard ≥ 0.8
-    (operators/dedup.incremental_minhash_near_dups).  Same light
-    32-hash/10-band geometry and determinism argument as
-    dedup_minhash_lsh makes the output equal the exact cross-group pair
-    set — SQL-oracle-checked (was rows-only)."""
-    from atd_data_lake_spark.operators.dedup import minhash_signature_df
-    from atd_data_lake_spark.operators.scale import scoped_persist
-
-    # ONE ingest predicate definition: the doc frames split on doc_id
-    # and the signature slices split on the sig frame's _id (same
-    # values) — a single expression applied to both column names keeps
-    # the four filters from drifting apart (r9 review finding).
-    def _is_incoming(col: str):
-        return F.col(col) % 10 == 7
-
-    d = _t(spark, sf_dir, "documents")
-    standing = d.filter(~_is_incoming("doc_id"))
-    incoming = d.filter(_is_incoming("doc_id"))
-    # ONE Arrow signature pass over the whole table, split by the same
-    # ingest predicate (signatures are row-wise, so filter commutes):
-    # the heavy text column is scanned and shingled once, not once per
-    # side (r9 batch 9).  Persist is justified by two consumers (both
-    # banding branches); 33 longs/row, spillable.  Lifecycle (r9 ADVICE
-    # note): outside a tracked_caches() scope this persist lives until
-    # the session-level clearCache() — the bench/sweep/driver contract
-    # — which is the repo-wide convention for query-internal caches; a
-    # caller embedding this query in a long-lived session should wrap
-    # it in tracked_caches() like the runner does.
-    sig = scoped_persist(minhash_signature_df(d, num_hashes=32))
-    return incremental_minhash_near_dups(
-        standing,
-        incoming,
-        num_hashes=32,
-        bands=10,
-        threshold=0.8,
-        standing_sig=sig.filter(~_is_incoming("_id")),
-        incoming_sig=sig.filter(_is_incoming("_id")),
-    )
-
-
-def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs, Hamming ≤ 3 over 12-bit pigeonhole blocks
-    (4 blocks > max_hamming ⇒ recall 1.0 within the radius) — UPGRADED
-    r6 from rows-only to a fully oracle-checked query: the signature is
-    the PORTABLE 48-bit simhash (md5-prefix token hashes, every step
-    ANSI-SQL-reproducible), completing the oracle-backed dedup family.
-    12-bit blocks keep buckets ≈ n/4096 so the candidate join stays
-    near-linear (6-bit blocks measured 30× the pair volume — weak-
-    similarity noise — and 5× the wall).  The pandas-hash production
-    signature (``simhash_df``) stays exercised by the pigeonhole/
-    determinism pytest gates."""
-    from atd_data_lake_spark.operators.dedup import (
-        simhash_signature_portable,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    sig = simhash_signature_portable(d, n_bits=48)
-    out = simhash_near_dups(
-        d, max_hamming=3, block_bits=12, signature=sig, hash_bits=48
-    )
-    return out.select(
-        "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
-    )
-
-
-def _dedup_simhash_sql(n_bits: int = 48, max_hamming: int = 3) -> str:
-    votes = ",\n           ".join(
-        f"sum(CASE WHEN (th >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(n_bits)
-    )
-    sh = "\n         + ".join(
-        f"CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(n_bits)
-    )
-    return f"""
-WITH toks AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-),
-h AS (
-    SELECT doc_id,
-           CAST(('0x' || substr(md5(tok), 1, 13)) AS UBIGINT) AS th
-    FROM toks
-),
-votes AS (
-    SELECT doc_id,
-           {votes}
-    FROM h GROUP BY doc_id
-),
-sig AS (
-    SELECT doc_id,
-           CAST({sh} AS BIGINT) AS sh
-    FROM votes
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.sh, b.sh)) AS INTEGER) AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sh, b.sh)) <= {max_hamming}
-"""
-
-
 def sim_ann_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH approximate top-k — UPGRADED r6 from a rows-only numpy-
     seeded run to a fully oracle-checked one (the r5 minhash-upgrade
@@ -1305,26 +1052,6 @@ scored AS (
 )
 SELECT query_id, neighbor_id, cos_sim, CAST(rank AS BIGINT) AS rank
 FROM scored WHERE rank <= 10
-"""
-
-
-def dedup_embedding_cosine_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs, cos >= 0.4 (BASELINE.json dedup
-    list; exact block-matmul variant — LSH banding is the >broadcast
-    scale path).  The driver's embeddings are near-orthogonal (max
-    pairwise cos ~0.5-0.6), so the production-style 0.9 threshold would
-    assert on an empty set; 0.4 exercises real pair emission."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_near_dups(emb, threshold=0.4)
-
-
-DEDUP_EMB_COS_SQL = """
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                    CAST(b.embedding AS DOUBLE[])), 6) AS cos_sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                   CAST(b.embedding AS DOUBLE[])), 6) >= 0.4
 """
 
 
@@ -1861,17 +1588,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "s_scalar_record_id": s_scalar_record_id,
     "s_scalar_timebin": s_scalar_timebin,
     "s_date_parts": s_date_parts,
-    "dedup_exact": dedup_exact_q,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard_q,
     "text_profile": text_profile_q,
     "text_bpe_tokens": text_bpe_tokens_q,
     "corpus_curation": corpus_curation_q,
-    "dedup_clusters": dedup_clusters_q,
     "text_repetition": text_repetition_q,
     "text_langid_ngram": text_langid_ngram_q,
     "text_winnow_fingerprint": text_winnow_fingerprint_q,
     "sim_knn_bruteforce": sim_knn_bruteforce_q,
-    "dedup_embedding_cosine": dedup_embedding_cosine_q,
     "mm_media_features": mm_media_features_q,
     "mm_frame_sample": mm_frame_sample_q,
     "mm_audio_windows": mm_audio_windows_q,
@@ -1884,11 +1607,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "cur_pack_chunks": cur_pack_chunks_q,
     "cur_cap_per_source": cur_cap_per_source_q,
     "cur_quality_gate": cur_quality_gate_q,
-    # all oracle-backed since r5/r6: verified-minhash pairs (r5),
-    # portable simhash + model-injected ANN (r6)
-    "dedup_minhash_lsh": dedup_minhash_lsh_q,
-    "dedup_incremental_minhash": dedup_incremental_minhash_q,
-    "dedup_simhash": dedup_simhash_q,
+    # model-injected ANN, oracle-backed since r6
     "sim_ann_lsh": sim_ann_lsh_q,
     "sim_ann_ivf": sim_ann_ivf_q,
 }
@@ -1931,22 +1650,15 @@ ORACLES: dict[str, str] = {
     "s_scalar_record_id": S_RECORD_ID_SQL,
     "s_scalar_timebin": S_TIMEBIN_SQL,
     "s_date_parts": S_DATE_PARTS_SQL,
-    "dedup_exact": DEDUP_EXACT_SQL,
-    "dedup_ngram_jaccard": DEDUP_JACCARD_SQL,
-    "dedup_minhash_lsh": DEDUP_MINHASH_SQL,
-    "dedup_incremental_minhash": DEDUP_INC_MINHASH_SQL,
     "text_profile": _text_profile_sql(),
     "text_bpe_tokens": _text_bpe_tokens_sql(),
     "corpus_curation": _corpus_curation_sql(),
-    "dedup_clusters": _dedup_clusters_sql(),
     "text_repetition": TEXT_REPETITION_SQL,
     "text_langid_ngram": _text_langid_ngram_sql(),
     "text_winnow_fingerprint": _text_winnow_sql(),
     "sim_knn_bruteforce": SIM_KNN_SQL,
     "sim_ann_lsh": SIM_ANN_LSH_SQL,
     "sim_ann_ivf": SIM_ANN_IVF_SQL,
-    "dedup_simhash": _dedup_simhash_sql(),
-    "dedup_embedding_cosine": DEDUP_EMB_COS_SQL,
     "mm_media_features": _mm_media_sql(),
     "mm_frame_sample": MM_FRAME_SAMPLE_SQL,
     "mm_audio_windows": MM_AUDIO_WINDOWS_SQL,
@@ -2040,6 +1752,23 @@ from atd_data_lake_spark.graph_queries import (  # noqa: E402
 QUERIES.update(GRAPH_QUERIES)
 ORACLES.update(GRAPH_ORACLES)
 
+from atd_data_lake_spark.dedup_queries import (  # noqa: E402
+    DEDUP_ORACLES,
+    DEDUP_QUERIES,
+    jaccard_pairs_sql,
+)
+
+QUERIES.update(DEDUP_QUERIES)
+ORACLES.update(DEDUP_ORACLES)
+
+from atd_data_lake_spark.basket_queries import (  # noqa: E402
+    BASKET_ORACLES,
+    BASKET_QUERIES,
+)
+
+QUERIES.update(BASKET_QUERIES)
+ORACLES.update(BASKET_ORACLES)
+
 from atd_data_lake_spark.executed_queries import (  # noqa: E402
     EXECUTED_ORACLES,
     EXECUTED_QUERIES,
@@ -2058,7 +1787,7 @@ QUERIES.update(ROUND8_QUERIES)
 ORACLES.update(ROUND8_ORACLES)
 # threshold 0.5 — MUST match cur_leakage_safe_split's Spark-side pairs
 ORACLES["cur_leakage_safe_split"] = make_leakage_split_sql(
-    _jaccard_pairs_sql(0.5), _bucket_sql("group_key", "v1")
+    jaccard_pairs_sql(0.5), _bucket_sql("group_key", "v1")
 )
 
 from atd_data_lake_spark.round9_queries import (  # noqa: E402
@@ -2072,15 +1801,10 @@ ORACLES.update(ROUND9_ORACLES)
 from atd_data_lake_spark.round10_queries import (  # noqa: E402
     ROUND10_ORACLES,
     ROUND10_QUERIES,
-    make_cross_source_sql,
 )
 
 QUERIES.update(ROUND10_QUERIES)
 ORACLES.update(ROUND10_ORACLES)
-# threshold 0.5 — MUST match dedup_cross_source_report's Spark-side pairs
-ORACLES["dedup_cross_source_report"] = make_cross_source_sql(
-    _jaccard_pairs_sql(0.5)
-)
 
 from atd_data_lake_spark.round11_queries import (  # noqa: E402
     ROUND11_QUERIES,
@@ -2161,13 +1885,12 @@ QUERIES.update(ROUND21_QUERIES)
 ORACLES.update(ROUND21_ORACLES)
 
 from atd_data_lake_spark.round23_queries import (  # noqa: E402
+    ROUND23_ORACLES,
     ROUND23_QUERIES,
-    make_dedup_weights_sql,
 )
 
 QUERIES.update(ROUND23_QUERIES)
-# threshold 0.5 — MUST match cur_dedup_weights's Spark-side pairs
-ORACLES["cur_dedup_weights"] = make_dedup_weights_sql(_jaccard_pairs_sql(0.5))
+ORACLES.update(ROUND23_ORACLES)
 
 from atd_data_lake_spark.round24_queries import (  # noqa: E402
     ROUND24_ORACLES,
@@ -2241,14 +1964,9 @@ from atd_data_lake_spark.round35_queries import (  # noqa: E402
 QUERIES.update(ROUND35_QUERIES)
 ORACLES.update(ROUND35_ORACLES)
 
-from atd_data_lake_spark.round33_queries import (  # noqa: E402
-    DEDUP_EDIT_DISTANCE_SQL as _ED_PAIR_SQL,
-)
 from atd_data_lake_spark.round36_queries import (  # noqa: E402
     ROUND36_ORACLES,
     ROUND36_QUERIES,
-    _er_entities_sql,
-    _minhash_eval_sql,
 )
 
 QUERIES.update(ROUND36_QUERIES)
@@ -2319,15 +2037,6 @@ QUERIES.update(ROUND46_QUERIES)
 # deferred builder: the composite oracle reuses this module's
 # _text_profile_sql/_bucket_sql, which exist by this point of the import
 ORACLES.update(round46_oracles())
-# assembled here, where the shared jaccard SQL builder lives: the
-# prefix-filter path must agree with the SAME exact-Jaccard pair SQL
-# the inverted-index path is checked against
-ORACLES["dedup_jaccard_prefix"] = (
-    _jaccard_pairs_sql(0.5) + " ORDER BY id_a, id_b"
-)
-# assembled here, where the shared pair/jaccard SQL builders live
-ORACLES["er_canonical_entities"] = _er_entities_sql(_ED_PAIR_SQL)
-ORACLES["dedup_minhash_eval"] = _minhash_eval_sql(_jaccard_pairs_sql(0.5))
 
 # ---------------------------------------------------------------------------
 # Driver sweep ordering: the external correctness driver checks the registry

@@ -8,6 +8,9 @@ engine's exact-sum discipline (evt_value_correlation): each (x, y) term
 is an IEEE-deterministic function of the integer (rank, count) pair,
 rounded to 12 dp and DECIMAL-summed, so the fit is bit-identical under
 any partitioning.
+
+The round's ``emb_drift_shift`` and ``evt_abtest_lift`` are here too;
+its ``dedup_cross_source_report`` lives in ``dedup_queries``.
 """
 
 from __future__ import annotations
@@ -300,78 +303,10 @@ FROM wide
 """
 
 
-# ---------------------------------------------------------------------------
-# dedup_cross_source_report — where the near-dup burden lives
-# ---------------------------------------------------------------------------
-
-
-def dedup_cross_source_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pair counts per (source_a, source_b): the report that
-    decides dedup strategy — within-source duplication is fixed by
-    per-source dedup before mixing, cross-source duplication (mirrors,
-    syndication) needs the global pass.
-
-    Composes the engine's own Jaccard pair list (∝ near-dups, not
-    corpus²) with two broadcast-sized id→source lookups; sources are
-    canonically ordered so (a,b) and (b,a) collapse.  Output ≤
-    |sources|² rows at any corpus size.
-    """
-    from atd_data_lake_spark.operators.dedup import ngram_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    pairs = ngram_jaccard_pairs(
-        d.select("doc_id", "text"), n=3, threshold=0.5
-    )
-    src = d.select("doc_id", "source")
-    enriched = (
-        pairs.join(
-            F.broadcast(src.withColumnRenamed("doc_id", "id_a").withColumnRenamed("source", "_sa")),
-            "id_a",
-        )
-        .join(
-            F.broadcast(src.withColumnRenamed("doc_id", "id_b").withColumnRenamed("source", "_sb")),
-            "id_b",
-        )
-    )
-    return (
-        enriched.select(
-            F.least("_sa", "_sb").alias("source_a"),
-            F.greatest("_sa", "_sb").alias("source_b"),
-        )
-        .groupBy("source_a", "source_b")
-        .agg(F.count("*").alias("n_pairs"))
-        .withColumn(
-            "cross_source", F.col("source_a") != F.col("source_b")
-        )
-        .orderBy("source_a", "source_b")
-    )
-
-
-def make_cross_source_sql(jaccard_sql: str) -> str:
-    """Oracle builder (composed in queries.py where DEDUP_JACCARD_SQL
-    is in scope)."""
-    return f"""
-WITH pairs AS ({jaccard_sql}),
-enriched AS (
-    SELECT least(da.source, db.source) AS source_a,
-           greatest(da.source, db.source) AS source_b
-    FROM pairs p
-    JOIN documents da ON p.id_a = da.doc_id
-    JOIN documents db ON p.id_b = db.doc_id
-)
-SELECT source_a, source_b, count(*) AS n_pairs,
-       source_a != source_b AS cross_source
-FROM enriched
-GROUP BY 1, 2
-ORDER BY 1, 2
-"""
-
-
 ROUND10_QUERIES = {
     "text_zipf_fit": text_zipf_fit,
     "emb_drift_shift": emb_drift_shift,
     "evt_abtest_lift": evt_abtest_lift,
-    "dedup_cross_source_report": dedup_cross_source_report,
 }
 ROUND10_ORACLES = {
     "text_zipf_fit": TEXT_ZIPF_FIT_SQL,

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from atd_data_lake_spark.functions.money import D2
 from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
@@ -436,7 +437,7 @@ def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-dependent — useless for cross-engine hashing.
     """
     li = _t(spark, sf_dir, "lineitem")
-    x = F.col("l_extendedprice").cast("decimal(12,2)")
+    x = F.col("l_extendedprice").cast(D2)
     agg = li.groupBy("l_returnflag").agg(
         F.count("*").cast("double").alias("n"),
         F.sum(x).cast("double").alias("s1"),

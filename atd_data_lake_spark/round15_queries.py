@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from atd_data_lake_spark.functions.money import D2
 from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
@@ -65,7 +66,7 @@ def w4_value_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.col("value").cast("decimal(12,2)").alias("v"),
+        F.col("value").cast(D2).alias("v"),
         us.alias("_us"),
     )
     w_rows = (

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.dedup_queries import components_sql, jaccard_pairs_sql
 from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
@@ -47,24 +48,9 @@ def cur_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def make_dedup_weights_sql(jaccard_sql: str) -> str:
-    """Oracle builder (wired in queries.py where DEDUP_JACCARD_SQL
-    lives): transitive-closure components over the identical pair SQL,
-    then group sizes and 1/size weights."""
-    return f"""
-WITH RECURSIVE pairs AS ({jaccard_sql}),
-sym AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION SELECT id_b, id_a FROM pairs
-),
-reach AS (
-    SELECT u, v FROM sym
-    UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u
-),
-comp AS (
-    SELECT u AS doc_id, least(u, min(v)) AS component
-    FROM reach GROUP BY u
-),
+# Oracle: transitive-closure components over the identical pair SQL (at
+# the Spark side's threshold 0.5), then group sizes and 1/size weights.
+CUR_DEDUP_WEIGHTS_SQL = components_sql(jaccard_pairs_sql(0.5)) + """,
 grp AS (
     SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_key
     FROM documents d LEFT JOIN comp c USING (doc_id)
@@ -80,3 +66,4 @@ ORDER BY g.doc_id
 
 
 ROUND23_QUERIES = {"cur_dedup_weights": cur_dedup_weights}
+ROUND23_ORACLES = {"cur_dedup_weights": CUR_DEDUP_WEIGHTS_SQL}

@@ -22,12 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.io.reader import read_table_utc as _t
+
 
 def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(c_custkey, recency_days, frequency, monetary, r_q, f_q, m_q,
     segment) — RFM quartile scores per ordering customer."""
-    from atd_data_lake_spark.queries import _t
-
     o = _t(spark, sf_dir, "orders")
     profile = o.groupBy("o_custkey").agg(
         F.max(F.col("o_orderdate").cast("date")).alias("_last"),

@@ -26,6 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.functions.money import D2
+from atd_data_lake_spark.io.reader import read_table_utc as _t
+
 _SLIDE_MIN = 10
 _WIN_MIN = 30
 _GAP_SECONDS = 1800
@@ -34,12 +37,10 @@ _GAP_SECONDS = 1800
 def evt_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(window_start, event_type, n_events, total_value) per 30-minute
     window sliding every 10 minutes."""
-    from atd_data_lake_spark.queries import _t
-
     ev = _t(spark, sf_dir, "events").select(
         F.to_utc_timestamp("ts", "UTC").alias("its"),
         "event_type",
-        F.col("value").cast("decimal(12,2)").alias("v"),
+        F.col("value").cast(D2).alias("v"),
     )
     return (
         ev.groupBy(
@@ -80,8 +81,6 @@ ORDER BY window_start, event_type
 def evt_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, session_start, last_seen, n_events) — built-in
     session_window sessions per user, 30-minute gap."""
-    from atd_data_lake_spark.queries import _t
-
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.to_utc_timestamp("ts", "UTC").alias("its")
     )

@@ -18,7 +18,10 @@ their oracles synthesize one deterministically from ``(doc_id, source)``
 — same literal expression on both sides; the operators under test are
 the parse/extract/rollup stages, not the synthesis.
 
-All three carry full DuckDB oracles; every computed column is aliased
+All three carry full DuckDB oracles (as do the round's other entries
+here); the round's ``dedup_url_canonical`` lives in ``dedup_queries``
+and reuses this module's synthetic-URL fixture (``_with_url``,
+``_url_sql``, ``_URL_PARTS_SQL``); every computed column is aliased
 identically on both sides, outputs are scalars only (no DECIMAL — the
 driver-hasher contract).
 """
@@ -362,55 +365,6 @@ GROUP BY d.source
 
 
 # ---------------------------------------------------------------------------
-# dedup_url_canonical — canonical-URL dedup (pre-fetch dedup)
-# ---------------------------------------------------------------------------
-
-
-def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-URL dedup: canonicalize (lowercase host, strip
-    ``utm_*`` params), group pages by canonical URL, keep the smallest
-    doc_id — the crawl-frontier dedup that runs BEFORE any content
-    dedup.  One groupBy on the canonical key; map-side combine absorbs
-    the duplicates."""
-    from atd_data_lake_spark.operators.urls import (
-        url_parts,
-        with_query_params,
-    )
-
-    d = _with_url(_t(spark, sf_dir, "documents").select("doc_id", "source"))
-    p = with_query_params(url_parts(d, "url"))
-    canon = F.concat(
-        F.lit("https://"),
-        F.col("host"),
-        F.col("path"),
-        F.when(
-            F.col("clean_query") != "", F.concat(F.lit("?"), F.col("clean_query"))
-        ).otherwise(F.lit("")),
-    )
-    return p.groupBy(canon.alias("canonical_url")).agg(
-        F.count("*").alias("n_docs"),
-        F.min("doc_id").alias("kept_doc_id"),
-    )
-
-
-DEDUP_URL_CANONICAL_SQL = f"""
-WITH u AS ({_url_sql()}),
-{_URL_PARTS_SQL}
-SELECT 'https://' || host || path ||
-       CASE WHEN cq <> '' THEN '?' || cq ELSE '' END AS canonical_url,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       min(doc_id) AS kept_doc_id
-FROM (
-    SELECT *,
-        coalesce(array_to_string(list_filter(string_split(query_string, '&'),
-            p -> p <> '' AND p NOT LIKE 'utm\\_%' ESCAPE '\\'), '&'), '') AS cq
-    FROM dom
-)
-GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------------------
 # text_line_dedup — corpus-level line dedup (RefinedWeb/CCNet pass)
 # ---------------------------------------------------------------------------
 
@@ -597,7 +551,6 @@ ROUND29_QUERIES = {
     "url_domain_extract": url_domain_extract,
     "url_domain_rollup": url_domain_rollup,
     "url_domain_gate": url_domain_gate,
-    "dedup_url_canonical": dedup_url_canonical,
     "text_line_dedup": text_line_dedup,
     "sim_ivf_upsert": sim_ivf_upsert,
     "sim_ann_ivf_recall": sim_ann_ivf_recall,
@@ -607,7 +560,6 @@ ROUND29_ORACLES = {
     "url_domain_extract": URL_DOMAIN_EXTRACT_SQL,
     "url_domain_rollup": URL_DOMAIN_ROLLUP_SQL,
     "url_domain_gate": URL_DOMAIN_GATE_SQL,
-    "dedup_url_canonical": DEDUP_URL_CANONICAL_SQL,
     "text_line_dedup": TEXT_LINE_DEDUP_SQL,
     "sim_ivf_upsert": SIM_IVF_UPSERT_SQL,
     "sim_ann_ivf_recall": SIM_ANN_IVF_RECALL_SQL,

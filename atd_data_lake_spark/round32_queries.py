@@ -1,12 +1,5 @@
-"""Round-32 query additions — substring-level dedup + DSIR selection.
+"""Round-32 query addition — DSIR selection.
 
-- ``dedup_repeated_spans`` — cross-document EXACT-substring detection
-  (Lee et al., "Deduplicating Training Data Makes Language Models
-  Better", ACL'22): maximal repeated token spans ≥ 12 tokens between
-  distinct documents, via windowed 52-bit md5 hashes → df-pruned
-  inverted index → diagonal gaps-and-islands merge
-  (``operators/dedup.repeated_span_pairs``).  The memorization-risk
-  class whole-document dedup cannot see.
 - ``cur_dsir_resample`` — DSIR-style importance resampling (Xie et al.
   2023): hashed-unigram bucket counts estimate a target (lang='en')
   and raw feature distribution; each document scores the decimal-exact
@@ -15,7 +8,9 @@
   ``min(1, w)`` — the standard quality-targeting selector beside the
   mixture/quota/gate curation ops.
 
-Both carry full DuckDB oracles.
+It carries a full DuckDB oracle.  The round's substring-dedup queries
+(``dedup_repeated_spans``, ``dedup_incremental_spans``) live in
+``dedup_queries``.
 """
 
 from __future__ import annotations
@@ -24,81 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from atd_data_lake_spark.io.reader import read_table_utc as _t
-
-
-# ---------------------------------------------------------------------------
-# dedup_repeated_spans
-# ---------------------------------------------------------------------------
-
-_SPAN_WINDOW = 8
-_SPAN_MIN = 12
-_SPAN_MAX_DF = 20
-
-
-def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal cross-document repeated token spans (≥ 12 tokens).
-
-    100 TB shape: see ``operators/dedup.repeated_span_pairs`` — 8-byte
-    window hashes on every exchange, df-cutoff before the self-join
-    bounds candidates at ``max_df²`` per hash, islands shuffle once on
-    the (doc_a, doc_b) pair key (volume ∝ true duplication).
-    """
-    from atd_data_lake_spark.operators.dedup import repeated_span_pairs
-
-    return repeated_span_pairs(
-        _t(spark, sf_dir, "documents"),
-        window=_SPAN_WINDOW,
-        min_span=_SPAN_MIN,
-        max_df=_SPAN_MAX_DF,
-    ).orderBy("doc_a", "doc_b", "start_a", "start_b")
-
-
-DEDUP_REPEATED_SPANS_SQL = f"""
-WITH t AS (
-    SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-),
-w AS (
-    SELECT doc_id,
-           unnest(generate_series(
-               1, greatest(len(ts) - {_SPAN_WINDOW - 1}, 0))) AS pos,
-           ts
-    FROM t
-),
-v AS (
-    SELECT doc_id, pos,
-           ('0x' || substr(md5(array_to_string(
-               ts[pos:pos + {_SPAN_WINDOW - 1}], ' ')), 1, 13))::UBIGINT
-               AS wh
-    FROM w
-),
-keep AS (
-    SELECT wh FROM v GROUP BY wh
-    HAVING count(*) >= 2 AND count(*) <= {_SPAN_MAX_DF}
-),
-vk AS (SELECT v.* FROM v JOIN keep USING (wh)),
-pairs AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           a.pos AS pa, b.pos AS pb
-    FROM vk a JOIN vk b USING (wh)
-    WHERE a.doc_id < b.doc_id
-),
-isl AS (
-    SELECT doc_a, doc_b, pa, pb,
-           pa - row_number() OVER (
-               PARTITION BY doc_a, doc_b, pa - pb ORDER BY pa) AS grp
-    FROM pairs
-),
-spans AS (
-    SELECT doc_a, doc_b,
-           min(pa) AS start_a, min(pb) AS start_b,
-           max(pa) - min(pa) + {_SPAN_WINDOW} AS span_tokens
-    FROM isl GROUP BY doc_a, doc_b, pa - pb, grp
-)
-SELECT doc_a, doc_b, start_a, start_b, span_tokens
-FROM spans
-WHERE span_tokens >= {_SPAN_MIN}
-ORDER BY doc_a, doc_b, start_a, start_b
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -216,50 +136,10 @@ ORDER BY doc_id
 """
 
 
-# ---------------------------------------------------------------------------
-# dedup_incremental_spans
-# ---------------------------------------------------------------------------
-
-
-def dedup_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental substring dedup: the batch (doc_id % 10 = 7) pairs
-    against the standing corpus and itself — the standing side never
-    self-joins, and standing postings prune to batch-touched window
-    hashes before the df count, so per-batch cost tracks the batch
-    (``operators/dedup.incremental_repeated_spans``).  Output = the
-    full-corpus span set restricted to pairs with a new member, which is
-    what the oracle checks."""
-    from atd_data_lake_spark.operators.dedup import incremental_repeated_spans
-
-    d = _t(spark, sf_dir, "documents")
-    new = d.filter(F.col("doc_id") % 10 == 7)
-    standing = d.filter(F.col("doc_id") % 10 != 7)
-    return incremental_repeated_spans(
-        standing,
-        new,
-        window=_SPAN_WINDOW,
-        min_span=_SPAN_MIN,
-        max_df=_SPAN_MAX_DF,
-    ).orderBy("doc_a", "doc_b", "start_a", "start_b")
-
-
-DEDUP_INCREMENTAL_SPANS_SQL = (
-    DEDUP_REPEATED_SPANS_SQL.replace(
-        "WHERE span_tokens >= " + str(_SPAN_MIN),
-        f"WHERE span_tokens >= {_SPAN_MIN}\n"
-        "  AND (doc_a % 10 = 7 OR doc_b % 10 = 7)",
-    )
-)
-
-
 ROUND32_QUERIES = {
-    "dedup_repeated_spans": dedup_repeated_spans,
     "cur_dsir_resample": cur_dsir_resample,
-    "dedup_incremental_spans": dedup_incremental_spans,
 }
 
 ROUND32_ORACLES = {
-    "dedup_repeated_spans": DEDUP_REPEATED_SPANS_SQL,
     "cur_dsir_resample": CUR_DSIR_RESAMPLE_SQL,
-    "dedup_incremental_spans": DEDUP_INCREMENTAL_SPANS_SQL,
 }

@@ -1,10 +1,6 @@
-"""Round-33 query additions — edit-distance dedup, PQ-ADC search,
-temperature sampling, bigram LM scoring, NB classifier eval.
+"""Round-33 query additions — PQ-ADC search, temperature sampling,
+bigram LM scoring, NB classifier eval.
 
-- ``dedup_edit_distance`` — character-level near-duplicate titles via
-  PassJoin (Li et al., ICDE'11): segment-pigeonhole equi-join generates
-  candidates, exact ``levenshtein`` verifies — never all-pairs.  A
-  planted one-edit twin cohort guarantees true ed=1 pairs exist.
 - ``sim_ann_pq_adc`` — asymmetric-distance (ADC) approximate top-k over
   PQ codes: corpus vectors are encoded once with the injected 16x8
   codebooks (the ``emb_pq_codes`` model), queries scan a 8x16 lookup
@@ -27,7 +23,8 @@ temperature sampling, bigram LM scoring, NB classifier eval.
   plus its calibration readout (the FineWeb-Edu/DCLM filter shape, with
   the model trained by the plan instead of injected).
 
-All five carry full DuckDB oracles.
+All four carry full DuckDB oracles.  The round's edit-distance dedup
+(``dedup_edit_distance``, PassJoin) lives in ``dedup_queries``.
 """
 
 from __future__ import annotations
@@ -41,127 +38,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from atd_data_lake_spark.io.reader import read_table_utc as _t
-
-
-# ---------------------------------------------------------------------------
-# dedup_edit_distance
-# ---------------------------------------------------------------------------
-
-_ED_TITLE_TOKENS = 8
-_ED_MAX_DIST = 1
-
-
-def edit_distance_corpus(d: DataFrame) -> DataFrame:
-    """(id, title) corpus shared by ``dedup_edit_distance`` AND
-    round36's ``er_canonical_entities`` — BOTH oracles embed the same
-    pair SQL (``DEDUP_EDIT_DISTANCE_SQL``), so this construction must
-    stay single-sourced: titles = first 8 tokens; every doc_id % 100
-    == 0 gets a one-edit twin at id+20_000_000 (first char → 'z')."""
-    title = F.array_join(
-        F.slice(F.split("text", " "), 1, _ED_TITLE_TOKENS), " "
-    )
-    base = d.select(F.col("doc_id").alias("id"), title.alias("title"))
-    twins = (
-        d.filter(F.col("doc_id") % 100 == 0)
-        .select((F.col("doc_id") + 20_000_000).alias("id"), title.alias("t0"))
-        .select(
-            "id",
-            F.concat(
-                F.lit("z"), F.expr("substring(t0, 2, length(t0) - 1)")
-            ).alias("title"),
-        )
-    )
-    return base.unionByName(twins)
-
-
-def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Title pairs within Levenshtein distance 1 over documents plus a
-    planted one-edit twin cohort (every doc_id % 100 == 0 gets a twin at
-    id+20_000_000 whose title has its first character flipped to 'z').
-
-    100 TB shape: see ``operators/fuzzy.passjoin_pairs`` — candidates
-    come from an equi-join on (length, segment index, ~L/2-char
-    segment), only candidates pay the verify; exchanges carry short
-    title segments, never document text.
-    """
-    from atd_data_lake_spark.operators.fuzzy import passjoin_pairs
-
-    corpus = edit_distance_corpus(_t(spark, sf_dir, "documents"))
-    return passjoin_pairs(
-        corpus, id_col="id", str_col="title", max_dist=_ED_MAX_DIST
-    ).orderBy("id_a", "id_b")
-
-
-DEDUP_EDIT_DISTANCE_SQL = f"""
-WITH base AS (
-    SELECT doc_id AS id,
-           array_to_string((string_split(text, ' '))[1:{_ED_TITLE_TOKENS}],
-                           ' ') AS title
-    FROM documents
-),
-twins AS (
-    SELECT id + 20000000 AS id,
-           'z' || substr(title, 2, length(title) - 1) AS title
-    FROM base WHERE id % 100 = 0
-),
-tl AS (
-    SELECT id, title, length(title) AS L
-    FROM (SELECT * FROM base UNION ALL SELECT * FROM twins)
-    WHERE title IS NOT NULL
-),
-akeys AS (
-    -- only strings of length >= k can be INDEXED (k non-empty
-    -- segments); shorter strings still PROBE via bgrid below and the
-    -- short-short class joins directly — mirroring passjoin_pairs
-    -- exactly (operators/fuzzy.py; ADVICE r7: the old >= 2 filter here
-    -- dropped short strings from the probe side too, a latent
-    -- divergence on corpora with < 2-char titles)
-    SELECT id AS a_id, title AS a_s, L AS a_len, seg.i,
-           substr(title,
-                  1 + seg.i * (L // 2) + greatest(0, seg.i - (2 - L % 2)),
-                  (L // 2) + (CASE WHEN seg.i >= 2 - L % 2
-                              THEN 1 ELSE 0 END)) AS seg
-    FROM tl, (SELECT unnest(range(2)) AS i) seg
-    WHERE L >= 2
-),
-bgrid AS (
-    SELECT b.id AS b_id, b.title AS b_s, b.L AS Lb,
-           la.La, seg.i, sh.sh,
-           1 + seg.i * (la.La // 2)
-             + greatest(0, seg.i - (2 - la.La % 2)) + sh.sh AS p,
-           (la.La // 2) + (CASE WHEN seg.i >= 2 - la.La % 2
-                           THEN 1 ELSE 0 END) AS slen
-    FROM tl b,
-         LATERAL (SELECT unnest(generate_series(b.L - 1, b.L + 1)) AS La) la,
-         (SELECT unnest(range(2)) AS i) seg,
-         (SELECT unnest(generate_series(-1, 1)) AS sh) sh
-    WHERE la.La >= 2
-),
-bkeys AS (
-    SELECT b_id, b_s, La AS a_len, i, substr(b_s, p, slen) AS seg
-    FROM bgrid
-    WHERE p >= 1 AND p + slen - 1 <= length(b_s)
-),
-cand AS (
-    SELECT least(a.a_id, b.b_id) AS id_a,
-           greatest(a.a_id, b.b_id) AS id_b,
-           levenshtein(a.a_s, b.b_s) AS ed
-    FROM akeys a JOIN bkeys b USING (a_len, i, seg)
-    WHERE a.a_id <> b.b_id
-      AND levenshtein(a.a_s, b.b_s) <= {_ED_MAX_DIST}
-),
--- short-short completion: both lengths <= d ⇒ ed <= d by definition
--- (passjoin_pairs emits every such pair unverified; so must the oracle)
-shorts AS (SELECT id, title FROM tl WHERE L < 2),
-short_pairs AS (
-    SELECT a.id AS id_a, b.id AS id_b,
-           levenshtein(a.title, b.title) AS ed
-    FROM shorts a JOIN shorts b ON a.id < b.id
-)
-SELECT DISTINCT id_a, id_b, CAST(ed AS INTEGER) AS edit_dist
-FROM (SELECT * FROM cand UNION ALL SELECT * FROM short_pairs)
-ORDER BY id_a, id_b
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -688,7 +564,6 @@ ORDER BY source
 # ---------------------------------------------------------------------------
 
 ROUND33_QUERIES = {
-    "dedup_edit_distance": dedup_edit_distance,
     "sim_ann_pq_adc": sim_ann_pq_adc,
     "cur_temperature_sample": cur_temperature_sample,
     "text_bigram_logprob": text_bigram_logprob,
@@ -696,7 +571,6 @@ ROUND33_QUERIES = {
 }
 
 ROUND33_ORACLES = {
-    "dedup_edit_distance": DEDUP_EDIT_DISTANCE_SQL,
     "sim_ann_pq_adc": SIM_ANN_PQ_ADC_SQL,
     "cur_temperature_sample": CUR_TEMPERATURE_SAMPLE_SQL,
     "text_bigram_logprob": TEXT_BIGRAM_LOGPROB_SQL,

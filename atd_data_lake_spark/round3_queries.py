@@ -28,10 +28,9 @@ get right at 100 TB, not just another query:
   Python, zero shuffle, scales linearly with the scan.
 - ``cur_token_budget`` — greedy best-first selection under a
   per-source TOKEN budget (running-sum window).
-- ``dedup_incremental_batch`` — continuous-ingest dedup: the J1
-  anti-join pattern on content hashes.
 
-The round's TPC-H shapes (q10/q13/q15/q19) live in ``tpch_queries``.
+The round's TPC-H shapes (q10/q13/q15/q19) live in ``tpch_queries`` and
+its ``dedup_incremental_batch`` in ``dedup_queries``.
 
 Decimal/epoch exactness rules: money through ``functions.money``'s
 exact-decimal-sum construction, time through integer epoch
@@ -363,56 +362,6 @@ WITH t AS (
 SELECT doc_id, source, n_tokens, cum_tokens
 FROM w WHERE cum_tokens <= 2000
 ORDER BY source, doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# dedup_incremental_batch — new-batch dedup against a standing corpus
-# ---------------------------------------------------------------------------
-
-
-def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous-ingest dedup: a new crawl batch survives iff its
-    content hash is (a) unseen in the standing corpus and (b) the first
-    occurrence within the batch (min doc_id).
-
-    The J1 incremental-anti-join pattern applied to content identity:
-    the standing side reduces to its DISTINCT hash column before the
-    join — at 100 TB that set is corpus-sized (NOT broadcastable), but
-    only 16-byte hashes ever shuffle, never text, and the anti-join is
-    a plain hash-partitioned exchange both sides prune to one column.
-    In the lake layout the standing hashes live as a maintained
-    fingerprint table, so the per-batch cost is O(batch + hash column
-    scan), not a re-hash of the corpus.  Split here is doc_id < 400 = standing,
-    ≥ 400 = new batch — a stand-in for the date-partition boundary a
-    real lake would prune on.
-    """
-    d = _t(spark, sf_dir, "documents").withColumn("_h", F.md5("text"))
-    standing = d.filter(F.col("doc_id") < 400).select("_h").distinct()
-    batch = d.filter(F.col("doc_id") >= 400)
-    first_in_batch = batch.groupBy("_h").agg(F.min("doc_id").alias("doc_id"))
-    return (
-        first_in_batch.join(standing, "_h", "left_anti")
-        .join(batch.select("doc_id", "source", "n_chars"), "doc_id")
-        .select("doc_id", "source", "n_chars", F.col("_h").alias("content_hash"))
-        .orderBy("doc_id")
-    )
-
-
-DEDUP_INCREMENTAL_SQL = """
-WITH d AS (SELECT doc_id, source, n_chars, md5(text) AS content_hash
-           FROM documents),
-standing AS (SELECT DISTINCT content_hash FROM d WHERE doc_id < 400),
-batch AS (SELECT * FROM d WHERE doc_id >= 400),
-firsts AS (
-  SELECT content_hash, min(doc_id) AS doc_id FROM batch GROUP BY content_hash
-)
-SELECT b.doc_id, b.source, b.n_chars, b.content_hash
-FROM batch b
-JOIN firsts f ON b.doc_id = f.doc_id
-WHERE NOT EXISTS (SELECT 1 FROM standing s
-                  WHERE s.content_hash = b.content_hash)
-ORDER BY b.doc_id
 """
 
 
@@ -1093,7 +1042,6 @@ ROUND3_QUERIES = {
     "emb_int8_quantize": emb_int8_quantize,
     "j_asof_nearest": j_asof_nearest,
     "cur_token_budget": cur_token_budget,
-    "dedup_incremental_batch": dedup_incremental_batch,
     "evt_json_extract": evt_json_extract,
     "evt_pivot": evt_pivot,
     "li_unpivot": li_unpivot,
@@ -1116,7 +1064,6 @@ ROUND3_ORACLES = {
     "emb_int8_quantize": EMB_INT8_QUANTIZE_SQL,
     "j_asof_nearest": J_ASOF_NEAREST_SQL,
     "cur_token_budget": CUR_TOKEN_BUDGET_SQL,
-    "dedup_incremental_batch": DEDUP_INCREMENTAL_SQL,
     "evt_json_extract": EVT_JSON_EXTRACT_SQL,
     "evt_pivot": EVT_PIVOT_SQL,
     "li_unpivot": LI_UNPIVOT_SQL,

@@ -1,6 +1,7 @@
 """Round-42 query additions — sketch-backed membership and frequency,
 the constant-state generalizations of the exact decontamination and
-heavy-hitter operators.
+heavy-hitter operators.  (The round's prefix-filter Jaccard path,
+``dedup_jaccard_prefix``, lives in ``dedup_queries``.)
 
 - ``cur_bloom_decontam`` — benchmark decontamination through a BLOOM
   bitmap instead of the exact broadcast shingle set
@@ -230,38 +231,12 @@ ORDER BY user_id
 """
 
 
-# ---------------------------------------------------------------------------
-# dedup_jaccard_prefix — the PPJoin/AllPairs candidate path, first-class
-# ---------------------------------------------------------------------------
-
-
-def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Jaccard ≥ 0.5 pairs via the PREFIX-FILTER candidate path
-    (``ngram_jaccard_pairs(prefix_filter=True)`` — PPJoin/AllPairs
-    family): shingles order rarest-first and only each doc's first
-    |S| − ⌈t·|S|⌉ + 1 postings self-join, so corpus-hot shingles never
-    generate pairs.  Result-identical to the inverted-index path (the
-    equivalence test in test_dedup_scale.py) and to the shared exact
-    Jaccard oracle — this entry gives the candidate strategy its own
-    driver verification.  The Zipf-vs-uniform cost trade is measured
-    and documented in the operator docstring (operators/dedup.py)."""
-    from atd_data_lake_spark.operators.dedup import ngram_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(
-        d, n=3, threshold=0.5, prefix_filter=True
-    ).orderBy("id_a", "id_b")
-
-
 ROUND42_QUERIES = {
     "cur_bloom_decontam": cur_bloom_decontam,
     "agg_countmin_user_counts": agg_countmin_user_counts,
-    "dedup_jaccard_prefix": dedup_jaccard_prefix,
 }
 
 ROUND42_ORACLES = {
     "cur_bloom_decontam": CUR_BLOOM_DECONTAM_SQL,
     "agg_countmin_user_counts": AGG_COUNTMIN_SQL,
-    # dedup_jaccard_prefix assembled in queries.py, where the shared
-    # jaccard SQL builder lives
 }

@@ -28,6 +28,9 @@ shuffle md5-bucket expression on the component id.  Composing also
 surfaces what per-operator queries cannot: without the shared frame
 this DAG would shingle the corpus twice (decontam + dedup) — the
 redundant-scan class VERDICT r8 told this round to remove.
+
+The round's market-basket queries (``mb_sequential_rules``,
+``mb_affinity_npmi``) live in ``basket_queries``.
 """
 
 from __future__ import annotations
@@ -694,71 +697,6 @@ FROM terms
 
 
 # ---------------------------------------------------------------------------
-# mb_sequential_rules — next-event transition rules
-# ---------------------------------------------------------------------------
-
-
-def mb_sequential_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential association rules over per-user event streams:
-    consecutive (prev_type → next_type) transitions ordered by
-    (ts, event_id), with support and confidence — the market-basket
-    family's temporal cousin (``mb_copurchase_lift`` without the
-    order-blindness).
-
-    100 TB shape: ONE per-user window (lead over the user's timeline —
-    the sessionize exchange) feeds one map-side-combined pair count;
-    confidence joins the ≤|types|² pair frame against its ≤|types|
-    margin (broadcast).  Ties broken by event_id so both engines see
-    the identical sequence.
-    """
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        ev.select(
-            F.col("event_type").alias("prev_type"),
-            F.lead("event_type").over(w).alias("next_type"),
-        )
-        .filter(F.col("next_type").isNotNull())
-        .groupBy("prev_type", "next_type")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    margin = trans.groupBy("prev_type").agg(
-        F.sum("n").cast("long").alias("n_prev")
-    )
-    return (
-        trans.join(F.broadcast(margin), "prev_type")
-        .select(
-            "prev_type",
-            "next_type",
-            "n",
-            F.round(F.col("n") / F.col("n_prev"), 6).alias("confidence"),
-        )
-        .orderBy("prev_type", "next_type")
-    )
-
-
-MB_SEQUENTIAL_RULES_SQL = """
-WITH seq AS (
-    SELECT event_type AS prev_type,
-           lead(event_type) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS next_type
-    FROM events
-),
-trans AS (
-    SELECT prev_type, next_type, count(*) AS n
-    FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2
-),
-margin AS (SELECT prev_type, sum(n) AS n_prev FROM trans GROUP BY 1)
-SELECT t.prev_type, t.next_type, CAST(t.n AS BIGINT) AS n,
-       round(t.n / CAST(m.n_prev AS DOUBLE), 6) AS confidence
-FROM trans t JOIN margin m USING (prev_type)
-ORDER BY prev_type, next_type
-"""
-
-
-# ---------------------------------------------------------------------------
 # sim_maxdot_topk — brute-force maximum-inner-product search
 # ---------------------------------------------------------------------------
 
@@ -1115,124 +1053,17 @@ ORDER BY month
 """
 
 
-# ---------------------------------------------------------------------------
-# mb_affinity_npmi — normalized pointwise mutual information
-# ---------------------------------------------------------------------------
-
-_NPMI_MIN_N = 5
-
-
-def mb_affinity_npmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 part pairs by NORMALIZED PMI over basket co-occurrence:
-    npmi = ln(p(a,b)/(p(a)p(b))) / −ln(p(a,b)) ∈ [−1, 1] — the
-    association measure that, unlike raw lift (``mb_copurchase_lift``),
-    is comparable across support levels.  Pairs with co-count <
-    ``_NPMI_MIN_N`` are dropped (PMI is noise at tiny support).
-
-    Engine-exactness: probabilities are exact count ratios under one
-    fixed parenthesization; npmi rounded to 6 dp, ties broken (a, b).
-
-    100 TB shape: identical to the copurchase counting shape — baskets
-    collapse in one lineitem shuffle, pair counts map-side-combine, the
-    1-row basket total and the per-part margins broadcast.
-
-    r9 wave fusion (guide §1.2/§2.4): the original persisted ``baskets``
-    and paid a separate driver ``count()`` job for n_baskets before the
-    main job; n_baskets now rides as a 1-row broadcast crossJoin — one
-    job, no corpus persist, no driver action.  r10 slice rewrite (see
-    ``basket_count_slices``): the three disjoint slices aggregate
-    directly over the AQE-shared basket exchange instead of filtering a
-    3-way sentinel union whose executed plan re-evaluated every branch
-    per consumer.  The npmi expression is unchanged (same operands,
-    same parenthesization).
-    """
-    from atd_data_lake_spark.round4_queries import basket_count_slices
-
-    pair_counts, per_part_n, n_orders_1 = basket_count_slices(spark, sf_dir)
-    n_baskets = n_orders_1.select(F.col("n").alias("n_baskets"))
-    part_n = per_part_n.select(
-        F.col("a").alias("pk"), F.col("n").alias("n_p")
-    )
-    pair_n = pair_counts.select(
-        "a", "b", F.col("n").alias("n_ab")
-    ).filter(F.col("n_ab") >= _NPMI_MIN_N)
-    nb = F.col("n_baskets").cast("double")
-    p_ab = F.col("n_ab") / nb
-    npmi = F.round(
-        F.log(p_ab / ((F.col("n_a") / nb) * (F.col("n_b") / nb)))
-        / -F.log(p_ab),
-        6,
-    )
-    # both margin joins broadcast the catalog-sized margin frame.  The
-    # runtime builds the two BroadcastExchanges separately (executed-plan
-    # finding r10) and the frame is NOT persisted (see
-    # basket_count_slices), so each build re-runs the reduce-side margin
-    # slice over the shared basket exchange
-    pn = F.broadcast(part_n)
-    return (
-        pair_n.join(pn, F.col("a") == F.col("pk"))
-        .withColumnRenamed("n_p", "n_a")
-        .drop("pk")
-        .join(pn, F.col("b") == F.col("pk"))
-        .withColumnRenamed("n_p", "n_b")
-        .drop("pk")
-        .crossJoin(F.broadcast(n_baskets))
-        .select(
-            "a",
-            "b",
-            F.col("n_ab").cast("long").alias("n_ab"),
-            npmi.alias("npmi"),
-        )
-        .orderBy(F.col("npmi").desc(), "a", "b")
-        .limit(20)
-    )
-
-
-MB_AFFINITY_NPMI_SQL = f"""
-WITH b AS (
-    SELECT l_orderkey,
-           list_sort(list_distinct(list(l_partkey))) AS parts
-    FROM lineitem GROUP BY l_orderkey
-),
-nb AS (SELECT count(*) AS n FROM b),
-pairs AS (
-    SELECT t1.a, t2.b, count(*) AS n_ab
-    FROM b, UNNEST(b.parts) t1(a), UNNEST(b.parts) t2(b)
-    WHERE t1.a < t2.b
-    GROUP BY 1, 2
-    HAVING count(*) >= {_NPMI_MIN_N}
-),
-pn AS (
-    SELECT p, count(*) AS n_p
-    FROM (SELECT l_orderkey, unnest(parts) AS p FROM b)
-    GROUP BY p
-)
-SELECT pr.a, pr.b, CAST(pr.n_ab AS BIGINT) AS n_ab,
-       round(ln((pr.n_ab / CAST(nb.n AS DOUBLE))
-             / ((pa.n_p / CAST(nb.n AS DOUBLE))
-                * (pb.n_p / CAST(nb.n AS DOUBLE))))
-             / -ln(pr.n_ab / CAST(nb.n AS DOUBLE)), 6) AS npmi
-FROM pairs pr
-JOIN pn pa ON pa.p = pr.a
-JOIN pn pb ON pb.p = pr.b, nb
-ORDER BY npmi DESC, pr.a, pr.b
-LIMIT 20
-"""
-
-
 ROUND46_QUERIES = {
     "cur_full_pipeline": cur_full_pipeline,
     "dq_ks_statistic": dq_ks_statistic,
     "dq_benford_digits": dq_benford_digits,
     "text_good_turing": text_good_turing,
     "text_js_divergence": text_js_divergence,
-    "mb_sequential_rules": mb_sequential_rules,
     "sim_maxdot_topk": sim_maxdot_topk,
     "evt_funnel_conversion": evt_funnel_conversion,
     "evt_retention_cohorts": evt_retention_cohorts,
     "text_ttr_deciles": text_ttr_deciles,
     "evt_pivot_monthly": evt_pivot_monthly,
-    "mb_affinity_npmi": mb_affinity_npmi,
 }
 
 
@@ -1243,11 +1074,9 @@ def round46_oracles() -> dict[str, str]:
         "dq_benford_digits": DQ_BENFORD_SQL,
         "text_good_turing": TEXT_GOOD_TURING_SQL,
         "text_js_divergence": TEXT_JS_DIVERGENCE_SQL,
-        "mb_sequential_rules": MB_SEQUENTIAL_RULES_SQL,
         "sim_maxdot_topk": SIM_MAXDOT_SQL,
         "evt_funnel_conversion": EVT_FUNNEL_SQL,
         "evt_retention_cohorts": EVT_RETENTION_SQL,
         "text_ttr_deciles": TEXT_TTR_DECILES_SQL,
         "evt_pivot_monthly": EVT_PIVOT_MONTHLY_SQL,
-        "mb_affinity_npmi": MB_AFFINITY_NPMI_SQL,
     }

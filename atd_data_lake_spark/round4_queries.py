@@ -5,9 +5,6 @@ daily, each a distinct PLAN SHAPE the engine must get right at scale.
   distincts, min/max) unpivoted to (column, metric) rows;
 - ``dq_referential_orphans`` — FK integrity sweep via broadcast
   anti-joins, one scan per fact table;
-- ``mb_copurchase_lift`` — market-basket pair mining: the per-basket
-  self-join whose output is bounded by (items/basket)², never
-  |lineitem|²;
 - ``w3_percent_rank_cume`` — the remaining rank-family window
   functions (percent_rank / cume_dist / ntile);
 - ``evt_gap_stats`` — inter-event gap distribution per user (lag +
@@ -16,7 +13,8 @@ daily, each a distinct PLAN SHAPE the engine must get right at scale.
   higher-order functions (no Python, one skew-absorbing agg).
 
 The round's TPC-H shapes (q2/q4/q7/q8/q9/q11/q12/q16/q17/q20/q21/q22)
-live in ``tpch_queries``.  Time goes through integer epoch
+live in ``tpch_queries`` and its ``mb_copurchase_lift`` (with the shared
+basket counting source) in ``basket_queries``.  Time goes through integer epoch
 microseconds, and a ratio that is inherently fractional is a single
 floating division (not a float SUM) — both engines compute the same
 IEEE double from the same exact integers.
@@ -169,198 +167,6 @@ SELECT relation, n_orphans FROM (
   FROM orders WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)
 )
 ORDER BY relation
-"""
-
-
-# ---------------------------------------------------------------------------
-# mb_copurchase_lift — market-basket pair mining
-# ---------------------------------------------------------------------------
-
-
-def basket_count_slices(
-    spark: SparkSession, sf_dir: str, symmetric: bool = False
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The shared market-basket counting source: ``(pair_counts(a, b,
-    n), per_part(a, n), n_orders(n))`` — three DIRECT aggregates over
-    ONE shared basket subtree.
-
-    One basket collect_set shuffle, shared by all three slices through
-    AQE exchange reuse (the executed plans show ONE physical
-    ``Exchange hashpartitioning(l_orderkey)`` plus ReusedExchange per
-    consumer).  Pairs generate IN-ROW as posexplode(parts) ×
-    slice(parts, i+2, …) (generator + slice stay in whole-stage codegen
-    — measured 1.6× faster than the equivalent nested ``transform``
-    lambdas, which are interpreted per element), so candidate volume is
-    Σ(basket size choose 2), bounded by the ~4-line TPC-H basket, never
-    |lineitem|².
-
-    r10 rewrite of the r9 3-way-union-with-sentinels shape: the union
-    promised "one groupBy serves all three consumers", but the EXECUTED
-    plans (plans/r10/mb_*_executed.txt) show Catalyst pushing each
-    consumer's group-key filter into the union below the aggregate, so
-    the three slice exchanges were never reused — each consumer
-    re-evaluated ALL THREE branches (9 reduce-side basket aggregates
-    and 4 fully-discarded pair generations per query) just to keep rows
-    it then filtered out.  Computing each disjoint slice directly does
-    strictly less work per consumer while the shared basket exchange
-    still materializes once (guide §2.4 — the reuse comes from the
-    identical SCAN+groupBy subtree, not from the union).  ``per_part``
-    feeds two broadcast margin joins whose BroadcastExchanges the
-    runtime does NOT deduplicate (executed plans show two separate
-    BroadcastQueryStages) — it stays UN-persisted anyway, because a
-    cache builds from its own plan in a separate sub-execution that
-    cannot reuse the main query's basket exchange (see the inline
-    comment below); two reduce-side slice rebuilds beat one extra
-    corpus-sized shuffle.
-
-    ``symmetric=True`` (the ``mb_item_cf_topk`` form) emits BOTH
-    directions of every pair occurrence from the SAME generate chain
-    (explode of a 2-struct array — the r9 shape re-ran the whole
-    pair generation once per direction through a union) and
-    pre-partitions the stream on ``a`` so the pair aggregate's
-    hashpartitioning(a) also serves the per-item rank window downstream
-    with no further exchange.
-
-    Shared by ``mb_copurchase_lift``, ``mb_item_cf_topk`` (round 38) and
-    ``mb_affinity_npmi`` (round 46) — one definition of the pair
-    generator (r9 review finding: three copies risked silent
-    divergence)."""
-    baskets = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    ordered = baskets.select(
-        "parts", F.posexplode("parts").alias("_i", "_a")
-    ).select(
-        "_a",
-        F.explode(F.expr("slice(parts, _i + 2, size(parts))")).alias("_b"),
-    )
-    if symmetric:
-        pair_stream = ordered.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("_a").cast("long").alias("a"),
-                        F.col("_b").cast("long").alias("b"),
-                    ),
-                    F.struct(
-                        F.col("_b").cast("long").alias("a"),
-                        F.col("_a").cast("long").alias("b"),
-                    ),
-                )
-            ).alias("_p")
-        ).select("_p.a", "_p.b")
-        # hashpartitioning(a) satisfies the groupBy(a, b) clustering AND
-        # a downstream partitionBy(a) window — one exchange for both
-        pair_stream = pair_stream.repartition("a")
-    else:
-        pair_stream = ordered.select(
-            F.col("_a").cast("long").alias("a"),
-            F.col("_b").cast("long").alias("b"),
-        )
-    pair_counts = pair_stream.groupBy("a", "b").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    # NO persist on per_part: a cache builds from its OWN plan in a
-    # separate sub-execution, which re-runs the lineitem scan + basket
-    # exchange instead of reusing the main query's (verified in the
-    # executed plan: the InMemoryRelation build carried its own basket
-    # Exchange).  Un-persisted, each margin broadcast re-derives the
-    # slice through a ReusedExchange of the one basket shuffle — a
-    # reduce-side explode+agg per consumer, vs a full extra corpus
-    # shuffle at 100 TB for the cache.
-    per_part = (
-        baskets.select(F.explode("parts").alias("_a"))
-        .groupBy(F.col("_a").cast("long").alias("a"))
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    n_orders = baskets.agg(F.count("*").cast("long").alias("n"))
-    return pair_counts, per_part, n_orders
-
-
-def mb_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-50 co-purchased part pairs with support counts and lift.
-
-    Plan: NO self-join — baskets collapse to a sorted part-id array in
-    ONE shuffle (collect_set), then pairs are generated IN-ROW as
-    posexplode(parts) × slice(parts, i+2, …) — generator + slice stay
-    in whole-stage codegen (measured 1.6× faster at sf0.1 than the
-    equivalent nested ``transform`` lambdas, which are interpreted
-    per-element) — so candidate volume is Σ(basket size choose 2),
-    bounded by the ~4-line TPC-H basket, never |lineitem|².
-
-    NO corpus-sized persist: the three slices derive from ONE baskets
-    groupBy and AQE's exchange reuse materializes that lineitem shuffle
-    once (verified in the EXECUTED plan: one
-    ``Exchange hashpartitioning(l_orderkey)`` plus ReusedExchange
-    wrappers) — shuffle-file re-reads give the persist's reuse for
-    free, on disk, without pinning a multi-TB intermediate in executor
-    memory at 100 TB.  The r9→r10 slice rewrite is documented on
-    ``basket_count_slices`` (each consumer now computes only ITS slice
-    instead of re-evaluating all three union branches; the catalog-sized
-    per-part margin frame is double-broadcast and deliberately NOT
-    persisted, so this query holds no cache).
-    Lift is one IEEE division of exact bigint counts (identical both
-    engines): lift = n_pair · n_orders / (n_a · n_b)."""
-    pair_counts, per_part_n, n_orders_1 = basket_count_slices(spark, sf_dir)
-    n_orders = n_orders_1.select(F.col("n").alias("n_orders"))
-    per_part = per_part_n.select(
-        F.col("a").alias("pk"), F.col("n").alias("n_part")
-    )
-    pairs = pair_counts.select(
-        F.col("a").alias("part_a"),
-        F.col("b").alias("part_b"),
-        F.col("n").alias("n_pair"),
-    )
-    return (
-        pairs.join(
-            F.broadcast(per_part.select(F.col("pk"), F.col("n_part").alias("n_a"))),
-            F.col("part_a") == F.col("pk"),
-        )
-        .drop("pk")
-        .join(
-            F.broadcast(per_part.select(F.col("pk"), F.col("n_part").alias("n_b"))),
-            F.col("part_b") == F.col("pk"),
-        )
-        .drop("pk")
-        .crossJoin(F.broadcast(n_orders))
-        .select(
-            "part_a",
-            "part_b",
-            "n_pair",
-            "n_a",
-            "n_b",
-            F.round(
-                (F.col("n_pair") * F.col("n_orders"))
-                / (F.col("n_a") * F.col("n_b")),
-                6,
-            ).alias("lift"),
-        )
-        .orderBy(F.desc("n_pair"), "part_a", "part_b")
-        .limit(50)
-    )
-
-
-MB_COPURCHASE_SQL = """
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-per_part AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_part FROM li GROUP BY 1),
-n AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM li),
-pairs AS (
-  SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-         CAST(count(*) AS BIGINT) AS n_pair
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-)
-SELECT part_a, part_b, n_pair, pa.n_part AS n_a, pb.n_part AS n_b,
-       round(CAST(n_pair * n.n_orders AS DOUBLE)
-             / CAST(pa.n_part * pb.n_part AS DOUBLE), 6) AS lift
-FROM pairs
-JOIN per_part pa ON part_a = pa.l_partkey
-JOIN per_part pb ON part_b = pb.l_partkey, n
-ORDER BY n_pair DESC, part_a, part_b
-LIMIT 50
 """
 
 
@@ -543,7 +349,6 @@ FROM documents
 ROUND4_QUERIES = {
     "dq_profile": dq_profile,
     "dq_referential_orphans": dq_referential_orphans,
-    "mb_copurchase_lift": mb_copurchase_lift,
     "w3_percent_rank_cume": w3_percent_rank_cume,
     "evt_gap_stats": evt_gap_stats,
     "text_top_bigrams": text_top_bigrams,
@@ -553,7 +358,6 @@ ROUND4_QUERIES = {
 ROUND4_ORACLES = {
     "dq_profile": DQ_PROFILE_SQL,
     "dq_referential_orphans": DQ_ORPHANS_SQL,
-    "mb_copurchase_lift": MB_COPURCHASE_SQL,
     "w3_percent_rank_cume": W3_SQL,
     "evt_gap_stats": EVT_GAP_STATS_SQL,
     "text_top_bigrams": TEXT_TOP_BIGRAMS_SQL,

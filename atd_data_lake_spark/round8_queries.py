@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from atd_data_lake_spark.dedup_queries import components_sql
 from atd_data_lake_spark.io.reader import read_table_utc as _t
 
 
@@ -68,21 +69,8 @@ def cur_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def make_leakage_split_sql(jaccard_sql: str, bucket_sql: str) -> str:
     """Oracle builder: transitive-closure components over the identical
     pair SQL, then the identical md5-bucket thresholds on the group key.
-    (Built in queries.py where DEDUP_JACCARD_SQL / _bucket_sql live.)"""
-    return f"""
-WITH RECURSIVE pairs AS ({jaccard_sql}),
-sym AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION SELECT id_b, id_a FROM pairs
-),
-reach AS (
-    SELECT u, v FROM sym
-    UNION SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u
-),
-comp AS (
-    SELECT u AS doc_id, least(u, min(v)) AS component
-    FROM reach GROUP BY u
-),
+    (Built in queries.py, where _bucket_sql lives.)"""
+    return components_sql(jaccard_sql) + f""",
 grp AS (
     SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_key
     FROM documents d LEFT JOIN comp c USING (doc_id)
@@ -286,7 +274,7 @@ ROUND8_QUERIES = {
 }
 
 # cur_leakage_safe_split's oracle is composed in queries.py, where
-# DEDUP_JACCARD_SQL and _bucket_sql are in scope.
+# _bucket_sql is in scope.
 ROUND8_ORACLES = {
     "evt_interval_coverage": EVT_INTERVAL_COVERAGE_SQL,
     "text_token_entropy": TEXT_TOKEN_ENTROPY_SQL,

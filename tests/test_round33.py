@@ -1,7 +1,8 @@
 """Round-33 targeted tests: PassJoin edit-distance join properties,
 ADC search sanity, temperature-sampling rate law, bigram LM and NB
-classifier invariants.  Oracle value-parity for all five registered
-queries is covered by the driver sweep / test_oracle_parity."""
+classifier invariants (the dedup_edit_distance tests live in
+test_dedup.py).  Oracle value-parity for the registered queries is
+covered by the driver sweep / test_oracle_parity."""
 
 from __future__ import annotations
 
@@ -12,7 +13,6 @@ from pyspark.sql import functions as F
 from atd_data_lake_spark.operators.fuzzy import passjoin_pairs
 from atd_data_lake_spark.round33_queries import (
     cur_temperature_sample,
-    dedup_edit_distance,
     sim_ann_pq_adc,
     text_bigram_logprob,
     text_nb_langid_eval,
@@ -106,19 +106,6 @@ def test_passjoin_partition_invariance(spark):
     assert a == b and len(a) > 0
 
 
-def test_dedup_edit_distance_finds_planted_twins(spark, sf_dir):
-    out = dedup_edit_distance(spark, sf_dir).collect()
-    planted = [r for r in out if r["id_b"] >= 20_000_000]
-    # twins differ from real titles by the one flipped char
-    assert len(planted) > 0
-    assert all(r["edit_dist"] == 1 for r in planted)
-    # each twin's own source pair is among the results (a twin may ALSO
-    # pair with other docs whose titles equal its source's — fine)
-    pair_set = {(r["id_a"], r["id_b"]) for r in planted}
-    sources = {r["id_b"] - 20_000_000 for r in planted}
-    assert any((s, s + 20_000_000) in pair_set for s in sources)
-
-
 # ---------------------------------------------------------------------------
 # ADC
 # ---------------------------------------------------------------------------
@@ -195,39 +182,3 @@ def test_nb_langid_confusion_adds_up(spark, sf_dir):
     for r in rows:
         assert r["tp"] + r["fp"] + r["fn"] + r["tn"] == r["n_docs"]
         assert 0.0 <= r["accuracy"] <= 1.0
-
-
-def test_edit_distance_oracle_handles_short_titles(spark, tmp_path):
-    """ADVICE r7: the oracle used to drop length<2 titles from BOTH join
-    sides while passjoin_pairs lets them probe and completes the
-    short-short class — latent divergence on any corpus with short
-    titles.  A synthetic corpus with empty/1-char/2-char titles must now
-    agree exactly."""
-    import duckdb as _duckdb
-
-    from atd_data_lake_spark.round33_queries import (
-        DEDUP_EDIT_DISTANCE_SQL,
-        dedup_edit_distance,
-    )
-
-    rows = [(1, "a"), (2, "b"), (3, "ab"), (4, ""), (5, "abc def"),
-            (7, "a"), (100, "xy")]
-    df = spark.createDataFrame(
-        [(i, t, "en", "s", len(t)) for i, t in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    got = sorted(map(tuple, dedup_edit_distance(spark, str(tmp_path)).collect()))
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"'{tmp_path}/documents.parquet/*.parquet'"  # Spark writes a dir
-    )
-    exp = sorted(map(tuple, con.execute(DEDUP_EDIT_DISTANCE_SQL).fetchall()))
-    assert got == exp
-    assert (1, 2, 1) in got  # short-short: 'a' vs 'b'
-    assert (1, 7, 0) in got  # short-short: identical 1-char titles
-    assert (1, 3, 1) in got  # short PROBES the indexed 'ab'
-    assert (100, 20000100, 1) in got  # planted twin still found

@@ -1,13 +1,10 @@
-"""Round-36 targeted tests: hard-negative gate, ER composition,
-MinHash-eval recall-loss regime.  Oracle value parity for the three
+"""Round-36 targeted tests: hard-negative gate and ER composition (the
+MinHash-eval test lives in test_dedup.py).  Oracle value parity for the
 registered queries is covered by the driver sweep."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from atd_data_lake_spark.round36_queries import (
-    dedup_minhash_eval,
     er_canonical_entities,
     sim_hard_negatives,
 )
@@ -46,48 +43,3 @@ def test_er_entities_cover_planted_twins(spark, sf_dir):
     # for at least one planted twin group
     ids = {r["entity_id"] for r in rows}
     assert any(e < 20_000_000 for e in ids)
-
-
-def test_minhash_eval_recall_loss_on_mid_jaccard_pairs(spark):
-    """The loose 4x2 geometry MUST miss some mid-Jaccard pairs — the
-    regime the registered query cannot show on exact-dup-only data.
-    Synthetic docs share ~60% of shingles with a partner; at J~0.5-0.6
-    the per-band hit probability is ~J^2 per band, miss probability
-    ~(1-J^2)^4 ~ 20-40%, so with 40 planted pairs some misses are
-    overwhelmingly likely — while exact dups are always caught."""
-    import random
-
-    rng = random.Random(36)
-    vocab = [f"w{i}" for i in range(400)]
-    rows = []
-    truth_pairs = 0
-    for i in range(40):
-        base = [rng.choice(vocab) for _ in range(40)]
-        partner = list(base)
-        # overwrite a contiguous 8-token span: ~10 of 38 shingles
-        # change => J ~ 0.55-0.6, per-band hit ~J^2, miss-all-4-bands
-        # ~(1-J^2)^4 ~ 20% per pair — 40 pairs make misses certain
-        start = rng.randrange(0, 32)
-        for j in range(start, start + 8):
-            partner[j] = rng.choice(vocab)
-        rows.append((2 * i, " ".join(base)))
-        rows.append((2 * i + 1, " ".join(partner)))
-        truth_pairs += 1
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    # run the same machinery the registered query uses, against the
-    # same exact-jaccard truth, via a temp sf_dir-free harness
-    import atd_data_lake_spark.round36_queries as r36
-    from atd_data_lake_spark.operators.dedup import ngram_jaccard_pairs
-
-    orig = r36._t
-    try:
-        r36._t = lambda spark_, sf_, name_: df
-        out = dedup_minhash_eval(spark, "unused").first()
-    finally:
-        r36._t = orig
-    # there must BE mid-jaccard truth, and the loose banding must be
-    # lossy on it (recall < 1) while never inventing hits
-    assert out["n_truth"] > 0
-    assert out["n_hits"] <= out["n_truth"]
-    assert out["recall"] < 1.0

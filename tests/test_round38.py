@@ -1,29 +1,12 @@
-"""Round-38 targeted tests: CF symmetry/normalization and rolling-median
-window-shape invariants.  Oracle parity is covered by the driver sweep."""
+"""Round-38 targeted tests: rolling-median window-shape invariants
+(the item-CF tests live in test_basket.py).  Oracle parity is covered
+by the driver sweep."""
 
 from __future__ import annotations
 
 import datetime
 
-from atd_data_lake_spark.round38_queries import (
-    mb_item_cf_topk,
-    ts_rolling_median,
-)
-
-
-def test_item_cf_cosine_bounds_and_ranks(spark, sf_dir):
-    rows = mb_item_cf_topk(spark, sf_dir).collect()
-    assert len(rows) > 0
-    per = {}
-    for r in rows:
-        assert 0.0 < r["cos_sim"] <= 1.0
-        assert r["rec"] != r["part"]
-        per.setdefault(r["part"], []).append(r)
-    for part, rs in per.items():
-        rs.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
-        sims = [r["cos_sim"] for r in rs]
-        assert sims == sorted(sims, reverse=True)
+from atd_data_lake_spark.round38_queries import ts_rolling_median
 
 
 def test_rolling_median_window_counts(spark, sf_dir):

@@ -239,22 +239,6 @@ def test_text_js_divergence_bounds(spark, sf_dir):
     assert row["n_tokens_even"] > 0 and row["n_tokens_odd"] > 0
 
 
-def test_mb_sequential_rules_confidence_partitions(spark, sf_dir):
-    """Per prev_type the confidences sum to ~1 (they partition the
-    successor distribution) and every transition count is positive."""
-    from collections import defaultdict
-
-    from atd_data_lake_spark.round46_queries import mb_sequential_rules
-
-    rows = mb_sequential_rules(spark, sf_dir).collect()
-    assert rows
-    sums = defaultdict(float)
-    for r in rows:
-        assert r["n"] > 0 and 0.0 < r["confidence"] <= 1.0
-        sums[r["prev_type"]] += r["confidence"]
-    assert all(abs(s - 1.0) < 1e-3 for s in sums.values())
-
-
 def test_sim_maxdot_topk_agrees_with_numpy(spark, sf_dir):
     """The distributed MIPS result must equal a local numpy
     brute-force over the same vectors (rank, id, rounded dot)."""
@@ -372,18 +356,3 @@ def test_evt_pivot_monthly_columns_and_totals(spark, sf_dir):
         .collect()[0][0]
     )
     assert abs(total - float(want)) < 0.05  # per-cell 2dp rounding slack
-
-
-def test_mb_affinity_npmi_bounds(spark, sf_dir):
-    from atd_data_lake_spark.round46_queries import (
-        _NPMI_MIN_N,
-        mb_affinity_npmi,
-    )
-
-    rows = mb_affinity_npmi(spark, sf_dir).collect()
-    assert rows
-    scores = [r["npmi"] for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    for r in rows:
-        assert r["n_ab"] >= _NPMI_MIN_N
-        assert -1.0 - 1e-6 <= r["npmi"] <= 1.0 + 1e-6

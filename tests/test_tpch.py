@@ -72,10 +72,37 @@ def test_tpch_module_has_no_bare_persist():
     assert ".persist(" not in Path(tq.__file__).read_text()
 
 
+def _docstrings(tree: ast.AST) -> set[int]:
+    return {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef))
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+
+
 def test_money_formula_written_once_in_engine():
     src = "".join(p.read_text() for p in PKG.rglob("*.py"))
     assert src.count('F.lit(1).cast("decimal(3,2)") -') == 1
     assert src.count("D2 =") == 1
+    # the Spark-side money type is spelled only in functions/money.py
+    spelled = []
+    for path in PKG.rglob("*.py"):
+        if path.name == "money.py":
+            continue
+        tree = ast.parse(path.read_text())
+        docs = _docstrings(tree)
+        spelled += [
+            f"{path.name}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and "decimal(12,2)" in n.value
+            and id(n) not in docs
+        ]
+    assert not spelled, spelled
 
 
 def test_q5_same_nation_only(spark, sf_dir):

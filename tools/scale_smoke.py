@@ -210,6 +210,8 @@ def main() -> None:
     # round-7/9 additions: PageRank on a 10×-replicated basket graph (10
     # disjoint copies — edge volume scales linearly, iterations must stay
     # flat), and the drift/lateness/interval monitors on the 10× stream
+    from atd_data_lake_spark.basket_queries import basket_pairs, baskets
+
     li0 = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         "l_orderkey", "l_partkey"
     )
@@ -225,17 +227,7 @@ def main() -> None:
     li.count()
 
     def _copurchase_edges_10x():
-        baskets = li.groupBy("l_orderkey").agg(
-            F.array_sort(F.collect_set("l_partkey")).alias("parts")
-        )
-        pairs = (
-            baskets.select("parts", F.posexplode("parts").alias("_i", "pa"))
-            .select(
-                "pa",
-                F.explode(F.expr("slice(parts, _i + 2, size(parts))")).alias("pb"),
-            )
-            .distinct()
-        )
+        pairs = basket_pairs(baskets(li), ("pa", "pb")).distinct()
         return pairs.select(
             F.col("pa").alias("src"), F.col("pb").alias("dst")
         ).unionAll(
@@ -302,17 +294,7 @@ def main() -> None:
     # the train-small/project-wide ops (PQ, PCA) which must stay one
     # bounded collect + one map pass regardless of corpus size
     def triangle_10x():
-        pairs = (
-            li.groupBy("l_orderkey")
-            .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-            .select("parts", F.posexplode("parts").alias("_i", "a"))
-            .select(
-                "a",
-                F.explode(F.expr("slice(parts, _i + 2, size(parts))")).alias("b"),
-            )
-            .distinct()
-            .persist()
-        )
+        pairs = basket_pairs(baskets(li)).distinct().persist()
         und = pairs.select(F.col("a").alias("s"), F.col("b").alias("d")).unionAll(
             pairs.select(F.col("b").alias("s"), F.col("a").alias("d"))
         )
