@@ -1,12 +1,13 @@
 """Round-3 query additions: LLM-curation composites and event analytics.
 
 - PII scrubbing (operators/pii.py), keep-best-per-near-dup-cluster
-  (operators/curation.py), 3-step event funnel, and SemDeDup-style
-  semantic dedup (operators/semdedup.py);
+  (operators/curation.py) and a 3-step event funnel;
 - as-of join with tolerance, lead/lag/ntile windows, incremental
   aggregate maintenance, z-score anomalies and unigram log-probs.
 
-The round's TPC-H classics (q3/q6/q14/q18) live in ``tpch_queries``.
+The round's TPC-H classics (q3/q6/q14/q18) live in ``tpch_queries`` and
+its SemDeDup-style semantic dedup (``sim_semantic_dedup``) in
+``sim_queries``.
 """
 
 from __future__ import annotations
@@ -405,7 +406,7 @@ FROM documents d LEFT JOIN scored ON d.doc_id = scored.doc_id
 
 
 # ---------------------------------------------------------------------------
-# Keep-best-per-cluster + semantic dedup
+# Keep-best-per-cluster
 # ---------------------------------------------------------------------------
 
 
@@ -446,107 +447,6 @@ FROM ranked WHERE rn = 1
 """
 
 
-def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic dedup — UPGRADED r7 from a rows-only
-    seeded-k-means run to a fully oracle-checked one (the r6
-    ``ivf_topk_model`` recipe): the coarse quantizer is a loaded
-    16-centroid model (the 16 lowest-vec_id embeddings), and assignment
-    plus every greedy keep/drop decision use the 6-dp-rounded cosine
-    with smallest-id tie-breaks, so the complete (cluster, keep,
-    dup_of, max_sim) output is reproducible in ANSI SQL — the greedy
-    kept-set recursion becomes a recursive CTE over cluster ranks.
-    Threshold 0.35 = the semantic near-dup radius of the synthetic
-    corpus (0.95 drops nothing here); the k-means-trained production
-    path (``operators/semdedup.semantic_dedup``) keeps its
-    determinism/planted-dup pytest gates."""
-    from atd_data_lake_spark.operators.semdedup import semantic_dedup_model
-    from atd_data_lake_spark.operators.similarity import drop_null_vectors
-
-    e = _t(spark, sf_dir, "embeddings")
-    # null guard BEFORE the model collect: a null/empty vector among the
-    # 16 model rows must degrade (drop), not crash the driver (r7
-    # review; matches emb_pq_codes and the SQL c CTE below)
-    model_rows = (
-        drop_null_vectors(e, "embedding")
-        .filter(F.col("vec_id") < 16)
-        .orderBy("vec_id")
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    centroids = [(int(r[0]), list(r[1])) for r in model_rows]
-    return semantic_dedup_model(e, centroids, threshold=0.35)
-
-
-SIM_SEMANTIC_DEDUP_SQL = """
-WITH RECURSIVE
-c AS (
-    SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cvec
-    FROM embeddings
-    WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0
-),
-e AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) > 0
-),
-assign AS (
-    SELECT vec_id, centroid_id AS cluster FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY round(list_cosine_similarity(e.v, c.cvec), 6)
-                       DESC, c.centroid_id) AS rn
-        FROM e CROSS JOIN c) WHERE rn = 1
-),
-m AS (
-    SELECT a.cluster, a.vec_id, e.v,
-           row_number() OVER (PARTITION BY a.cluster
-                              ORDER BY a.vec_id) AS rnk,
-           count(*) OVER (PARTITION BY a.cluster) AS n
-    FROM assign a JOIN e USING (vec_id)
-),
-p AS (
-    SELECT x.cluster, x.vec_id AS a_id, y.vec_id AS b_id,
-           round(list_cosine_similarity(x.v, y.v), 6) AS sim
-    FROM m x JOIN m y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-),
-k AS (
-    -- greedy kept-set recursion, one cluster rank per step: the member
-    -- at rank step+1 joins the kept list iff no ALREADY-KEPT earlier
-    -- member sits within the threshold radius
-    SELECT cluster, 1 AS step, [vec_id] AS kept, n FROM m WHERE rnk = 1
-    UNION ALL
-    SELECT k.cluster, k.step + 1,
-           CASE WHEN EXISTS (
-               SELECT 1 FROM p
-               WHERE p.cluster = k.cluster AND p.b_id = nxt.vec_id
-                 AND p.sim >= 0.35 AND list_contains(k.kept, p.a_id))
-             THEN k.kept ELSE list_append(k.kept, nxt.vec_id) END,
-           k.n
-    FROM k JOIN m nxt ON nxt.cluster = k.cluster AND nxt.rnk = k.step + 1
-),
-f AS (SELECT cluster, kept FROM k WHERE step = n),
-pk AS (
-    SELECT p.b_id, p.a_id, p.sim,
-           row_number() OVER (PARTITION BY p.b_id
-                              ORDER BY p.sim DESC, p.a_id) AS rn
-    FROM p JOIN f ON f.cluster = p.cluster
-    WHERE list_contains(f.kept, p.a_id)
-),
-stats AS (
-    SELECT b_id AS vec_id, max(sim) AS msim,
-           max(CASE WHEN rn = 1 THEN a_id END) AS best_a
-    FROM pk GROUP BY b_id
-)
-SELECT m.vec_id, m.cluster,
-       list_contains(f.kept, m.vec_id) AS keep,
-       CASE WHEN list_contains(f.kept, m.vec_id) THEN NULL
-            ELSE s.best_a END AS dup_of,
-       coalesce(s.msim, 0.0) AS max_sim
-FROM m JOIN f ON f.cluster = m.cluster
-LEFT JOIN stats s ON s.vec_id = m.vec_id
-ORDER BY m.vec_id
-"""
-
-
 ANALYTICS_QUERIES = {
     "evt_funnel": evt_funnel,
     "j9_asof_tolerance": j9_asof_tolerance,
@@ -556,7 +456,6 @@ ANALYTICS_QUERIES = {
     "text_pii_scrub": text_pii_scrub,
     "text_unigram_logprob": text_unigram_logprob,
     "cur_keep_best_per_cluster": cur_keep_best_per_cluster,
-    "sim_semantic_dedup": sim_semantic_dedup,
 }
 
 ANALYTICS_ORACLES = {
@@ -568,7 +467,4 @@ ANALYTICS_ORACLES = {
     "text_unigram_logprob": UNIGRAM_LOGPROB_SQL,
     # text_pii_scrub / cur_keep_best_per_cluster oracles are built lazily
     # (they import SQL fragments from queries.py); see queries.py wiring.
-    # sim_semantic_dedup: UPGRADED r7 to a full oracle via the injected
-    # 16-centroid model + recursive-CTE greedy (was rows-only).
-    "sim_semantic_dedup": SIM_SEMANTIC_DEDUP_SQL,
 }

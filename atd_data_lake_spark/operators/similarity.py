@@ -94,13 +94,7 @@ def _scored_topk(
     qids = np.array([r[0] for r in qrows])
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField(score_col, T.DoubleType()),
-        ]
-    )
+    out_schema = topk_schema(["query_id", "neighbor_id", score_col])
     if len(qrows) == 0:
         # StructType.add mutates in place — build the ranked schema fresh
         full_schema = T.StructType(
@@ -116,35 +110,72 @@ def _scored_topk(
             ids = pdf[id_col].to_numpy()
             mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             scores = _round_half_up(score_fn(mat, qmat))  # n×q
-            outs = []
-            for j, qid in enumerate(qids):
-                col = scores[:, j]
-                keep = ids != qid  # exclude self
-                cand_ids, cand_scores = ids[keep], col[keep]
-                # partial top-k within the batch: sort by (-score, id)
-                order = np.lexsort((cand_ids, -cand_scores))[:k]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": cand_ids[order],
-                            score_col: cand_scores[order],
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            yield local_topk(ids, qids, scores, k, out_schema.names, True)
 
     partial = fan_out(corpus).select(id_col, vec_col).mapInPandas(
         score_batch, schema=out_schema
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col(score_col).desc(), F.col("neighbor_id").asc()
+    return rank_topk(partial, k, "query_id", F.col(score_col).desc()).select(
+        "query_id", "neighbor_id", score_col, "rank"
     )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", score_col, "rank")
+
+
+def topk_schema(names: list[str]) -> T.StructType:
+    """(query id, neighbor id, score) — the partial top-k row."""
+    q, n, score = names
+    return T.StructType(
+        [
+            T.StructField(q, T.LongType()),
+            T.StructField(n, T.LongType()),
+            T.StructField(score, T.DoubleType()),
+        ]
+    )
+
+
+def local_topk(
+    ids: np.ndarray,
+    qids: np.ndarray,
+    scores: np.ndarray,
+    k: int,
+    names: list[str],
+    descending: bool,
+    keep: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """One Arrow batch's top-k per query: ``scores`` is n×q (corpus rows
+    × queries), ranked high-first when ``descending`` (similarities) and
+    low-first otherwise (distances), ties to the smaller id.  A query
+    never matches itself; ``keep`` (n×q bool) gates candidates further.
+    ``names`` are the (query, neighbor, score) output columns.  Only
+    ≤ k·|queries| rows leave the batch, so the global rank that follows
+    (:func:`rank_topk`) shuffles bounded candidates, never the corpus."""
+    outs = []
+    for j, qid in enumerate(qids):
+        mask = ids != qid
+        if keep is not None:
+            mask &= keep[:, j]
+        cand_ids, cand_scores = ids[mask], scores[mask, j]
+        key = -cand_scores if descending else cand_scores
+        order = np.lexsort((cand_ids, key))[:k]
+        outs.append(
+            pd.DataFrame(
+                {
+                    names[0]: qid,
+                    names[1]: cand_ids[order],
+                    names[2]: cand_scores[order],
+                }
+            )
+        )
+    return pd.concat(outs, ignore_index=True)
+
+
+def rank_topk(partial: DataFrame, k: int, query_col: str, score: Column) -> DataFrame:
+    """Global top-k per ``query_col`` over scored candidate rows: a
+    ``rank`` row number ordered by ``score`` (the caller's orientation,
+    e.g. ``F.col("cos_sim").desc()``), ties to the smaller
+    ``neighbor_id``."""
+    w = Window.partitionBy(query_col).orderBy(score, F.col("neighbor_id").asc())
+    return partial.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
 
 
@@ -403,13 +434,8 @@ def _rerank_pairs(
             )
 
     scored = cands.mapInPandas(score, schema=pair_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return rank_topk(scored, k, "query_id", F.col("cos_sim").desc()).select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -576,13 +602,8 @@ def ivf_topk(
             )
 
     scored = cands.mapInPandas(score, schema=pair_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return rank_topk(scored, k, "query_id", F.col("cos_sim").desc()).select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -619,13 +640,13 @@ def ivf_topk_model(
     qrows = queries.select(query_id_col, vec_col).collect()
     qids = [int(r[0]) for r in qrows]
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    cids = [int(c) for c, _ in centroids]
+    cids = np.array([int(c) for c, _ in centroids], dtype=np.int64)
     cmat = np.array([v for _, v in centroids], dtype=np.float64)
-    sims = _round_half_up(_cosine_matrix(qmat, cmat))  # q × cells
-    probe_rows = []
-    for i, qid in enumerate(qids):
-        order = sorted(range(len(cids)), key=lambda j: (-sims[i, j], cids[j]))
-        probe_rows += [(qid, cids[j]) for j in order[:n_probe]]
+    probe_rows = [
+        (qid, int(cell))
+        for qid, cells in zip(qids, probe_cells(qmat, cids, cmat, n_probe))
+        for cell in cells
+    ]
     q = corpus.sparkSession.createDataFrame(
         probe_rows, "_qid long, centroid_id long"
     )
@@ -638,6 +659,16 @@ def ivf_topk_model(
         .distinct()
     )
     return _rerank_pairs(corpus, pair_ids, qids, qmat, k, id_col, vec_col)
+
+
+def probe_cells(
+    qmat: np.ndarray, cids: np.ndarray, cmat: np.ndarray, n_probe: int
+) -> list[np.ndarray]:
+    """Each query's ``n_probe`` cells of a loaded quantizer: highest
+    6-dp-rounded cosine first, ties to the smaller centroid id — the
+    decision the oracles' ``probes`` CTE makes in SQL."""
+    sims = _round_half_up(_cosine_matrix(qmat, cmat))  # q × cells
+    return [cids[np.lexsort((cids, -row))[:n_probe]] for row in sims]
 
 
 def ivf_upsert(
@@ -871,6 +902,20 @@ def _near_dups_lsh(
 # ---------------------------------------------------------------------------
 
 
+def nearest_centroid(
+    mat: np.ndarray, cmat: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Row index into the id-ascending centroid matrix ``cmat`` of each
+    vector's nearest centroid by 6-dp-rounded cosine, and that cosine.
+    ``argmax`` returns the FIRST max, so rounded ties resolve to the
+    smallest centroid id.  ``_cosine_matrix``'s zero-norm guard divides
+    by 1, so a zero vector (or zero centroid) scores exactly 0.0 against
+    everything — no extra masking needed."""
+    sims = _round_half_up(_cosine_matrix(mat, cmat))
+    best = sims.argmax(axis=1)
+    return best, sims[np.arange(len(best)), best]
+
+
 def centroid_assign(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -918,18 +963,12 @@ def centroid_assign(
             if len(pdf) == 0:
                 continue
             mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # _cosine_matrix's zero-norm guard divides by 1, so a
-            # zero vector (or zero centroid) scores exactly 0.0 against
-            # everything — no extra masking needed
-            sims = _round_half_up(_cosine_matrix(mat, cmat))
-            # argmax returns the FIRST max; centroids are id-ascending,
-            # so rounded ties resolve to the smallest centroid id
-            best = sims.argmax(axis=1)
+            best, best_sim = nearest_centroid(mat, cmat)
             yield pd.DataFrame(
                 {
                     "_ca_id": pdf[id_col],
                     "centroid_id": cids[best],
-                    "cos_sim": sims[np.arange(len(best)), best],
+                    "cos_sim": best_sim,
                 }
             )
 

@@ -33,7 +33,6 @@ from atd_data_lake_spark.functions.money import (
 from atd_data_lake_spark.io.reader import read_table_utc as _t
 from atd_data_lake_spark.operators.asof import asof_join
 from atd_data_lake_spark.operators.fuzzy import levenshtein_ratio
-from atd_data_lake_spark.operators.similarity import cosine_topk, lsh_topk
 from atd_data_lake_spark.operators.text import (
     BPE_PRETOKEN_RE,
     STOPWORDS,
@@ -945,197 +944,6 @@ GROUP BY n.doc_id
 """
 
 
-def sim_knn_bruteforce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-10 for query vectors vec_id < 5
-    (operators/similarity.cosine_topk)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = cosine_topk(emb, queries, k=10, id_col="vec_id", vec_col="embedding")
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-    )
-
-
-SIM_KNN_SQL = """
-WITH q AS (
-    SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
-    FROM embeddings WHERE vec_id < 5
-),
-s AS (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           round(list_cosine_similarity(q.qvec, CAST(e.embedding AS DOUBLE[])), 6)
-               AS cos_sim
-    FROM q, embeddings e WHERE e.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, cos_sim, rank
-FROM (
-    SELECT query_id, neighbor_id, cos_sim,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-    FROM s
-) WHERE rank <= 10
-"""
-
-
-def sim_ann_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH approximate top-k — UPGRADED r6 from a rows-only numpy-
-    seeded run to a fully oracle-checked one (the r5 minhash-upgrade
-    pattern): the 16 hyperplanes are a loaded model (the embeddings at
-    vec_id 100..115, the ``emb_kmeans_assign`` model-as-data precedent)
-    and sign decisions use the 6-dp-rounded cosine, so bucketing, the
-    candidate set, and the exact re-rank are all SQL-reproducible.  The
-    numpy-seeded production default stays exercised by
-    ``tests/test_similarity*.py`` recall/determinism gates."""
-    import numpy as np
-
-    emb = _t(spark, sf_dir, "embeddings")
-    plane_rows = (
-        emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 116))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    planes = np.array([r[0] for r in plane_rows], dtype=np.float64)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = lsh_topk(
-        emb, queries, k=10, bands=4, planes=planes, sign_mode="cosine6"
-    )
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-    )
-
-
-SIM_ANN_LSH_SQL = """
-WITH planes AS (
-    SELECT CAST(vec_id - 100 AS INTEGER) AS pidx,
-           CAST(embedding AS DOUBLE[]) AS pvec
-    FROM embeddings WHERE vec_id >= 100 AND vec_id < 116
-),
-bits AS (
-    SELECT e.vec_id, p.pidx,
-           CASE WHEN round(list_cosine_similarity(
-                    CAST(e.embedding AS DOUBLE[]), p.pvec), 6) >= 0
-                THEN 1 ELSE 0 END AS bit
-    FROM embeddings e CROSS JOIN planes p
-),
-keys AS (
-    SELECT vec_id, pidx // 4 AS band,
-           CAST(sum(bit * (1 << (pidx % 4))) AS BIGINT) AS bucket
-    FROM bits GROUP BY vec_id, pidx // 4
-),
-q AS (
-    SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
-    FROM embeddings WHERE vec_id < 5
-),
-cands AS (
-    SELECT DISTINCT kq.vec_id AS query_id, kc.vec_id AS neighbor_id
-    FROM keys kc JOIN keys kq
-      ON kc.band = kq.band AND kc.bucket = kq.bucket
-    WHERE kq.vec_id < 5 AND kc.vec_id <> kq.vec_id
-),
-scored AS (
-    SELECT c.query_id, c.neighbor_id,
-           round(list_cosine_similarity(
-               q.qvec, CAST(e.embedding AS DOUBLE[])), 6) AS cos_sim,
-           row_number() OVER (
-               PARTITION BY c.query_id
-               ORDER BY round(list_cosine_similarity(
-                   q.qvec, CAST(e.embedding AS DOUBLE[])), 6) DESC,
-                   c.neighbor_id) AS rank
-    FROM cands c
-    JOIN q ON q.query_id = c.query_id
-    JOIN embeddings e ON e.vec_id = c.neighbor_id
-)
-SELECT query_id, neighbor_id, cos_sim, CAST(rank AS BIGINT) AS rank
-FROM scored WHERE rank <= 10
-"""
-
-
-def sim_ann_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k — UPGRADED r6 from a rows-only seeded-
-    k-means run to a fully oracle-checked one: the coarse quantizer is a
-    loaded 16-centroid model (the 16 lowest-vec_id embeddings) and cell
-    assignment / probe selection use the 6-dp-rounded cosine with
-    smallest-id tie-breaks (``ivf_topk_model``), so the complete ranked
-    result is SQL-reproducible.  The k-means-trained production path
-    (``ivf_topk``) stays exercised by recall/determinism pytest gates
-    and the persisted-layout tests."""
-    from atd_data_lake_spark.operators.similarity import ivf_topk_model
-
-    emb = _t(spark, sf_dir, "embeddings")
-    model_rows = (
-        emb.filter(F.col("vec_id") < 16)
-        .orderBy("vec_id")
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    centroids = [(int(r[0]), list(r[1])) for r in model_rows]
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = ivf_topk_model(emb, queries, centroids, k=10, n_probe=4)
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-    )
-
-
-SIM_ANN_IVF_SQL = """
-WITH c AS (
-    SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cvec
-    FROM embeddings WHERE vec_id < 16
-),
-assign AS (
-    SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY round(list_cosine_similarity(
-                       CAST(e.embedding AS DOUBLE[]), c.cvec), 6) DESC,
-                       c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN c
-    ) WHERE rn = 1
-),
-q AS (
-    SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
-    FROM embeddings WHERE vec_id < 5
-),
-probes AS (
-    SELECT query_id, centroid_id FROM (
-        SELECT q.query_id, c.centroid_id,
-               row_number() OVER (
-                   PARTITION BY q.query_id
-                   ORDER BY round(list_cosine_similarity(q.qvec, c.cvec), 6)
-                       DESC, c.centroid_id) AS rn
-        FROM q CROSS JOIN c
-    ) WHERE rn <= 4
-),
-cands AS (
-    SELECT p.query_id, a.vec_id AS neighbor_id
-    FROM probes p JOIN assign a ON a.centroid_id = p.centroid_id
-    WHERE a.vec_id <> p.query_id
-),
-scored AS (
-    SELECT c.query_id, c.neighbor_id,
-           round(list_cosine_similarity(
-               q.qvec, CAST(e.embedding AS DOUBLE[])), 6) AS cos_sim,
-           row_number() OVER (
-               PARTITION BY c.query_id
-               ORDER BY round(list_cosine_similarity(
-                   q.qvec, CAST(e.embedding AS DOUBLE[])), 6) DESC,
-                   c.neighbor_id) AS rank
-    FROM cands c
-    JOIN q ON q.query_id = c.query_id
-    JOIN embeddings e ON e.vec_id = c.neighbor_id
-)
-SELECT query_id, neighbor_id, cos_sim, CAST(rank AS BIGINT) AS rank
-FROM scored WHERE rank <= 10
-"""
-
-
 def mm_media_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: documents → binary payload column → Arrow-batched
     mapInPandas feature extraction (stub decode).
@@ -1594,7 +1402,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "text_repetition": text_repetition_q,
     "text_langid_ngram": text_langid_ngram_q,
     "text_winnow_fingerprint": text_winnow_fingerprint_q,
-    "sim_knn_bruteforce": sim_knn_bruteforce_q,
     "mm_media_features": mm_media_features_q,
     "mm_frame_sample": mm_frame_sample_q,
     "mm_audio_windows": mm_audio_windows_q,
@@ -1608,8 +1415,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "cur_cap_per_source": cur_cap_per_source_q,
     "cur_quality_gate": cur_quality_gate_q,
     # model-injected ANN, oracle-backed since r6
-    "sim_ann_lsh": sim_ann_lsh_q,
-    "sim_ann_ivf": sim_ann_ivf_q,
 }
 
 from atd_data_lake_spark.coverage_queries import (  # noqa: E402
@@ -1656,9 +1461,6 @@ ORACLES: dict[str, str] = {
     "text_repetition": TEXT_REPETITION_SQL,
     "text_langid_ngram": _text_langid_ngram_sql(),
     "text_winnow_fingerprint": _text_winnow_sql(),
-    "sim_knn_bruteforce": SIM_KNN_SQL,
-    "sim_ann_lsh": SIM_ANN_LSH_SQL,
-    "sim_ann_ivf": SIM_ANN_IVF_SQL,
     "mm_media_features": _mm_media_sql(),
     "mm_frame_sample": MM_FRAME_SAMPLE_SQL,
     "mm_audio_windows": MM_AUDIO_WINDOWS_SQL,
@@ -1768,6 +1570,14 @@ from atd_data_lake_spark.basket_queries import (  # noqa: E402
 
 QUERIES.update(BASKET_QUERIES)
 ORACLES.update(BASKET_ORACLES)
+
+from atd_data_lake_spark.sim_queries import (  # noqa: E402
+    SIM_ORACLES,
+    SIM_QUERIES,
+)
+
+QUERIES.update(SIM_QUERIES)
+ORACLES.update(SIM_ORACLES)
 
 from atd_data_lake_spark.executed_queries import (  # noqa: E402
     EXECUTED_ORACLES,
@@ -1971,14 +1781,6 @@ from atd_data_lake_spark.round36_queries import (  # noqa: E402
 
 QUERIES.update(ROUND36_QUERIES)
 ORACLES.update(ROUND36_ORACLES)
-
-from atd_data_lake_spark.round37_queries import (  # noqa: E402
-    ROUND37_ORACLES,
-    ROUND37_QUERIES,
-)
-
-QUERIES.update(ROUND37_QUERIES)
-ORACLES.update(ROUND37_ORACLES)
 
 from atd_data_lake_spark.round38_queries import (  # noqa: E402
     ROUND38_ORACLES,

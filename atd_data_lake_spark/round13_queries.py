@@ -55,6 +55,7 @@ from pyspark.sql import types as T
 
 from atd_data_lake_spark.functions.money import D2
 from atd_data_lake_spark.io.reader import read_table_utc as _t
+from atd_data_lake_spark.sim_queries import VECTORS_CTE, load_model, pq_encode, pq_sql
 
 
 # ---------------------------------------------------------------------------
@@ -789,21 +790,10 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: the model is 16×64 doubles in the closure; encoding is
     one Arrow map pass, zero shuffle.
     """
-    from atd_data_lake_spark.operators.similarity import (
-        _round_half_up,
-        drop_null_vectors,
-    )
+    from atd_data_lake_spark.operators.similarity import drop_null_vectors
 
     e = drop_null_vectors(_t(spark, sf_dir, "embeddings"), "embedding")
-    model_rows = (
-        e.filter(F.col("vec_id") < 16)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    books = np.array([r[0] for r in model_rows], dtype=np.float64)  # 16×64
-    dim = books.shape[1]
-    sub_d = dim // _PQ_SUBSPACES
+    _, books = load_model(e, F.col("vec_id") < _PQ_CODES)  # 16×64
 
     out_schema = T.StructType(
         [T.StructField("vec_id", T.LongType())]
@@ -822,18 +812,11 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            codes, dists = pq_encode(X, books, _PQ_SUBSPACES)
             out = {"vec_id": pdf["vec_id"]}
             for s in range(_PQ_SUBSPACES):
-                Xs = X[:, s * sub_d : (s + 1) * sub_d]
-                Cs = books[:, s * sub_d : (s + 1) * sub_d]
-                d = _round_half_up(
-                    np.sqrt(
-                        ((Xs[:, None, :] - Cs[None, :, :]) ** 2).sum(axis=2)
-                    )
-                )
-                code = d.argmin(axis=1)  # first min == smallest code
-                out[f"c{s}"] = code.astype(np.int64)
-                out[f"d{s}"] = d[np.arange(len(X)), code]
+                out[f"c{s}"] = codes[:, s]
+                out[f"d{s}"] = dists[:, s]
             yield pd.DataFrame(out)
 
     return e.select("vec_id", "embedding").mapInPandas(op, schema=out_schema)
@@ -849,32 +832,12 @@ def _emb_pq_codes_sql() -> str:
         for s in range(_PQ_SUBSPACES)
     )
     return f"""
-WITH ev AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) > 0
-),
-subs AS (SELECT unnest(range({_PQ_SUBSPACES})) AS s),
-slices AS (
-    SELECT vec_id, s, v[s * 8 + 1 : s * 8 + 8] AS sv FROM ev, subs
-),
-cb AS (
-    SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1
-               AS code,
-           sv AS cv
-    FROM slices WHERE vec_id < 16
-),
-scored AS (
-    SELECT sl.vec_id, sl.s, cb.code,
-           round(list_distance(sl.sv, cb.cv), 6) AS dist,
-           row_number() OVER (PARTITION BY sl.vec_id, sl.s
-               ORDER BY round(list_distance(sl.sv, cb.cv), 6), cb.code)
-               AS rn
-    FROM slices sl JOIN cb ON cb.s = sl.s
-)
+WITH {VECTORS_CTE},
+{pq_sql(_PQ_SUBSPACES, _PQ_CODES)}
 SELECT vec_id,
        {sub_cols},
        {dist_cols}
-FROM scored WHERE rn = 1
+FROM codes
 GROUP BY vec_id
 ORDER BY vec_id
 """

@@ -7,20 +7,16 @@ exit condition — a zero never-checked backlog — was met in r5).
   domain gate.
 - ``url_domain_rollup`` — per-registrable-domain quality rollup + keep
   gate (doc count, host fan-out, language mix): the domain-level half.
-- ``sim_ivf_upsert`` — incremental ANN index maintenance: the
-  reference's anti-join ingest pattern (J1,
-  ``atd_data_lake/support/last_update.py`` compare-loop) applied to an
-  IVF index — only genuinely new vectors are assigned; per-cell deltas
-  come back for index-health monitoring.
 
 The documents table has no URL column, so both the Spark queries and
 their oracles synthesize one deterministically from ``(doc_id, source)``
 — same literal expression on both sides; the operators under test are
 the parse/extract/rollup stages, not the synthesis.
 
-All three carry full DuckDB oracles (as do the round's other entries
-here); the round's ``dedup_url_canonical`` lives in ``dedup_queries``
-and reuses this module's synthetic-URL fixture (``_with_url``,
+Both carry full DuckDB oracles (as do the round's other entries
+here); the round's ``sim_ivf_upsert`` and ``sim_ann_ivf_recall`` live in
+``sim_queries``, its ``dedup_url_canonical`` in ``dedup_queries``, which
+reuses this module's synthetic-URL fixture (``_with_url``,
 ``_url_sql``, ``_URL_PARTS_SQL``); every computed column is aliased
 identically on both sides, outputs are scalars only (no DECIMAL — the
 driver-hasher contract).
@@ -217,96 +213,6 @@ GROUP BY reg_domain
 
 
 # ---------------------------------------------------------------------------
-# sim_ivf_upsert — incremental ANN index maintenance
-# ---------------------------------------------------------------------------
-
-_IVF_CELLS = 16
-_IVF_STANDING_MAX = 400  # vec_id < this simulates the already-built index
-
-
-def sim_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental IVF maintenance: anti-join the incoming batch against
-    the standing index (which the batch partially re-delivers), assign
-    only the new vectors, and report per-cell deltas.
-
-    The quantizer model is the 16 lowest-vec_id embeddings (the
-    ``emb_kmeans_assign`` model-loading precedent); collecting it loads
-    a model, not data."""
-    from atd_data_lake_spark.operators.similarity import (
-        centroid_assign,
-        ivf_upsert,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    model_rows = (
-        emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    centroids = [(int(r[0]), list(r[1])) for r in model_rows]
-    # in production the standing index is a stored table (a scan, free to
-    # read twice); here it derives from an Arrow assignment stage, which
-    # gets no AQE reuse — persist the slim (id, cell) frame so its two
-    # consumers (anti-join ids + the standing rollup) run it once
-    from atd_data_lake_spark.operators.scale import scoped_persist
-
-    standing = scoped_persist(
-        centroid_assign(
-            emb.filter(F.col("vec_id") < _IVF_STANDING_MAX), centroids
-        ).select("vec_id", "centroid_id")
-    )
-    return ivf_upsert(standing, emb, centroids).orderBy("centroid_id")
-
-
-SIM_IVF_UPSERT_SQL = f"""
-WITH c AS (
-    SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cvec
-    FROM embeddings WHERE vec_id < {_IVF_CELLS}
-),
-assign AS (
-    SELECT vec_id, centroid_id, cos_sim FROM (
-        SELECT e.vec_id, c.centroid_id,
-               round(list_cosine_similarity(
-                   CAST(e.embedding AS DOUBLE[]), c.cvec), 6) AS cos_sim,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY round(list_cosine_similarity(
-                       CAST(e.embedding AS DOUBLE[]), c.cvec), 6) DESC,
-                       c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN c
-    ) WHERE rn = 1
-),
-standing AS (
-    SELECT vec_id, centroid_id FROM assign
-    WHERE vec_id < {_IVF_STANDING_MAX}
-),
-added AS (
-    SELECT * FROM assign
-    WHERE vec_id NOT IN (SELECT vec_id FROM standing)
-),
-std_roll AS (
-    SELECT centroid_id, CAST(count(*) AS BIGINT) AS n_standing
-    FROM standing GROUP BY 1
-),
-add_roll AS (
-    SELECT centroid_id, CAST(count(*) AS BIGINT) AS n_added,
-           round(CAST(sum(CAST(cos_sim AS DECIMAL(18,6))) AS DOUBLE), 6)
-               AS added_sim_sum
-    FROM added GROUP BY 1
-)
-SELECT coalesce(s.centroid_id, a.centroid_id) AS centroid_id,
-       CAST(coalesce(s.n_standing, 0) AS BIGINT) AS n_standing,
-       CAST(coalesce(a.n_added, 0) AS BIGINT) AS n_added,
-       CAST(coalesce(s.n_standing, 0) + coalesce(a.n_added, 0) AS BIGINT)
-           AS n_total,
-       coalesce(a.added_sim_sum, 0.0) AS added_sim_sum
-FROM std_roll s FULL OUTER JOIN add_roll a ON s.centroid_id = a.centroid_id
-ORDER BY centroid_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # url_domain_gate — the rollup's keep verdict applied back to documents
 # ---------------------------------------------------------------------------
 
@@ -425,125 +331,6 @@ GROUP BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# sim_ann_ivf_recall — recall@10 of the model-IVF vs exact ground truth
-# ---------------------------------------------------------------------------
-
-_RECALL_QUERIES = 20
-_RECALL_K = 10
-
-
-def sim_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the 4-probe model-IVF search against the exact
-    brute-force ground truth, per query — the eval that prices an IVF
-    deployment's probe budget (the ``emb_matryoshka_eval`` recipe with
-    the IVF candidate generator in the approximate seat)."""
-    from atd_data_lake_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk_model,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    model_rows = (
-        emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    centroids = [(int(r[0]), list(r[1])) for r in model_rows]
-    queries = emb.filter(F.col("vec_id") < _RECALL_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    truth = cosine_topk(emb, queries, k=_RECALL_K)
-    approx = ivf_topk_model(emb, queries, centroids, k=_RECALL_K, n_probe=4)
-    hits = truth.select("query_id", "neighbor_id").join(
-        approx.select("query_id", "neighbor_id"),
-        ["query_id", "neighbor_id"],
-        "left_semi",
-    )
-    per_q = hits.groupBy("query_id").agg(F.count("*").alias("n_hits"))
-    base = queries.select("query_id")
-    return base.join(per_q, "query_id", "left").select(
-        "query_id",
-        F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-        F.round(
-            F.coalesce("n_hits", F.lit(0)) / F.lit(float(_RECALL_K)), 6
-        ).alias("recall_at_10"),
-    )
-
-
-SIM_ANN_IVF_RECALL_SQL = f"""
-WITH c AS (
-    SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cvec
-    FROM embeddings WHERE vec_id < {_IVF_CELLS}
-),
-assign AS (
-    SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY round(list_cosine_similarity(
-                       CAST(e.embedding AS DOUBLE[]), c.cvec), 6) DESC,
-                       c.centroid_id) AS rn
-        FROM embeddings e CROSS JOIN c
-    ) WHERE rn = 1
-),
-q AS (
-    SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
-    FROM embeddings WHERE vec_id < {_RECALL_QUERIES}
-),
-probes AS (
-    SELECT query_id, centroid_id FROM (
-        SELECT q.query_id, c.centroid_id,
-               row_number() OVER (
-                   PARTITION BY q.query_id
-                   ORDER BY round(list_cosine_similarity(q.qvec, c.cvec), 6)
-                       DESC, c.centroid_id) AS rn
-        FROM q CROSS JOIN c
-    ) WHERE rn <= 4
-),
-ivf_rank AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT cd.query_id, cd.neighbor_id,
-               row_number() OVER (
-                   PARTITION BY cd.query_id
-                   ORDER BY round(list_cosine_similarity(
-                       q.qvec, CAST(e.embedding AS DOUBLE[])), 6) DESC,
-                       cd.neighbor_id) AS rank
-        FROM (
-            SELECT p.query_id, a.vec_id AS neighbor_id
-            FROM probes p JOIN assign a ON a.centroid_id = p.centroid_id
-            WHERE a.vec_id <> p.query_id
-        ) cd
-        JOIN q ON q.query_id = cd.query_id
-        JOIN embeddings e ON e.vec_id = cd.neighbor_id
-    ) WHERE rank <= {_RECALL_K}
-),
-full_rank AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, e.vec_id AS neighbor_id,
-               row_number() OVER (
-                   PARTITION BY q.query_id
-                   ORDER BY round(list_cosine_similarity(
-                       q.qvec, CAST(e.embedding AS DOUBLE[])), 6) DESC,
-                       e.vec_id ASC) AS rank
-        FROM q, embeddings e WHERE e.vec_id <> q.query_id
-    ) WHERE rank <= {_RECALL_K}
-),
-hits AS (
-    SELECT f.query_id, count(*) AS n_hits
-    FROM full_rank f
-    JOIN ivf_rank t
-      ON t.query_id = f.query_id AND t.neighbor_id = f.neighbor_id
-    GROUP BY 1
-)
-SELECT q.query_id,
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       round(coalesce(h.n_hits, 0) / {float(_RECALL_K)!r}, 6) AS recall_at_10
-FROM q LEFT JOIN hits h ON h.query_id = q.query_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # registration
 # ---------------------------------------------------------------------------
 
@@ -552,8 +339,6 @@ ROUND29_QUERIES = {
     "url_domain_rollup": url_domain_rollup,
     "url_domain_gate": url_domain_gate,
     "text_line_dedup": text_line_dedup,
-    "sim_ivf_upsert": sim_ivf_upsert,
-    "sim_ann_ivf_recall": sim_ann_ivf_recall,
 }
 
 ROUND29_ORACLES = {
@@ -561,6 +346,4 @@ ROUND29_ORACLES = {
     "url_domain_rollup": URL_DOMAIN_ROLLUP_SQL,
     "url_domain_gate": URL_DOMAIN_GATE_SQL,
     "text_line_dedup": TEXT_LINE_DEDUP_SQL,
-    "sim_ivf_upsert": SIM_IVF_UPSERT_SQL,
-    "sim_ann_ivf_recall": SIM_ANN_IVF_RECALL_SQL,
 }

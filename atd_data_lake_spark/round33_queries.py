@@ -1,13 +1,6 @@
-"""Round-33 query additions — PQ-ADC search, temperature sampling,
-bigram LM scoring, NB classifier eval.
+"""Round-33 query additions — temperature sampling, bigram LM scoring,
+NB classifier eval.
 
-- ``sim_ann_pq_adc`` — asymmetric-distance (ADC) approximate top-k over
-  PQ codes: corpus vectors are encoded once with the injected 16x8
-  codebooks (the ``emb_pq_codes`` model), queries scan a 8x16 lookup
-  table — the FAISS IVFADC aggregation stage, with the sum-of-subspace
-  L2 aggregation variant so every score is a decimal-exact sum of
-  6-dp-rounded lookups (classic ADC squares each term; only the
-  exponent differs).
 - ``cur_temperature_sample`` — temperature-scaled language rebalancing
   (the mBERT/XLM-R alpha-sampling): keep probability
   ``sqrt(n_min / n_lang)`` gives kept counts proportional to
@@ -23,196 +16,17 @@ bigram LM scoring, NB classifier eval.
   plus its calibration readout (the FineWeb-Edu/DCLM filter shape, with
   the model trained by the plan instead of injected).
 
-All four carry full DuckDB oracles.  The round's edit-distance dedup
-(``dedup_edit_distance``, PassJoin) lives in ``dedup_queries``.
+All three carry full DuckDB oracles.  The round's edit-distance dedup
+(``dedup_edit_distance``, PassJoin) lives in ``dedup_queries`` and its
+PQ-ADC search (``sim_ann_pq_adc``) in ``sim_queries``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from atd_data_lake_spark.io.reader import read_table_utc as _t
-
-
-# ---------------------------------------------------------------------------
-# sim_ann_pq_adc
-# ---------------------------------------------------------------------------
-
-_ADC_SUBSPACES = 8
-_ADC_CODES = 16
-_ADC_QUERIES = 5
-_ADC_K = 10
-
-
-def sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADC (asymmetric distance) approximate top-10 over PQ codes.
-
-    The injected model is the ``emb_pq_codes`` one (codebook for
-    subspace s = the s-th 8-dim slice of the 16 lowest-vec_id
-    embeddings); corpus codes are the argmin of the 6-dp-rounded
-    per-subspace Euclidean distance (identical to ``emb_pq_codes``
-    c0..c7), and a query's score against a coded vector is the
-    decimal-exact sum of its 8 rounded LUT entries — so the full ranked
-    output is SQL-reproducible.
-
-    100 TB shape: the corpus is touched by ONE Arrow map pass that
-    encodes and immediately reduces each batch to its local top-k per
-    query (≤ k·|Q| rows leave each batch); the global rank is a window
-    over |Q|·k·n_batches candidate rows.  The 8x16 LUT per query lives
-    in the closure; raw vectors never shuffle.
-    """
-    from atd_data_lake_spark.operators.similarity import (
-        _round_half_up,
-        drop_null_vectors,
-    )
-
-    e = drop_null_vectors(_t(spark, sf_dir, "embeddings"), "embedding")
-    model_rows = (
-        e.filter(F.col("vec_id") < _ADC_CODES)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    books = np.array([r[0] for r in model_rows], dtype=np.float64)  # 16xdim
-    dim = books.shape[1]
-    sub_d = dim // _ADC_SUBSPACES
-    q_rows = (
-        e.filter(F.col("vec_id") < _ADC_QUERIES)
-        .orderBy("vec_id")
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = np.array([int(r[0]) for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    # LUT[q, s, code] = round6(euclid(q_slice, codebook_slice))
-    lut = np.zeros((len(q_ids), _ADC_SUBSPACES, _ADC_CODES))
-    for s in range(_ADC_SUBSPACES):
-        qs = q_mat[:, s * sub_d : (s + 1) * sub_d]
-        cs = books[:, s * sub_d : (s + 1) * sub_d]
-        lut[:, s, :] = _round_half_up(
-            np.sqrt(((qs[:, None, :] - cs[None, :, :]) ** 2).sum(axis=2))
-        )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("adc_dist", T.DoubleType()),
-        ]
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            codes = np.zeros((len(X), _ADC_SUBSPACES), dtype=np.int64)
-            for s in range(_ADC_SUBSPACES):
-                Xs = X[:, s * sub_d : (s + 1) * sub_d]
-                Cs = books[:, s * sub_d : (s + 1) * sub_d]
-                dmat = _round_half_up(
-                    np.sqrt(
-                        ((Xs[:, None, :] - Cs[None, :, :]) ** 2).sum(axis=2)
-                    )
-                )
-                codes[:, s] = dmat.argmin(axis=1)
-            # adc[q, n] = sum_s lut[q, s, codes[n, s]] — each term is a
-            # 6-dp decimal, so the float sum of 8 is exact on the grid
-            adc = np.zeros((len(q_ids), len(X)))
-            for s in range(_ADC_SUBSPACES):
-                adc += lut[:, s, codes[:, s]]
-            adc = _round_half_up(adc, 6)
-            outs = []
-            for qi, qid in enumerate(q_ids):
-                mask = ids != qid
-                cand_ids = ids[mask]
-                cand_adc = adc[qi][mask]
-                # local top-k: bounded rows leave the batch
-                order = np.lexsort((cand_ids, cand_adc))[: _ADC_K]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": cand_ids[order],
-                            "adc_dist": cand_adc[order],
-                        }
-                    )
-                )
-            yield pd.concat(outs, ignore_index=True)
-
-    local = e.select("vec_id", "embedding").mapInPandas(op, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _ADC_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "adc_dist",
-            F.col("rank").cast("long").alias("rank"),
-        )
-        .orderBy("query_id", "rank")
-    )
-
-
-SIM_ANN_PQ_ADC_SQL = f"""
-WITH ev AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) > 0
-),
-subs AS (SELECT unnest(range({_ADC_SUBSPACES})) AS s),
-slices AS (
-    SELECT vec_id, s, v[s * 8 + 1 : s * 8 + 8] AS sv FROM ev, subs
-),
-cb AS (
-    SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1
-               AS code,
-           sv AS cv
-    FROM slices WHERE vec_id < {_ADC_CODES}
-),
-assigned AS (
-    SELECT vec_id, s, code FROM (
-        SELECT sl.vec_id, sl.s, cb.code,
-               row_number() OVER (PARTITION BY sl.vec_id, sl.s
-                   ORDER BY round(list_distance(sl.sv, cb.cv), 6), cb.code)
-                   AS rn
-        FROM slices sl JOIN cb ON cb.s = sl.s
-    ) WHERE rn = 1
-),
-lut AS (
-    SELECT q.vec_id AS query_id, cb.s, cb.code,
-           round(list_distance(q.sv, cb.cv), 6) AS d
-    FROM slices q JOIN cb ON cb.s = q.s
-    WHERE q.vec_id < {_ADC_QUERIES}
-),
-adc AS (
-    SELECT l.query_id, a.vec_id AS neighbor_id,
-           round(CAST(sum(CAST(l.d AS DECIMAL(20,6))) AS DOUBLE), 6)
-               AS adc_dist
-    FROM assigned a
-    JOIN lut l ON l.s = a.s AND l.code = a.code
-    WHERE a.vec_id <> l.query_id
-    GROUP BY l.query_id, a.vec_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, adc_dist,
-           row_number() OVER (PARTITION BY query_id
-               ORDER BY adc_dist ASC, neighbor_id ASC) AS rank
-    FROM adc
-)
-SELECT query_id, neighbor_id, adc_dist, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {_ADC_K}
-ORDER BY query_id, rank
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -564,14 +378,12 @@ ORDER BY source
 # ---------------------------------------------------------------------------
 
 ROUND33_QUERIES = {
-    "sim_ann_pq_adc": sim_ann_pq_adc,
     "cur_temperature_sample": cur_temperature_sample,
     "text_bigram_logprob": text_bigram_logprob,
     "text_nb_langid_eval": text_nb_langid_eval,
 }
 
 ROUND33_ORACLES = {
-    "sim_ann_pq_adc": SIM_ANN_PQ_ADC_SQL,
     "cur_temperature_sample": CUR_TEMPERATURE_SAMPLE_SQL,
     "text_bigram_logprob": TEXT_BIGRAM_LOGPROB_SQL,
     "text_nb_langid_eval": TEXT_NB_LANGID_EVAL_SQL,

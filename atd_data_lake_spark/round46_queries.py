@@ -30,7 +30,8 @@ this DAG would shingle the corpus twice (decontam + dedup) — the
 redundant-scan class VERDICT r8 told this round to remove.
 
 The round's market-basket queries (``mb_sequential_rules``,
-``mb_affinity_npmi``) live in ``basket_queries``.
+``mb_affinity_npmi``) live in ``basket_queries`` and its brute-force
+MIPS (``sim_maxdot_topk``) in ``sim_queries``.
 """
 
 from __future__ import annotations
@@ -697,51 +698,6 @@ FROM terms
 
 
 # ---------------------------------------------------------------------------
-# sim_maxdot_topk — brute-force maximum-inner-product search
-# ---------------------------------------------------------------------------
-
-
-def sim_maxdot_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact MIPS top-10 for query vectors vec_id < 5
-    (operators/similarity.maxdot_topk) — the two-tower retrieval
-    contract beside ``sim_knn_bruteforce``'s cosine: magnitude counts."""
-    from atd_data_lake_spark.operators.similarity import maxdot_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = maxdot_topk(emb, queries, k=10, id_col="vec_id", vec_col="embedding")
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        "dot",
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-SIM_MAXDOT_SQL = """
-WITH q AS (
-    SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
-    FROM embeddings WHERE vec_id < 5
-),
-s AS (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           round(list_inner_product(q.qvec, CAST(e.embedding AS DOUBLE[])), 6)
-               AS dot
-    FROM q, embeddings e WHERE e.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, dot, rank
-FROM (
-    SELECT query_id, neighbor_id, dot,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY dot DESC, neighbor_id ASC) AS rank
-    FROM s
-) WHERE rank <= 10
-"""
-
-
-# ---------------------------------------------------------------------------
 # evt_funnel_conversion — ordered funnel completion per user
 # ---------------------------------------------------------------------------
 
@@ -1059,7 +1015,6 @@ ROUND46_QUERIES = {
     "dq_benford_digits": dq_benford_digits,
     "text_good_turing": text_good_turing,
     "text_js_divergence": text_js_divergence,
-    "sim_maxdot_topk": sim_maxdot_topk,
     "evt_funnel_conversion": evt_funnel_conversion,
     "evt_retention_cohorts": evt_retention_cohorts,
     "text_ttr_deciles": text_ttr_deciles,
@@ -1074,7 +1029,6 @@ def round46_oracles() -> dict[str, str]:
         "dq_benford_digits": DQ_BENFORD_SQL,
         "text_good_turing": TEXT_GOOD_TURING_SQL,
         "text_js_divergence": TEXT_JS_DIVERGENCE_SQL,
-        "sim_maxdot_topk": SIM_MAXDOT_SQL,
         "evt_funnel_conversion": EVT_FUNNEL_SQL,
         "evt_retention_cohorts": EVT_RETENTION_SQL,
         "text_ttr_deciles": TEXT_TTR_DECILES_SQL,

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from atd_data_lake_spark.io.reader import read_table_utc as _t
+from atd_data_lake_spark.sim_queries import VECTORS_CTE, assign_sql, load_centroids
 
 
 # ---------------------------------------------------------------------------
@@ -51,7 +52,7 @@ def emb_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The centroids here are the k lowest-vec_id embeddings — a
     deterministic stand-in for a fitted k-means model (the fit itself is
-    ``similarity._kmeans_centroids``, exercised by ``sim_ann_ivf``);
+    ``similarity._kmeans_centroids``, exercised by ``ivf_topk``);
     collecting them is model-loading, not a data collect.  Assignment is
     one zero-shuffle Arrow matmul pass (model in the task closure) —
     see operators/similarity.centroid_assign.
@@ -59,33 +60,14 @@ def emb_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from atd_data_lake_spark.operators.similarity import centroid_assign
 
     emb = _t(spark, sf_dir, "embeddings")
-    model_rows = (
-        emb.filter(F.col("vec_id") < _K_CENTROIDS)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    centroids = [(int(r[0]), list(r[1])) for r in model_rows]
+    centroids = load_centroids(emb, _K_CENTROIDS)
     return centroid_assign(emb, centroids, id_col="vec_id", vec_col="embedding")
 
 
 EMB_KMEANS_ASSIGN_SQL = f"""
-WITH c AS (
-    SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cvec
-    FROM embeddings WHERE vec_id < {_K_CENTROIDS}
-),
-scored AS (
-    SELECT e.vec_id, c.centroid_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cvec), 6)
-               AS cos_sim,
-           row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY round(list_cosine_similarity(
-                   CAST(e.embedding AS DOUBLE[]), c.cvec), 6) DESC,
-                   c.centroid_id
-           ) AS rn
-    FROM embeddings e CROSS JOIN c
-)
-SELECT vec_id, centroid_id, cos_sim FROM scored WHERE rn = 1
+WITH {VECTORS_CTE},
+{assign_sql(_K_CENTROIDS)}
+SELECT vec_id, centroid_id, cos_sim FROM assign
 """
 
 

@@ -30,7 +30,7 @@ CASES = [
     "evt_time_window_join",      # exploded bucket join
     "j_asof_nearest",            # struct-min_by tiebreaks
     "dedup_minhash_lsh",         # seeded signatures (rows-only query)
-    "sim_ann_lsh",               # seeded LSH (rows-only query)
+    "sim_ann_lsh",               # loaded-plane LSH bucket joins
     "agg_approx_sketches",       # HLL / quantile sketch merge determinism
     "geo_radius_join",           # grid-bucketed spatial join
     "cur_deterministic_shuffle",  # bucket-composed global rank

@@ -246,18 +246,6 @@ def test_ivf_upsert_cell_with_no_additions_survives(spark):
     assert out[0].n_added == 1
 
 
-def test_ivf_upsert_plan_shape(spark, sf_dir):
-    """Registry query plan: anti-join + two rollups + full join — the
-    assignment is exactly two Arrow map stages (standing + added;
-    centroid scoring is the documented pandas vector-math exception,
-    zero-shuffle either way)."""
-    from atd_data_lake_spark.plancheck import count_python_stages
-    from atd_data_lake_spark.round29_queries import sim_ivf_upsert
-
-    df = sim_ivf_upsert(spark, sf_dir)
-    assert count_python_stages(df) == 2
-
-
 # ---------------------------------------------------------------------------
 # Line-level dedup
 # ---------------------------------------------------------------------------

@@ -1,19 +1,16 @@
 """Round-33 targeted tests: PassJoin edit-distance join properties,
-ADC search sanity, temperature-sampling rate law, bigram LM and NB
-classifier invariants (the dedup_edit_distance tests live in
-test_dedup.py).  Oracle value-parity for the registered queries is
+temperature-sampling rate law, bigram LM and NB classifier invariants
+(the dedup_edit_distance tests live in test_dedup.py, the ADC search
+tests in test_sim.py).  Oracle value-parity for the registered queries is
 covered by the driver sweep / test_oracle_parity."""
 
 from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
-
 from atd_data_lake_spark.operators.fuzzy import passjoin_pairs
 from atd_data_lake_spark.round33_queries import (
     cur_temperature_sample,
-    sim_ann_pq_adc,
     text_bigram_logprob,
     text_nb_langid_eval,
 )
@@ -104,38 +101,6 @@ def test_passjoin_partition_invariance(spark):
         map(tuple, passjoin_pairs(df.repartition(13), "id", "s", 1).collect())
     )
     assert a == b and len(a) > 0
-
-
-# ---------------------------------------------------------------------------
-# ADC
-# ---------------------------------------------------------------------------
-
-
-def test_adc_ranked_and_deterministic(spark, sf_dir):
-    out = sim_ann_pq_adc(spark, sf_dir)
-    rows = out.collect()
-    per_q = {}
-    for r in rows:
-        per_q.setdefault(r["query_id"], []).append(r)
-    for q, rs in per_q.items():
-        rs = sorted(rs, key=lambda r: r["rank"])
-        assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
-        dists = [r["adc_dist"] for r in rs]
-        assert dists == sorted(dists)
-        assert all(r["neighbor_id"] != q for r in rs)
-    again = sorted(map(tuple, sim_ann_pq_adc(spark, sf_dir).collect()))
-    assert sorted(map(tuple, rows)) == again
-
-
-def test_adc_codebook_vectors_self_distance_zero(spark, sf_dir):
-    """A codebook vector IS one of the 16 model rows, so its own coded
-    reconstruction per subspace has distance 0 — its ADC distance as a
-    corpus member against ITSELF-as-query would be 0.  Verify via the
-    registered query: query 0 (vec_id 0 < 16 is a codebook row) must
-    rank some neighbor with adc_dist strictly > 0 and never negative."""
-    rows = sim_ann_pq_adc(spark, sf_dir).where(F.col("query_id") == 0).collect()
-    assert len(rows) > 0
-    assert all(r["adc_dist"] >= 0.0 for r in rows)
 
 
 # ---------------------------------------------------------------------------

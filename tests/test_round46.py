@@ -239,39 +239,6 @@ def test_text_js_divergence_bounds(spark, sf_dir):
     assert row["n_tokens_even"] > 0 and row["n_tokens_odd"] > 0
 
 
-def test_sim_maxdot_topk_agrees_with_numpy(spark, sf_dir):
-    """The distributed MIPS result must equal a local numpy
-    brute-force over the same vectors (rank, id, rounded dot)."""
-    import numpy as np
-
-    from atd_data_lake_spark.round46_queries import sim_maxdot_topk
-
-    rows = sim_maxdot_topk(spark, sf_dir).collect()
-    assert rows
-    emb = {
-        r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
-        for r in read_table(spark, sf_dir, "embeddings").collect()
-    }
-    for qid in {r["query_id"] for r in rows}:
-        got = [
-            (r["rank"], r["neighbor_id"], r["dot"])
-            for r in sorted(rows, key=lambda r: r["rank"])
-            if r["query_id"] == qid
-        ]
-        dots = sorted(
-            (
-                (-float(np.dot(emb[qid], v)), nid)
-                for nid, v in emb.items()
-                if nid != qid
-            ),
-        )[: len(got)]
-        want = [
-            (i + 1, nid, round(-d, 6)) for i, (d, nid) in enumerate(dots)
-        ]
-        assert [(g[0], g[1]) for g in got] == [(w[0], w[1]) for w in want]
-        assert all(abs(g[2] - w[2]) < 1e-5 for g, w in zip(got, want))
-
-
 def test_evt_funnel_conversion_monotone(spark, sf_dir):
     from atd_data_lake_spark.round46_queries import evt_funnel_conversion
 

@@ -494,42 +494,36 @@ def main() -> None:
 
     ops["passjoin_edit_dedup"] = passjoin_10x
 
-    def _registered_10x(qname, frame):
-        """Run the REGISTERED round-33 query over the replicated frame
-        (monkeypatch its _t, the tests/test_round36.py pattern) — the
-        smoke measures the exact shipped code path, so operator fixes
+    def _registered_10x(module, query, frame):
+        """Run a REGISTERED query over the replicated frame (monkeypatch
+        its module's _t, the tests/test_dedup.py pattern) — the smoke
+        measures the exact shipped code path, so operator fixes
         propagate to the benchmark automatically."""
-        import atd_data_lake_spark.round33_queries as r33
-
-        orig = r33._t
+        orig = module._t
         try:
-            r33._t = lambda s_, sf_, name_: frame
-            if qname == "pq_adc":
-                return r33.sim_ann_pq_adc(spark, "10x")
-            return r33.text_bigram_logprob(spark, "10x")
+            module._t = lambda s_, sf_, name_: frame
+            return query(spark, "10x")
         finally:
-            r33._t = orig
+            module._t = orig
 
-    ops["pq_adc_scan"] = lambda: _registered_10x("pq_adc", emb)
-    ops["bigram_lm"] = lambda: _registered_10x("bigram_lm", docs)
+    import atd_data_lake_spark.round33_queries as r33
+    import atd_data_lake_spark.sim_queries as sq
 
-    def bloom_decontam_10x():
-        """The shipped cur_bloom_decontam over the 10x corpus: the
-        benchmark side (doc_id % 20 == 0 AFTER replication ≈ 5% of
-        500k docs) stresses the bitmap build; the probe side is a
-        constant-size literal test per shingle — wall should track the
-        two corpus passes (build + probe), never the reference-set
-        size."""
-        import atd_data_lake_spark.round42_queries as r42
+    ops["pq_adc_scan"] = lambda: _registered_10x(sq, sq.sim_ann_pq_adc, emb)
+    ops["bigram_lm"] = lambda: _registered_10x(
+        r33, r33.text_bigram_logprob, docs
+    )
 
-        orig = r42._t
-        try:
-            r42._t = lambda s_, sf_, name_: docs
-            return r42.cur_bloom_decontam(spark, "10x")
-        finally:
-            r42._t = orig
+    # the shipped cur_bloom_decontam over the 10x corpus: the benchmark
+    # side (doc_id % 20 == 0 AFTER replication ≈ 5% of 500k docs)
+    # stresses the bitmap build; the probe side is a constant-size
+    # literal test per shingle — wall should track the two corpus
+    # passes (build + probe), never the reference-set size
+    import atd_data_lake_spark.round42_queries as r42
 
-    ops["bloom_decontam"] = bloom_decontam_10x
+    ops["bloom_decontam"] = lambda: _registered_10x(
+        r42, r42.cur_bloom_decontam, docs
+    )
 
     # round-9 additions: the fused Bloom decontam pass (bitmap = closure
     # constant; corpus crosses ONE Arrow stage emitting a row per doc) and
