@@ -75,6 +75,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from atd_data_lake_spark.dq_queries import leading_digits, leading_digits_sql
 from atd_data_lake_spark.functions.money import D2, dsum
 from atd_data_lake_spark.io import txlog
 from atd_data_lake_spark.io.reader import read_table_utc as _t
@@ -724,15 +725,8 @@ def evt_stream_benford_executed(
     the sink."""
     src = _events_stream(spark, sf_dir)
     its = F.to_utc_timestamp("ts", "UTC")
-    n100 = F.round(F.col("value") * 100).cast("long")
     digits = (
-        src.select(
-            its.alias("its"),
-            F.substring(n100.cast("string"), 1, 1).cast("int").alias(
-                "digit"
-            ),
-        )
-        .filter(F.col("digit") >= 1)
+        leading_digits(src, its.alias("its"))
         .withWatermark("its", _SBF_DELAY)
         .groupBy(F.window("its", _SBF_WINDOW).alias("w"), "digit")
         .agg(F.count("*").cast("long").alias("n_obs"))
@@ -755,19 +749,15 @@ def evt_stream_benford_executed(
     )
 
 
-EVT_STREAM_BENFORD_SQL = """
+EVT_STREAM_BENFORD_SQL = f"""
 WITH mx AS (SELECT max(ts) AS m FROM events),
-d AS (
-    SELECT make_timestamp(
-               CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 * 1000000)
-             AS window_start,
-           CAST(substr(CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR),
-                       1, 1) AS INT) AS digit
-    FROM events
-),
+d AS ({leading_digits_sql(
+    "make_timestamp(CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 * 1000000)"
+    " AS window_start"
+)}),
 counts AS (
     SELECT window_start, digit, count(*) AS n_obs
-    FROM d WHERE digit >= 1 GROUP BY 1, 2
+    FROM d GROUP BY 1, 2
 ),
 fin AS (
     SELECT c.* FROM counts c, mx

@@ -1530,13 +1530,13 @@ from atd_data_lake_spark.round6_queries import (  # noqa: E402
 QUERIES.update(ROUND6_QUERIES)
 ORACLES.update(ROUND6_ORACLES)
 
-from atd_data_lake_spark.round7_queries import (  # noqa: E402
-    ROUND7_ORACLES,
-    ROUND7_QUERIES,
+from atd_data_lake_spark.dq_queries import (  # noqa: E402
+    DQ_ORACLES,
+    DQ_QUERIES,
 )
 
-QUERIES.update(ROUND7_QUERIES)
-ORACLES.update(ROUND7_ORACLES)
+QUERIES.update(DQ_QUERIES)
+ORACLES.update(DQ_ORACLES)
 
 from atd_data_lake_spark.tpch_queries import (  # noqa: E402
     TPCH_ORACLES,
@@ -1599,14 +1599,6 @@ ORACLES.update(ROUND8_ORACLES)
 ORACLES["cur_leakage_safe_split"] = make_leakage_split_sql(
     jaccard_pairs_sql(0.5), _bucket_sql("group_key", "v1")
 )
-
-from atd_data_lake_spark.round9_queries import (  # noqa: E402
-    ROUND9_ORACLES,
-    ROUND9_QUERIES,
-)
-
-QUERIES.update(ROUND9_QUERIES)
-ORACLES.update(ROUND9_ORACLES)
 
 from atd_data_lake_spark.round10_queries import (  # noqa: E402
     ROUND10_ORACLES,
@@ -1821,14 +1813,6 @@ from atd_data_lake_spark.round43_queries import (  # noqa: E402
 
 QUERIES.update(ROUND43_QUERIES)
 ORACLES.update(ROUND43_ORACLES)
-
-from atd_data_lake_spark.round44_queries import (  # noqa: E402
-    ROUND44_ORACLES,
-    ROUND44_QUERIES,
-)
-
-QUERIES.update(ROUND44_QUERIES)
-ORACLES.update(ROUND44_ORACLES)
 
 from atd_data_lake_spark.round46_queries import (  # noqa: E402
     ROUND46_QUERIES,

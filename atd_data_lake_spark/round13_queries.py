@@ -1,7 +1,8 @@
-"""Round-13 query additions: time-series diagnostics, column-profiling,
-feature hashing, exact higher moments, and two rows-only scale ops
-(perceptual-hash media dedup, product quantization).  The round's graph
-topology queries live in ``graph_queries``.
+"""Round-13 query additions: time-series diagnostics, feature hashing,
+exact higher moments, and two rows-only scale ops (perceptual-hash
+media dedup, product quantization).  The round's graph topology queries
+live in ``graph_queries`` and its column-uniqueness profile
+(``dq_uniqueness``) in ``dq_queries``.
 
 Oracle-backed (DuckDB value-hash):
 
@@ -16,9 +17,6 @@ Oracle-backed (DuckDB value-hash):
   burstiness over fixed one-minute bins spanning the table's full time
   range (empty bins count): integer bin counts -> exact sums -> one
   final double expression.
-- ``dq_uniqueness`` — per-column profile of ``orders``: null count,
-  distinct count, candidate-key verdict.  The unpivot-of-aggregates
-  shape every schema-inference pass runs first.
 - ``text_hashing_tf`` — 256-bucket feature-hashing histogram over the
   corpus vocabulary (bucket = first 8 md5 hex digits mod 256): total
   term frequency, distinct tokens (collision load) per bucket.  The
@@ -274,94 +272,6 @@ SELECT event_type,
 FROM sums, span
 ORDER BY event_type
 """
-
-
-# ---------------------------------------------------------------------------
-# dq_uniqueness — per-column uniqueness / candidate-key profile
-# ---------------------------------------------------------------------------
-
-_UNIQ_COLS = (
-    "o_orderkey",
-    "o_custkey",
-    "o_orderstatus",
-    "o_totalprice",
-    "o_orderdate",
-    "o_orderpriority",
-)
-
-
-def dq_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-column profile of ``orders``: rows, nulls, exact distinct
-    count, candidate-key verdict (distinct == non-null == rows).
-
-    All columns profile in ONE aggregate (Catalyst expands the multiple
-    DISTINCTs into one multi-group pass — still a single scan), then the
-    1-row result unpivots driver-side via a literal stack: no second
-    shuffle, no per-column job.
-    """
-    o = _t(spark, sf_dir, "orders")
-    aggs = [F.count("*").alias("n_rows")]
-    for c in _UNIQ_COLS:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"nn_{c}"))
-        aggs.append(F.countDistinct(c).alias(f"nd_{c}"))
-    one = o.agg(*aggs)
-    stacked = one.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("column_name"),
-                        F.col("n_rows").alias("n_rows"),
-                        F.col(f"nn_{c}").alias("n_nulls"),
-                        F.col(f"nd_{c}").alias("n_distinct"),
-                    )
-                    for c in _UNIQ_COLS
-                ]
-            )
-        ).alias("p")
-    ).select("p.*")
-    return stacked.select(
-        "column_name",
-        "n_rows",
-        "n_nulls",
-        "n_distinct",
-        (
-            F.col("n_distinct") == F.col("n_rows") - F.col("n_nulls")
-        ).alias("all_unique"),
-        (
-            (F.col("n_nulls") == 0)
-            & (F.col("n_distinct") == F.col("n_rows"))
-        ).alias("is_candidate_key"),
-    ).orderBy("column_name")
-
-
-DQ_UNIQUENESS_SQL = """
-WITH one AS (
-    SELECT count(*) AS n_rows,
-{nulls},
-{dists}
-    FROM orders
-)
-{selects}
-ORDER BY column_name
-""".format(
-    nulls=",\n".join(
-        f"           sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS nn_{c}"
-        for c in _UNIQ_COLS
-    ),
-    dists=",\n".join(
-        f"           count(DISTINCT {c}) AS nd_{c}" for c in _UNIQ_COLS
-    ),
-    selects="\nUNION ALL\n".join(
-        f"SELECT '{c}' AS column_name, n_rows,"
-        f" CAST(nn_{c} AS BIGINT) AS n_nulls,"
-        f" CAST(nd_{c} AS BIGINT) AS n_distinct,"
-        f" nd_{c} = n_rows - nn_{c} AS all_unique,"
-        f" nn_{c} = 0 AND nd_{c} = n_rows AS is_candidate_key"
-        f" FROM one"
-        for c in _UNIQ_COLS
-    ),
-)
 
 
 # ---------------------------------------------------------------------------
@@ -854,7 +764,6 @@ ROUND13_QUERIES = {
     "ts_autocorr": ts_autocorr,
     "evt_hourly_seasonality": evt_hourly_seasonality,
     "evt_burstiness": evt_burstiness,
-    "dq_uniqueness": dq_uniqueness,
     "text_hashing_tf": text_hashing_tf,
     "stats_moments": stats_moments,
     "mm_image_phash": mm_image_phash,
@@ -865,7 +774,6 @@ ROUND13_ORACLES = {
     "ts_autocorr": TS_AUTOCORR_SQL,
     "evt_hourly_seasonality": EVT_HOURLY_SEASONALITY_SQL,
     "evt_burstiness": EVT_BURSTINESS_SQL,
-    "dq_uniqueness": DQ_UNIQUENESS_SQL,
     "text_hashing_tf": TEXT_HASHING_TF_SQL,
     "stats_moments": STATS_MOMENTS_SQL,
     # emb_pq_codes: UPGRADED r7 to a full oracle via the injected

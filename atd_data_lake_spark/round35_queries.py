@@ -1,6 +1,7 @@
-"""Round-35 query additions — BPE tokenizer train+apply, l-diversity.
-(The round's change-data-feed query, ``evt_txlog_cdf_executed``, lives
-in ``executed_queries.py``.)
+"""Round-35 query addition — BPE tokenizer train+apply.  (The round's
+change-data-feed query, ``evt_txlog_cdf_executed``, lives in
+``executed_queries.py`` and its l-diversity audit, ``dq_l_diversity``,
+in ``dq_queries``.)
 
 - ``text_bpe_apply`` — the tokenizer primitive: a LOADED 20-merge BPE
   model (trained at import by the canonical ``train_bpe_merges``
@@ -16,12 +17,8 @@ in ``executed_queries.py``.)
   documented deviation from tuple-walk application).  The trainer
   itself is pytest-gated on live data (determinism, compression
   monotonicity, canonical merge order).
-- ``dq_l_diversity`` — l-diversity per quasi-identifier class (the
-  companion of ``dq_k_anonymity``): a class is safe only if its
-  SENSITIVE attribute takes ≥ l distinct values, catching the
-  homogeneous classes k-anonymity certifies.
 
-Both carry full DuckDB oracles.
+It carries a full DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -172,75 +169,10 @@ ORDER BY lang
 TEXT_BPE_APPLY_SQL = _bpe_oracle_sql(_BPE_MODEL)
 
 
-# ---------------------------------------------------------------------------
-# dq_l_diversity
-# ---------------------------------------------------------------------------
-
-_L_DIVERSITY = 3
-
-
-def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l-diversity per quasi-identifier class (same QI grid as
-    ``dq_k_anonymity``): class size, the number of DISTINCT sensitive
-    values (o_custkey — the customer identity — as the sensitive attribute), a below-l flag, and the
-    dataset-wide diversity floor — catches the homogeneous classes a
-    pure size-based k-anonymity audit certifies as safe.
-
-    100 TB shape: one partial-agg'd groupBy to the class grid with an
-    exact distinct (two-phase), one broadcast floor join back.
-    """
-    o = _t(spark, sf_dir, "orders")
-    classes = o.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.col("o_orderstatus").alias("status"),
-        F.month("o_orderdate").alias("order_month"),
-    ).agg(
-        F.count("*").alias("class_size"),
-        F.countDistinct("o_custkey").alias("n_sensitive"),
-    )
-    floor = classes.agg(F.min("n_sensitive").alias("diversity_level"))
-    return (
-        classes.crossJoin(F.broadcast(floor))
-        .select(
-            "priority",
-            "status",
-            "order_month",
-            "class_size",
-            "n_sensitive",
-            (F.col("n_sensitive") < _L_DIVERSITY).alias("below_l"),
-            "diversity_level",
-        )
-        .orderBy("priority", "status", "order_month")
-    )
-
-
-DQ_L_DIVERSITY_SQL = f"""
-WITH classes AS (
-    SELECT o_orderpriority AS priority,
-           o_orderstatus AS status,
-           CAST(month(o_orderdate) AS INTEGER) AS order_month,
-           count(*) AS class_size,
-           count(DISTINCT o_custkey) AS n_sensitive
-    FROM orders
-    GROUP BY 1, 2, 3
-),
-floor_ AS (SELECT min(n_sensitive) AS diversity_level FROM classes)
-SELECT priority, status, order_month,
-       CAST(class_size AS BIGINT) AS class_size,
-       CAST(n_sensitive AS BIGINT) AS n_sensitive,
-       n_sensitive < {_L_DIVERSITY} AS below_l,
-       CAST(diversity_level AS BIGINT) AS diversity_level
-FROM classes, floor_
-ORDER BY priority, status, order_month
-"""
-
-
 ROUND35_QUERIES = {
     "text_bpe_apply": text_bpe_apply,
-    "dq_l_diversity": dq_l_diversity,
 }
 
 ROUND35_ORACLES = {
     "text_bpe_apply": TEXT_BPE_APPLY_SQL,
-    "dq_l_diversity": DQ_L_DIVERSITY_SQL,
 }

@@ -1,16 +1,8 @@
-"""Round-41 query additions — threshold-free classifier evaluation and
-mergeable quantile sketches.
+"""Round-41 query additions — mergeable quantile sketches and
+Kneser-Ney LM scoring.  The round's threshold-free classifier
+evaluation (``dq_classifier_auc``, ``dq_pr_curve``,
+``dq_calibration_bins``) lives in ``dq_queries``.
 
-- ``dq_classifier_auc`` — exact ROC-AUC (Mann-Whitney rank-sum with
-  average-rank tie handling) + exact average-precision (PR-AUC) for a
-  score/label column pair, the threshold-free numbers every
-  classifier-filtered corpus decision (CCNet/fastText-style quality
-  gating) actually turns on.  The classifier under test is the engine's
-  own stopword-ratio quality signal scored against the ``lang == 'en'``
-  ground truth.
-- ``dq_pr_curve`` — the full precision/recall operating curve, one row
-  per distinct score threshold (descending), cumulative TP/FP off a
-  single window pass.
 - ``ts_rolling_p95_sketch`` — trailing-7-day p50/p95/p99 of event value
   per type from MERGEABLE per-day quantile sketches (DDSketch-style
   log-γ buckets, Masson et al., VLDB'19).  Where ``ts_rolling_median``
@@ -24,15 +16,11 @@ mergeable quantile sketches.
   ``evt_stream_sketch_quantile_executed``, lives in
   ``executed_queries.py``; the bucket and quantile formulas both use
   are ``operators/sketches.sketch_bucket_col``/``sketch_quantile_cols``.
-
-- ``dq_calibration_bins`` — reliability diagram + expected calibration
-  error for the same score/label pair (does a 0.9 score MEAN 90%?),
-  one ≤10-group aggregate over the corpus.
 - ``text_kn_bigram_logprob`` — interpolated Kneser-Ney bigram LM
   scoring (the standard n-gram smoothing) trained in-plan by three
   map-side-combined aggregates over hashed buckets.
 
-All five carry full DuckDB oracles.  The sketch is oracle-able —
+Both carry full DuckDB oracles.  The sketch is oracle-able —
 unlike random-sampling KLL — precisely BECAUSE the bucket function
 ``ceil(ln(v)/ln γ)`` is deterministic: both engines compute identical
 bucket ids, so even the sketch CONTENTS are SQL-reproducible.
@@ -42,12 +30,6 @@ closer than 1e-5 to any boundary, and the multi-SF parity test pins it.)
 
 100 TB shapes:
 
-- AUC/PR never sort raw rows: the corpus collapses to one row per
-  DISTINCT score (map-side combined groupBy), and the rank/cumulative
-  windows run over that bounded threshold frame.  AUC over a trillion
-  scored docs costs one aggregate shuffle + a window over |thresholds|
-  rows.  The ROC numerator is pure BIGINT arithmetic (one final
-  divide), so the result is engine-exact, not float-sum-order-exact.
 - The sketch frame is |types|×|days|×|occupied buckets| rows; the
   trailing-window merge is a band join over THAT, never over events.
 """
@@ -66,293 +48,6 @@ from atd_data_lake_spark.operators.sketches import (
     sketch_bucket_col,
     sketch_quantile_cols,
 )
-
-
-# ---------------------------------------------------------------------------
-# dq_classifier_auc / dq_pr_curve
-# ---------------------------------------------------------------------------
-
-# the scored "classifier": English-stopword token ratio (a real quality
-# signal the curation gates use), evaluated against lang == 'en' truth
-_AUC_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "on", "for")
-
-
-def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(score, is_pos) per document — THE scored-classifier frame all
-    three evaluation queries (AUC, PR curve, calibration) share, so the
-    score definition lives in exactly one place.  The split() is
-    hoisted into one materialized array column (splicing it into each
-    select re-tokenizes per expression — the round-3 gotcha, fixed
-    here by the r8 review)."""
-    stop_arr = ", ".join(f"'{w}'" for w in _AUC_STOPWORDS)
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.filter(F.col("text").isNotNull())
-        .select("lang", F.expr("split(trim(text), '\\\\s+')").alias("tk"))
-        .filter(F.size("tk") >= 1)
-        .select(
-            F.round(
-                F.expr(
-                    f"size(filter(tk, t -> t IN ({stop_arr})))"
-                ).cast("double")
-                / F.size("tk").cast("double"),
-                6,
-            ).alias("score"),
-            F.when(F.col("lang") == "en", 1).otherwise(0).alias("is_pos"),
-        )
-    )
-
-
-def _scored_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row per DISTINCT classifier score: (score, p, n) positive /
-    negative label counts.  This is the only pass that touches the
-    corpus; everything downstream windows over |distinct scores| rows."""
-    return _scored(spark, sf_dir).groupBy("score").agg(
-        F.sum("is_pos").cast("long").alias("p"),
-        F.sum(1 - F.col("is_pos")).cast("long").alias("n"),
-    )
-
-
-def dq_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact ROC-AUC + average precision of the stopword-ratio scorer
-    vs the lang=='en' label, with average-rank tie handling.
-
-    ROC-AUC via the grouped Mann-Whitney identity: ascending by score,
-    AUC·2PN = Σ_g p_g·(2·cumN_below + n_g) — every term BIGINT, one
-    final divide, so both engines produce the identical double.  AP is
-    the standard threshold-sum Σ_g (p_g/P)·precision_at(≥score_g).
-    Degenerate classes (P = 0 or N = 0) yield NULL AUC rather than a
-    0/0 — pinned by a unit test.
-    """
-    g = _scored_thresholds(spark, sf_dir)
-    w_asc = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
-    w_desc = Window.orderBy(F.col("score").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    per = g.select(
-        "score",
-        "p",
-        "n",
-        F.coalesce(F.sum("n").over(w_asc), F.lit(0)).alias("cum_n_below"),
-        F.sum("p").over(w_desc).alias("cum_tp"),
-        F.sum(F.col("p") + F.col("n")).over(w_desc).alias("cum_pred"),
-    )
-    stats = per.agg(
-        F.sum("p").cast("long").alias("n_pos"),
-        F.sum("n").cast("long").alias("n_neg"),
-        F.count("*").cast("long").alias("n_thresholds"),
-        F.sum(F.col("p") * (2 * F.col("cum_n_below") + F.col("n")))
-        .cast("long")
-        .alias("rank_num"),
-        F.sum(F.col("p") * F.col("cum_tp") / F.col("cum_pred")).alias("ap_num"),
-    )
-    return stats.select(
-        "n_pos",
-        "n_neg",
-        "n_thresholds",
-        F.when(
-            (F.col("n_pos") > 0) & (F.col("n_neg") > 0),
-            F.round(
-                F.col("rank_num")
-                / (2.0 * F.col("n_pos") * F.col("n_neg")),
-                6,
-            ),
-        ).alias("roc_auc"),
-        F.when(
-            F.col("n_pos") > 0, F.round(F.col("ap_num") / F.col("n_pos"), 6)
-        ).alias("pr_auc"),
-    )
-
-
-def dq_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Precision/recall at every distinct score threshold (classify
-    positive when score ≥ threshold), descending — the operating curve
-    behind ``dq_classifier_auc``'s single AP number."""
-    g = _scored_thresholds(spark, sf_dir)
-    w_desc = Window.orderBy(F.col("score").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    per = g.select(
-        F.col("score").alias("threshold"),
-        F.sum("p").over(w_desc).alias("tp"),
-        F.sum("n").over(w_desc).alias("fp"),
-        F.sum("p").over(w_all).alias("total_p"),
-    )
-    return per.select(
-        "threshold",
-        F.col("tp").cast("long").alias("tp"),
-        F.col("fp").cast("long").alias("fp"),
-        F.round(F.col("tp") / (F.col("tp") + F.col("fp")), 6).alias(
-            "precision"
-        ),
-        F.round(F.col("tp") / F.col("total_p"), 6).alias("recall"),
-    ).orderBy(F.col("threshold").desc())
-
-
-def _auc_base_sql() -> str:
-    stop_arr = ", ".join(f"'{w}'" for w in _AUC_STOPWORDS)
-    return f"""
-t AS (
-    SELECT regexp_split_to_array(trim(text), '\\s+') AS toks, lang
-    FROM documents
-    WHERE text IS NOT NULL
-      AND len(regexp_split_to_array(trim(text), '\\s+')) >= 1
-),
-scored AS (
-    SELECT round(CAST(len(list_filter(toks, tk -> list_contains([{stop_arr}],
-               tk))) AS DOUBLE) / CAST(len(toks) AS DOUBLE), 6) AS score,
-           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_pos
-    FROM t
-),
-g AS (
-    SELECT score, CAST(sum(is_pos) AS BIGINT) AS p,
-           CAST(sum(1 - is_pos) AS BIGINT) AS n
-    FROM scored GROUP BY score
-)"""
-
-
-DQ_CLASSIFIER_AUC_SQL = f"""
-WITH {_auc_base_sql()},
-per AS (
-    SELECT score, p, n,
-           coalesce(sum(n) OVER (ORDER BY score ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS cum_n_below,
-           sum(p) OVER (ORDER BY score DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tp,
-           sum(p + n) OVER (ORDER BY score DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_pred
-    FROM g
-),
-stats AS (
-    SELECT CAST(sum(p) AS BIGINT) AS n_pos,
-           CAST(sum(n) AS BIGINT) AS n_neg,
-           CAST(count(*) AS BIGINT) AS n_thresholds,
-           CAST(sum(p * (2 * cum_n_below + n)) AS BIGINT) AS rank_num,
-           sum(p * cum_tp / (cum_pred * 1.0)) AS ap_num
-    FROM per
-)
-SELECT n_pos, n_neg, n_thresholds,
-       CASE WHEN n_pos > 0 AND n_neg > 0
-            THEN round(rank_num / (2.0 * n_pos * n_neg), 6) END AS roc_auc,
-       CASE WHEN n_pos > 0 THEN round(ap_num / n_pos, 6) END AS pr_auc
-FROM stats
-"""
-
-
-DQ_PR_CURVE_SQL = f"""
-WITH {_auc_base_sql()},
-per AS (
-    SELECT score AS threshold,
-           sum(p) OVER (ORDER BY score DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp,
-           sum(n) OVER (ORDER BY score DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fp,
-           sum(p) OVER () AS total_p
-    FROM g
-)
-SELECT threshold, CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-       round(tp / ((tp + fp) * 1.0), 6) AS precision,
-       round(tp / (total_p * 1.0), 6) AS recall
-FROM per
-ORDER BY threshold DESC
-"""
-
-
-# ---------------------------------------------------------------------------
-# dq_calibration_bins
-# ---------------------------------------------------------------------------
-
-_CAL_BINS = 10
-
-
-def dq_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability diagram + ECE for the stopword-ratio scorer vs the
-    lang=='en' label: scores bin into 10 equal-width buckets; each row
-    carries the bin's count, mean confidence, empirical accuracy, the
-    |acc − conf| gap, and the dataset-level expected calibration error
-    (Σ n_b/N·gap_b — constant across rows so the single number rides
-    along without a second query).  The decision AUC can't make —
-    whether a 0.9 score MEANS 90% — is exactly what thresholding a
-    classifier-filtered corpus on a score value assumes.
-
-    100 TB shape: the corpus collapses in ONE map-side-combined groupBy
-    on the bin id (≤ 10 groups); everything after is window math over
-    10 rows.
-    """
-    scored = _scored(spark, sf_dir)
-    bins = (
-        scored.select(
-            F.least(
-                F.floor(F.col("score") * _CAL_BINS), F.lit(_CAL_BINS - 1)
-            )
-            .cast("long")
-            .alias("bin"),
-            "score",
-            "is_pos",
-        )
-        .groupBy("bin")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("score").alias("score_sum"),
-            F.sum("is_pos").cast("long").alias("n_pos"),
-        )
-    )
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    per = bins.select(
-        "bin",
-        "n",
-        F.round(F.col("score_sum") / F.col("n"), 6).alias("mean_conf"),
-        F.round(F.col("n_pos") / F.col("n"), 6).alias("accuracy"),
-        (
-            F.col("n")
-            * F.abs(
-                F.col("score_sum") / F.col("n") - F.col("n_pos") / F.col("n")
-            )
-        ).alias("_w_gap"),
-        F.sum("n").over(w_all).alias("_total"),
-    )
-    return per.select(
-        "bin",
-        "n",
-        "mean_conf",
-        "accuracy",
-        F.round(F.abs(F.col("mean_conf") - F.col("accuracy")), 6).alias("gap"),
-        F.round(
-            F.sum("_w_gap").over(w_all) / F.col("_total"), 6
-        ).alias("ece"),
-    ).orderBy("bin")
-
-
-DQ_CALIBRATION_BINS_SQL = f"""
-WITH {_auc_base_sql()},
-b AS (
-    SELECT least(CAST(floor(score * {_CAL_BINS}) AS BIGINT),
-                 {_CAL_BINS - 1}) AS bin,
-           count(*) AS n,
-           sum(score) AS score_sum,
-           sum(is_pos) AS n_pos
-    FROM scored GROUP BY 1
-),
-per AS (
-    SELECT bin, CAST(n AS BIGINT) AS n,
-           round(score_sum / n, 6) AS mean_conf,
-           round(n_pos / (n * 1.0), 6) AS accuracy,
-           n * abs(score_sum / n - n_pos / (n * 1.0)) AS w_gap,
-           sum(n) OVER () AS total
-    FROM b
-)
-SELECT bin, n, mean_conf, accuracy,
-       round(abs(mean_conf - accuracy), 6) AS gap,
-       round(sum(w_gap) OVER () / total, 6) AS ece
-FROM per
-ORDER BY bin
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -613,16 +308,10 @@ ORDER BY bk.doc_id
 
 ROUND41_QUERIES = {
     "text_kn_bigram_logprob": text_kn_bigram_logprob,
-    "dq_classifier_auc": dq_classifier_auc,
-    "dq_pr_curve": dq_pr_curve,
-    "dq_calibration_bins": dq_calibration_bins,
     "ts_rolling_p95_sketch": ts_rolling_p95_sketch,
 }
 
 ROUND41_ORACLES = {
     "text_kn_bigram_logprob": TEXT_KN_BIGRAM_LOGPROB_SQL,
-    "dq_classifier_auc": DQ_CLASSIFIER_AUC_SQL,
-    "dq_pr_curve": DQ_PR_CURVE_SQL,
-    "dq_calibration_bins": DQ_CALIBRATION_BINS_SQL,
     "ts_rolling_p95_sketch": TS_ROLLING_P95_SKETCH_SQL,
 }

@@ -30,8 +30,10 @@ this DAG would shingle the corpus twice (decontam + dedup) — the
 redundant-scan class VERDICT r8 told this round to remove.
 
 The round's market-basket queries (``mb_sequential_rules``,
-``mb_affinity_npmi``) live in ``basket_queries`` and its brute-force
-MIPS (``sim_maxdot_topk``) in ``sim_queries``.
+``mb_affinity_npmi``) live in ``basket_queries``, its brute-force
+MIPS (``sim_maxdot_topk``) in ``sim_queries``, and its KS drift and
+Benford digit screens (``dq_ks_statistic``, ``dq_benford_digits``) in
+``dq_queries``.
 """
 
 from __future__ import annotations
@@ -366,159 +368,6 @@ SELECT doc_id,
             ELSE 'test' END AS split
 FROM labeled
 ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# dq_ks_statistic — two-sample Kolmogorov-Smirnov distance
-# ---------------------------------------------------------------------------
-
-
-def dq_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample KS distance between the value distributions of
-    'click' and 'error' events: D = max over observed points of
-    |ECDF_click(v) − ECDF_error(v)| — the standard drift test one rung
-    above ``dq_psi_drift``'s binned PSI (no binning policy, exact).
-
-    Engine-exactness: per grouped value the two cumulative counts are
-    exact BIGINTs; each |c1/n1 − c2/n2| is one fixed parenthesization
-    of bigint/bigint IEEE divisions, so both engines compute the
-    identical double and MAX picks the same one; rounded to 6 dp at
-    the very end.
-
-    100 TB shape: events collapse to one row per DISTINCT value (one
-    map-side-combined groupBy) before the cumulative window — the
-    ``dq_classifier_auc`` reduction argument: the global-order window
-    runs over the |distinct values| frame (17.8k rows at sf0.1), never
-    raw events.
-    """
-    ev = _t(spark, sf_dir, "events")
-    g = (
-        ev.filter(F.col("event_type").isin("click", "error"))
-        .groupBy("value")
-        .agg(
-            F.sum(
-                F.when(F.col("event_type") == "click", 1).otherwise(0)
-            ).alias("a"),
-            F.sum(
-                F.when(F.col("event_type") == "error", 1).otherwise(0)
-            ).alias("b"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-    cum = g.select(
-        F.sum("a").over(w).alias("ca"),
-        F.sum("b").over(w).alias("cb"),
-    )
-    return (
-        cum.crossJoin(
-            F.broadcast(
-                g.agg(
-                    F.sum("a").cast("long").alias("n1"),
-                    F.sum("b").cast("long").alias("n2"),
-                )
-            )
-        )
-        .agg(
-            F.max(F.col("n1")).cast("long").alias("n_click"),
-            F.max(F.col("n2")).cast("long").alias("n_error"),
-            F.round(
-                F.max(
-                    F.abs(
-                        F.col("ca") / F.col("n1") - F.col("cb") / F.col("n2")
-                    )
-                ),
-                6,
-            ).alias("ks_stat"),
-        )
-    )
-
-
-DQ_KS_STATISTIC_SQL = """
-WITH g AS (
-    SELECT value,
-           sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
-           sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS b
-    FROM events WHERE event_type IN ('click', 'error')
-    GROUP BY value
-),
-tot AS (SELECT sum(a) AS n1, sum(b) AS n2 FROM g),
-cum AS (
-    SELECT sum(a) OVER (ORDER BY value
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
-           sum(b) OVER (ORDER BY value
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb
-    FROM g
-)
-SELECT CAST(max(n1) AS BIGINT) AS n_click,
-       CAST(max(n2) AS BIGINT) AS n_error,
-       round(max(abs(ca / CAST(n1 AS DOUBLE) - cb / CAST(n2 AS DOUBLE))), 6)
-           AS ks_stat
-FROM cum, tot
-"""
-
-
-# ---------------------------------------------------------------------------
-# dq_benford_digits — leading-digit distribution vs Benford's law
-# ---------------------------------------------------------------------------
-
-
-def dq_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leading-significant-digit census of event values against
-    Benford's law — the classic fabricated-data screen.  The digit is
-    taken from the INTEGER round(value·100) rendered as a string (both
-    engines print integers identically), sidestepping cross-engine
-    log10/float-formatting divergence on the digit extraction itself;
-    expected probabilities are log(1+1/d)/log(10) with the division
-    spelled out (fixed parenthesization), rounded with the observed
-    frequency and the χ² contribution to 6 dp."""
-    ev = _t(spark, sf_dir, "events")
-    n100 = F.round(F.col("value") * 100).cast("long")
-    d = ev.select(
-        F.substring(n100.cast("string"), 1, 1).cast("int").alias("digit")
-    ).filter(F.col("digit") >= 1)
-    counts = d.groupBy("digit").agg(F.count("*").cast("long").alias("n_obs"))
-    total = counts.agg(F.sum("n_obs").cast("long").alias("n_total"))
-    p = F.log(F.lit(1.0) + F.lit(1.0) / F.col("digit")) / F.log(F.lit(10.0))
-    exp_n = F.col("n_total") * p
-    return (
-        counts.crossJoin(F.broadcast(total))
-        .select(
-            "digit",
-            "n_obs",
-            F.round(F.col("n_obs") / F.col("n_total"), 6).alias("obs_frac"),
-            F.round(p, 6).alias("benford_prob"),
-            F.round(
-                (F.col("n_obs") - exp_n) * (F.col("n_obs") - exp_n) / exp_n,
-                6,
-            ).alias("chi2_part"),
-        )
-        .orderBy("digit")
-    )
-
-
-DQ_BENFORD_SQL = """
-WITH d AS (
-    SELECT CAST(substr(CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR),
-                       1, 1) AS INT) AS digit
-    FROM events
-),
-counts AS (
-    SELECT digit, count(*) AS n_obs FROM d WHERE digit >= 1 GROUP BY digit
-),
-tot AS (SELECT sum(n_obs) AS n_total FROM counts)
-SELECT digit,
-       CAST(n_obs AS BIGINT) AS n_obs,
-       round(n_obs / CAST(n_total AS DOUBLE), 6) AS obs_frac,
-       round(ln(1.0 + 1.0 / digit) / ln(10.0), 6) AS benford_prob,
-       round((n_obs - n_total * (ln(1.0 + 1.0 / digit) / ln(10.0)))
-             * (n_obs - n_total * (ln(1.0 + 1.0 / digit) / ln(10.0)))
-             / (n_total * (ln(1.0 + 1.0 / digit) / ln(10.0))), 6)
-           AS chi2_part
-FROM counts, tot
-ORDER BY digit
 """
 
 
@@ -1011,8 +860,6 @@ ORDER BY month
 
 ROUND46_QUERIES = {
     "cur_full_pipeline": cur_full_pipeline,
-    "dq_ks_statistic": dq_ks_statistic,
-    "dq_benford_digits": dq_benford_digits,
     "text_good_turing": text_good_turing,
     "text_js_divergence": text_js_divergence,
     "evt_funnel_conversion": evt_funnel_conversion,
@@ -1025,8 +872,6 @@ ROUND46_QUERIES = {
 def round46_oracles() -> dict[str, str]:
     return {
         "cur_full_pipeline": _cur_full_pipeline_sql(),
-        "dq_ks_statistic": DQ_KS_STATISTIC_SQL,
-        "dq_benford_digits": DQ_BENFORD_SQL,
         "text_good_turing": TEXT_GOOD_TURING_SQL,
         "text_js_divergence": TEXT_JS_DIVERGENCE_SQL,
         "evt_funnel_conversion": EVT_FUNNEL_SQL,

@@ -1,10 +1,6 @@
 """Round-4 query additions: data-engineering ops a 100 TB lake needs
 daily, each a distinct PLAN SHAPE the engine must get right at scale.
 
-- ``dq_profile`` — one-pass multi-column profile (nulls, exact
-  distincts, min/max) unpivoted to (column, metric) rows;
-- ``dq_referential_orphans`` — FK integrity sweep via broadcast
-  anti-joins, one scan per fact table;
 - ``w3_percent_rank_cume`` — the remaining rank-family window
   functions (percent_rank / cume_dist / ntile);
 - ``evt_gap_stats`` — inter-event gap distribution per user (lag +
@@ -14,7 +10,8 @@ daily, each a distinct PLAN SHAPE the engine must get right at scale.
 
 The round's TPC-H shapes (q2/q4/q7/q8/q9/q11/q12/q16/q17/q20/q21/q22)
 live in ``tpch_queries`` and its ``mb_copurchase_lift`` (with the shared
-basket counting source) in ``basket_queries``.  Time goes through integer epoch
+basket counting source) in ``basket_queries``; its ``dq_profile`` and
+``dq_referential_orphans`` live in ``dq_queries``.  Time goes through integer epoch
 microseconds, and a ratio that is inherently fractional is a single
 floating division (not a float SUM) — both engines compute the same
 IEEE double from the same exact integers.
@@ -26,148 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from atd_data_lake_spark.io.reader import read_table_utc as _t
-
-
-# ---------------------------------------------------------------------------
-# dq_profile — one-pass multi-column data profile
-# ---------------------------------------------------------------------------
-
-_PROFILE_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_returnflag", "l_shipdate"]
-
-
-def dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-profile sweep over lineitem: null count, EXACT distinct
-    count, min and max (stringified) for each audited column — the
-    daily data-quality report a lake runs per table.
-
-    Plan: one 1-COLUMN aggregate per audited column, unioned.  The
-    tempting alternative — a single agg with N countDistinct calls —
-    makes Catalyst Expand every row N+1 times (one replica per
-    distinct-aggregate grouping), which measured 8× SLOWER at sf0.1
-    (19.3 s vs 2.5 s).  Per-column branches each scan ONLY their column
-    (parquet is columnar: total I/O equals one full-width scan), each
-    runs an independent 2-phase agg, and they execute concurrently —
-    this is the shape that survives a 100 TB table."""
-    li = _t(spark, sf_dir, "lineitem")
-    parts = []
-    for c in _PROFILE_COLS:
-        parts.append(
-            li.select(c).agg(
-                F.lit(c).alias("column_name"),
-                F.count("*").cast("long").alias("n_rows"),
-                F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
-                .cast("long")
-                .alias("n_nulls"),
-                F.countDistinct(c).alias("n_distinct"),
-                F.min(F.col(c).cast("string")).alias("min_value"),
-                F.max(F.col(c).cast("string")).alias("max_value"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("column_name")
-
-
-DQ_PROFILE_SQL = """
-WITH n AS (SELECT count(*) AS n_rows FROM lineitem)
-SELECT column_name, n.n_rows AS n_rows, m.n_nulls, m.n_distinct,
-       m.min_value, m.max_value
-FROM (
-  SELECT 'l_quantity' AS column_name,
-         CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-         CAST(count(DISTINCT l_quantity) AS BIGINT) AS n_distinct,
-         min(CAST(l_quantity AS VARCHAR)) AS min_value,
-         max(CAST(l_quantity AS VARCHAR)) AS max_value
-  FROM lineitem
-  UNION ALL
-  SELECT 'l_extendedprice',
-         CAST(sum(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(count(DISTINCT l_extendedprice) AS BIGINT),
-         min(CAST(l_extendedprice AS VARCHAR)), max(CAST(l_extendedprice AS VARCHAR))
-  FROM lineitem
-  UNION ALL
-  SELECT 'l_discount',
-         CAST(sum(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(count(DISTINCT l_discount) AS BIGINT),
-         min(CAST(l_discount AS VARCHAR)), max(CAST(l_discount AS VARCHAR))
-  FROM lineitem
-  UNION ALL
-  SELECT 'l_returnflag',
-         CAST(sum(CASE WHEN l_returnflag IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(count(DISTINCT l_returnflag) AS BIGINT),
-         min(l_returnflag), max(l_returnflag)
-  FROM lineitem
-  UNION ALL
-  SELECT 'l_shipdate',
-         CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(count(DISTINCT l_shipdate) AS BIGINT),
-         min(CAST(l_shipdate AS VARCHAR)), max(CAST(l_shipdate AS VARCHAR))
-  FROM lineitem
-) m, n
-ORDER BY column_name
-"""
-
-
-# ---------------------------------------------------------------------------
-# dq_referential_orphans — FK integrity sweep
-# ---------------------------------------------------------------------------
-
-
-def dq_referential_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential-integrity audit: orphaned-FK row counts for every
-    fact→dimension edge in the schema, one row per relation.
-
-    Plan: each check is a LEFT ANTI join; dimension key sets broadcast
-    (they are the small side by construction), so each fact table is
-    scanned once with only its FK column read."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    checks = [
-        ("lineitem.l_orderkey -> orders", li.select(F.col("l_orderkey").alias("fk")),
-         o.select(F.col("o_orderkey").alias("pk"))),
-        ("lineitem.l_partkey -> part", li.select(F.col("l_partkey").alias("fk")),
-         _t(spark, sf_dir, "part").select(F.col("p_partkey").alias("pk"))),
-        ("lineitem.l_suppkey -> supplier", li.select(F.col("l_suppkey").alias("fk")),
-         _t(spark, sf_dir, "supplier").select(F.col("s_suppkey").alias("pk"))),
-        ("orders.o_custkey -> customer", o.select(F.col("o_custkey").alias("fk")),
-         _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("pk"))),
-    ]
-    spark_parts = []
-    for name, fact, dim in checks:
-        orphans = fact.join(F.broadcast(dim), F.col("fk") == F.col("pk"), "left_anti")
-        spark_parts.append(
-            orphans.agg(
-                F.lit(name).alias("relation"),
-                F.count("*").cast("long").alias("n_orphans"),
-            )
-        )
-    out = spark_parts[0]
-    for part_df in spark_parts[1:]:
-        out = out.unionByName(part_df)
-    return out.orderBy("relation")
-
-
-DQ_ORPHANS_SQL = """
-SELECT relation, n_orphans FROM (
-  SELECT 'lineitem.l_orderkey -> orders' AS relation,
-         CAST(count(*) AS BIGINT) AS n_orphans
-  FROM lineitem WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)
-  UNION ALL
-  SELECT 'lineitem.l_partkey -> part',
-         CAST(count(*) AS BIGINT)
-  FROM lineitem WHERE l_partkey NOT IN (SELECT p_partkey FROM part)
-  UNION ALL
-  SELECT 'lineitem.l_suppkey -> supplier',
-         CAST(count(*) AS BIGINT)
-  FROM lineitem WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier)
-  UNION ALL
-  SELECT 'orders.o_custkey -> customer',
-         CAST(count(*) AS BIGINT)
-  FROM orders WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)
-)
-ORDER BY relation
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -347,8 +202,6 @@ FROM documents
 
 
 ROUND4_QUERIES = {
-    "dq_profile": dq_profile,
-    "dq_referential_orphans": dq_referential_orphans,
     "w3_percent_rank_cume": w3_percent_rank_cume,
     "evt_gap_stats": evt_gap_stats,
     "text_top_bigrams": text_top_bigrams,
@@ -356,8 +209,6 @@ ROUND4_QUERIES = {
 }
 
 ROUND4_ORACLES = {
-    "dq_profile": DQ_PROFILE_SQL,
-    "dq_referential_orphans": DQ_ORPHANS_SQL,
     "w3_percent_rank_cume": W3_SQL,
     "evt_gap_stats": EVT_GAP_STATS_SQL,
     "text_top_bigrams": TEXT_TOP_BIGRAMS_SQL,

@@ -259,109 +259,6 @@ ROUND5_QUERIES["cur_mixture_resample"] = cur_mixture_resample
 
 
 # ---------------------------------------------------------------------------
-# dq_schema_drift — snapshot-over-snapshot column drift report
-# ---------------------------------------------------------------------------
-
-_DRIFT_COLS = ["event_type", "user_id", "value"]
-
-
-def dq_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-drift report between two snapshots of the events stream
-    (first half of the month vs second half): per column, row counts,
-    null rates, exact distinct counts, and stringified min/max for both
-    snapshots plus the deltas — the check that catches a silently
-    changed upstream (new enum value, shifted value range, nulls
-    appearing) before it poisons downstream consumers.
-
-    Plan shape follows ``dq_profile``'s measured lesson: one 1-column
-    aggregate per audited column (each scans only its column; no Expand
-    blowup), here grouped by the snapshot label so BOTH snapshots
-    profile in the same two-phase agg — then the two rows collapse to
-    one wide drift row via conditional aggregation.  2 exchanges per
-    column, each carrying ≤ 2 rows after partial agg.
-    """
-    e = _t(spark, sf_dir, "events")
-    snap = F.when(F.dayofmonth("ts") <= 15, F.lit("before")).otherwise(
-        F.lit("after")
-    )
-    parts = []
-    for c in _DRIFT_COLS:
-        g = (
-            e.select(F.col(c), snap.alias("_snap"))
-            .groupBy("_snap")
-            .agg(
-                F.count("*").cast("long").alias("_n"),
-                F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
-                .cast("long")
-                .alias("_nulls"),
-                F.countDistinct(c).alias("_dist"),
-                F.min(F.col(c).cast("string")).alias("_min"),
-                F.max(F.col(c).cast("string")).alias("_max"),
-            )
-        )
-
-        def pick(field: str, which: str):
-            return F.max(F.when(F.col("_snap") == which, F.col(field)))
-
-        parts.append(
-            g.agg(
-                F.lit(c).alias("column_name"),
-                pick("_n", "before").alias("n_before"),
-                pick("_n", "after").alias("n_after"),
-                F.round(pick("_nulls", "before") / pick("_n", "before"), 6).alias(
-                    "null_rate_before"
-                ),
-                F.round(pick("_nulls", "after") / pick("_n", "after"), 6).alias(
-                    "null_rate_after"
-                ),
-                pick("_dist", "before").alias("distinct_before"),
-                pick("_dist", "after").alias("distinct_after"),
-                (pick("_dist", "after") - pick("_dist", "before"))
-                .cast("long")
-                .alias("distinct_delta"),
-                pick("_min", "before").alias("min_before"),
-                pick("_min", "after").alias("min_after"),
-                pick("_max", "before").alias("max_before"),
-                pick("_max", "after").alias("max_after"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("column_name")
-
-
-def _drift_branch_sql(c: str) -> str:
-    return f"""
-  SELECT '{c}' AS column_name,
-         CAST(count(*) FILTER (WHERE dayofmonth(ts) <= 15) AS BIGINT) AS n_before,
-         CAST(count(*) FILTER (WHERE dayofmonth(ts) > 15) AS BIGINT) AS n_after,
-         round(CAST(sum(CASE WHEN {c} IS NULL AND dayofmonth(ts) <= 15 THEN 1 ELSE 0 END) AS BIGINT)
-               / CAST(count(*) FILTER (WHERE dayofmonth(ts) <= 15) AS BIGINT), 6) AS null_rate_before,
-         round(CAST(sum(CASE WHEN {c} IS NULL AND dayofmonth(ts) > 15 THEN 1 ELSE 0 END) AS BIGINT)
-               / CAST(count(*) FILTER (WHERE dayofmonth(ts) > 15) AS BIGINT), 6) AS null_rate_after,
-         CAST(count(DISTINCT {c}) FILTER (WHERE dayofmonth(ts) <= 15) AS BIGINT) AS distinct_before,
-         CAST(count(DISTINCT {c}) FILTER (WHERE dayofmonth(ts) > 15) AS BIGINT) AS distinct_after,
-         CAST(count(DISTINCT {c}) FILTER (WHERE dayofmonth(ts) > 15) AS BIGINT)
-           - CAST(count(DISTINCT {c}) FILTER (WHERE dayofmonth(ts) <= 15) AS BIGINT) AS distinct_delta,
-         min(CAST({c} AS VARCHAR)) FILTER (WHERE dayofmonth(ts) <= 15) AS min_before,
-         min(CAST({c} AS VARCHAR)) FILTER (WHERE dayofmonth(ts) > 15) AS min_after,
-         max(CAST({c} AS VARCHAR)) FILTER (WHERE dayofmonth(ts) <= 15) AS max_before,
-         max(CAST({c} AS VARCHAR)) FILTER (WHERE dayofmonth(ts) > 15) AS max_after
-  FROM events"""
-
-
-DQ_SCHEMA_DRIFT_SQL = (
-    "SELECT * FROM (\n"
-    + "\n  UNION ALL\n".join(_drift_branch_sql(c) for c in _DRIFT_COLS)
-    + "\n) ORDER BY column_name"
-)
-
-ROUND5_QUERIES["dq_schema_drift"] = dq_schema_drift
-ROUND5_ORACLES["dq_schema_drift"] = DQ_SCHEMA_DRIFT_SQL
-
-
-# ---------------------------------------------------------------------------
 # cur_winsorize — per-source outlier clipping at exact percentiles
 # ---------------------------------------------------------------------------
 

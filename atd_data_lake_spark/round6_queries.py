@@ -1,7 +1,8 @@
 """Round-6 query additions: time-series regularization + sequence mining
-+ data-quality freshness + robust outlier detection.
++ robust outlier detection (the round's ``dq_freshness`` lives in
+``dq_queries``).
 
-Four families, each a capability a 100 TB training-data / telemetry lake
+Three families, each a capability a 100 TB training-data / telemetry lake
 needs that the registry didn't yet cover:
 
 - ``evt_resample_ffill`` — gap-fill resampling onto a regular daily grid
@@ -17,11 +18,6 @@ needs that the registry didn't yet cover:
   sequences (the n-gram/path-mining primitive behind funnel discovery
   and next-event models).  One window sort on user_id (the sequence
   key), then a map-side-combined count — the event stream shuffles once.
-- ``dq_freshness`` — per-stream staleness report: last-seen timestamp
-  and lag-behind-global-high-water-mark per event_type.  The ops check
-  every ingest pipeline needs (reference analog: the catalog's
-  latest-date probe, catalog.py ``latest``); one tiny agg, output =
-  one row per stream.
 - ``evt_anomaly_mad`` — robust per-entity outlier counts via median /
   MAD (median absolute deviation), the heavy-tail-safe twin of
   ``evt_anomaly_zscore``: one pass for per-user exact medians, one for
@@ -184,50 +180,6 @@ LIMIT {_TOP_PATHS_K}
 
 
 # ---------------------------------------------------------------------------
-# dq_freshness — per-stream staleness vs the global high-water mark
-# ---------------------------------------------------------------------------
-
-
-def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-seen timestamp and staleness (hours behind the freshest
-    stream) per event_type — the ingest-monitoring probe.
-
-    One map-side-combined agg (output = one row per stream); the global
-    high-water mark is a window max over that tiny aggregate, not a
-    second scan.
-    """
-    from atd_data_lake_spark.functions.datetime_fns import as_instant
-
-    ev = _t(spark, sf_dir, "events").select("event_type", "ts")
-    per = ev.groupBy("event_type").agg(
-        F.max("ts").alias("last_seen"), F.count("*").alias("n_events")
-    )
-    # µs-exact staleness without casting TIMESTAMP_NTZ to double (Spark 4
-    # forbids that cast; as_instant relabels NTZ → instant first)
-    us = F.unix_micros(as_instant(per, "last_seen"))
-    hwm_us = F.max(us).over(Window.partitionBy())
-    return per.select(
-        "event_type",
-        "last_seen",
-        "n_events",
-        F.round((hwm_us - us) / 3600000000.0, 6).alias("hours_stale"),
-    ).orderBy("event_type")
-
-
-DQ_FRESHNESS_SQL = """
-WITH per AS (
-    SELECT event_type, max(ts) AS last_seen, count(*) AS n_events
-    FROM events GROUP BY 1
-)
-SELECT event_type, last_seen, n_events,
-       round(date_diff('microsecond', last_seen, max(last_seen) OVER ())
-             / 3600000000.0, 6) AS hours_stale
-FROM per
-ORDER BY event_type
-"""
-
-
-# ---------------------------------------------------------------------------
 # evt_anomaly_mad — robust outlier counts via median / MAD
 # ---------------------------------------------------------------------------
 
@@ -299,13 +251,11 @@ ORDER BY e.user_id
 ROUND6_QUERIES = {
     "evt_resample_ffill": evt_resample_ffill,
     "evt_top_paths": evt_top_paths,
-    "dq_freshness": dq_freshness,
     "evt_anomaly_mad": evt_anomaly_mad,
 }
 
 ROUND6_ORACLES = {
     "evt_resample_ffill": EVT_RESAMPLE_FFILL_SQL,
     "evt_top_paths": EVT_TOP_PATHS_SQL,
-    "dq_freshness": DQ_FRESHNESS_SQL,
     "evt_anomaly_mad": EVT_ANOMALY_MAD_SQL,
 }

@@ -1,7 +1,7 @@
-"""Round-35 targeted tests: txlog change-data-feed semantics, the BPE
-trainer (the live-data path the injected model ships from), and
-l-diversity invariants.  Oracle value parity for the three registered
-queries is covered by the driver sweep."""
+"""Round-35 targeted tests: txlog change-data-feed semantics and the BPE
+trainer (the live-data path the injected model ships from).  The
+l-diversity invariants live in test_dq.py; oracle value parity for the
+registered queries is covered by tools/full_sweep.py."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from atd_data_lake_spark.io import txlog
 from atd_data_lake_spark.round35_queries import (
     _bpe_apply_expr,
-    dq_l_diversity,
     train_bpe_merges,
 )
 
@@ -156,21 +155,6 @@ def test_bpe_apply_expr_matches_python_replace():
         s = s.replace(f" {a} {b} ", f" {a}{b} ")
     assert s.strip().split(" ") == ["x", "abc"]
     assert "replace(replace(" in expr
-
-
-# ---------------------------------------------------------------------------
-# l-diversity
-# ---------------------------------------------------------------------------
-
-
-def test_l_diversity_floor_and_flags(spark, sf_dir):
-    rows = dq_l_diversity(spark, sf_dir).collect()
-    assert len(rows) > 0
-    floor = min(r["n_sensitive"] for r in rows)
-    for r in rows:
-        assert r["diversity_level"] == floor
-        assert r["below_l"] == (r["n_sensitive"] < 3)
-        assert r["n_sensitive"] <= r["class_size"]
 
 
 # ---------------------------------------------------------------------------

@@ -165,53 +165,6 @@ def test_bloom_fused_probe_matches_unfused(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_dq_ks_statistic_bounds_and_self_zero(spark, sf_dir):
-    """KS distance is in [0,1]; the distance of a distribution against
-    itself is exactly 0 (computed by aliasing one type as both sides)."""
-    from atd_data_lake_spark.round46_queries import dq_ks_statistic
-
-    row = dq_ks_statistic(spark, sf_dir).collect()[0]
-    assert 0.0 <= row["ks_stat"] <= 1.0
-    assert row["n_click"] > 0 and row["n_error"] > 0
-
-    # self-distance: same grouped frame on both sides → D = 0
-    from pyspark.sql import Window, functions as F
-    from atd_data_lake_spark.io.reader import read_table
-
-    ev = read_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "click"
-    )
-    g = ev.groupBy("value").agg(F.count("*").alias("a"))
-    w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-    cum = g.select(F.sum("a").over(w).alias("ca"))
-    tot = g.agg(F.sum("a").alias("n"))
-    d = (
-        cum.crossJoin(F.broadcast(tot))
-        .agg(F.max(F.abs(F.col("ca") / F.col("n") - F.col("ca") / F.col("n"))))
-        .collect()[0][0]
-    )
-    assert d == 0.0
-
-
-def test_dq_benford_digits_shape(spark, sf_dir):
-    from atd_data_lake_spark.round46_queries import dq_benford_digits
-
-    rows = dq_benford_digits(spark, sf_dir).collect()
-    assert 1 <= len(rows) <= 9
-    assert [r["digit"] for r in rows] == sorted(r["digit"] for r in rows)
-    # Benford probabilities sum to 1 over digits 1..9
-    import math
-
-    assert all(
-        abs(r["benford_prob"] - math.log10(1 + 1 / r["digit"])) < 1e-5
-        for r in rows
-    )
-    assert all(r["chi2_part"] >= 0.0 for r in rows)
-    # observed fractions over the EMITTED digits sum to ≤ 1 (= 1 when
-    # all nine digits occur)
-    assert sum(r["obs_frac"] for r in rows) <= 1.0 + 1e-6
-
-
 def test_text_good_turing_identity(spark, sf_dir):
     """r*·n_r must equal (r+1)·n_{r+1} (to rounding) wherever the next
     frequency class exists — the defining Good-Turing identity."""

@@ -1,5 +1,5 @@
 """Property tests for the round-6 queries: gap-fill resample semantics,
-trigram count conservation, freshness invariants, and MAD outlier math
+trigram count conservation, and MAD outlier math
 cross-checked against numpy.  (Oracle parity lives in
 test_oracle_parity.py; these pin the SEMANTICS with independent math.)
 """
@@ -78,22 +78,6 @@ def test_top_paths_count_conservation(spark, sf_dir):
     top = out.iloc[0]
     assert counts.loc[(top.step1, top.step2, top.step3)] == top.n_paths
     assert counts.max() == top.n_paths
-
-
-def test_dq_freshness_invariants(spark, sf_dir):
-    from atd_data_lake_spark.round6_queries import dq_freshness
-
-    out = dq_freshness(spark, sf_dir).toPandas()
-    ev = _events_pdf(spark, sf_dir)
-    assert len(out) == ev["event_type"].nunique()
-    assert int(out["n_events"].sum()) == len(ev)
-    # exactly the freshest stream(s) sit at zero staleness; others positive
-    assert (out["hours_stale"] >= 0).all()
-    assert (out["hours_stale"] == 0).sum() >= 1
-    hwm = ev["ts"].max()
-    for r in out.itertuples():
-        expected = round((hwm - r.last_seen).total_seconds() / 3600.0, 6)
-        assert abs(r.hours_stale - expected) < 1e-9
 
 
 def test_anomaly_mad_matches_numpy(spark, sf_dir):
